@@ -43,64 +43,35 @@ object Bench {
     // warm up JVM/codegen/parquet-footer paths so the first timed query
     // doesn't absorb one-time session costs
     SparkEntry.entry(spark).count()
-    // ...and pre-warm the trained artifacts (IVF centroids, PCA model, PQ
-    // codebook+codes): in a fresh JVM the FIRST consumer of each otherwise
-    // pays its one-time training in-query (the r7 driver bench recorded
-    // 9.3 s for corpus_semantic_sample vs 1.7 s standalone — all quantizer
+    // ...and pre-warm the shared derived artifacts: in a fresh JVM the
+    // FIRST consumer of each otherwise pays its one-time derivation
+    // in-query (the r7 driver bench recorded 9.3 s for
+    // corpus_semantic_sample vs 1.7 s standalone — all quantizer
     // training). Production trains offline; gates should measure operators.
-    try graft.operators.Similarity.warmArtifacts(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] artifact warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // the oracle-twin graph is the twin bucket's shared derivation
-    // (knn_graph_oracle + embed_clusters_oracle); same artifact treatment
-    try graft.operators.OracleVariants.warmTwinGraph(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] twin-graph warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // the graph family shares one persisted edge artifact; warm it so the
-    // first graph gate measures its analytic, not the one-time collapse
-    try graft.operators.GraphOps.warmTradeGraph(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] graph warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // co-activity component labels: same class (one derivation + CC
-    // fixpoint per corpus, read by graph_components)
-    try graft.operators.GraphOps.warmCoActivityLabels(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] cc warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // the dedup-cluster labels are the same artifact class (one dedup
-    // pass per corpus, read by dedup_clusters / corpus_split_safe)
-    try graft.operators.Dedup.warmClusterLabels(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] dedup warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // exact-truth recall baselines (uncapped containment, n-gram Jaccard
-    // pairs, exact fuzzy-decon): the recall gates audit against these —
-    // they must not re-pay the exact pass per gate run
-    try graft.operators.Dedup.warmTruths(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] truth warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // the BPE merge table is a trained artifact of the same class (16
-    // driver-coordinated rounds, cached per corpus fingerprint) — warm it
-    // so corpus_bpe_merges/apply measure the operator, not the training
-    try graft.operators.Bpe.learnedMerges(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] bpe warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // ft_historical drives through the persisted-registry path; pay the
-    // one-time save+load here, not in the gate timing
-    try graft.operators.FeatureOps.demoRegistryReloaded(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] registry warm-up failed: ${e.getMessage.take(200)}")
-    }
-    // registry_history drives three versions through save/load; pay the
-    // one-time persistence here so the gate measures the diff pipeline
-    try graft.operators.FeatureOps.demoHistoryReloaded(spark, sfDir) catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] registry-history warm-up failed: ${e.getMessage.take(200)}")
+    val warmUps: Seq[(String, () => Any)] = Seq(
+      // IVF centroids, PCA model, PQ codebook+codes
+      "artifact" -> (() => graft.operators.Similarity.warmArtifacts(spark, sfDir)),
+      // the oracle-twin graph (knn_graph_oracle + embed_clusters_oracle)
+      "twin-graph" -> (() => graft.operators.OracleVariants.warmTwinGraph(spark, sfDir)),
+      // the graph family's one persisted edge artifact
+      "graph" -> (() => graft.operators.GraphOps.warmTradeGraph(spark, sfDir)),
+      // co-activity component labels (one CC fixpoint per corpus)
+      "cc" -> (() => graft.operators.GraphOps.warmCoActivityLabels(spark, sfDir)),
+      // dedup-cluster labels (dedup_clusters / corpus_split_safe)
+      "dedup" -> (() => graft.operators.Dedup.warmClusterLabels(spark, sfDir)),
+      // exact-truth recall baselines the recall gates audit against
+      "truth" -> (() => graft.operators.Dedup.warmTruths(spark, sfDir)),
+      // the BPE merge table (16 driver-coordinated rounds per corpus)
+      "bpe" -> (() => graft.operators.Bpe.learnedMerges(spark, sfDir)),
+      // the persisted-registry save+load behind ft_historical
+      "registry" -> (() => graft.operators.FeatureOps.demoRegistryReloaded(spark, sfDir)),
+      // the three registry versions behind registry_history
+      "registry-history" -> (() => graft.operators.FeatureOps.demoHistoryReloaded(spark, sfDir)))
+    warmUps.foreach { case (label, warm) =>
+      try warm() catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $label warm-up failed: ${e.getMessage.take(200)}")
+      }
     }
     // EVERY query runs three times: one DISCARDED warm-up execution, then
     // two timed runs, best successful time wins. Best-of-two-cold was not
@@ -112,15 +83,13 @@ object Bench {
     // regression line costs a round of investigation, one extra suite pass
     // costs ~2 min. Persistent failures still read -1 (never a fast run).
     //
-    // The three executions run as FULL SUITE PASSES (warm-up pass over all
-    // queries, then timed pass 1 over all, then timed pass 2), NOT
-    // back-to-back per query: the r13 driver sample put q_promo_share at
-    // 3.6/4.8 s in BOTH adjacent timed runs while two committed same-code
-    // samples read 0.28-0.33 s — a host-noise window longer than one query
-    // defeats an adjacent run pair. Interleaving ~120 s of other queries
-    // between a query's two samples decorrelates the noise window from
-    // query identity, so "both runs slow" again distinguishes a plan
-    // regression from ambient load.
+    // By default the three executions run back-to-back per query (the
+    // adjacent protocol, see below). SPARK_GRAFT_BENCH_MODE=interleaved
+    // runs them as FULL SUITE PASSES instead (warm-up pass over all
+    // queries, then timed pass 1, then timed pass 2): interleaving ~120 s
+    // of other queries between a query's two samples decorrelates a
+    // host-noise window from query identity, so "both runs slow" again
+    // distinguishes a plan regression from ambient load.
     //
     // localCheckpoint-based queries (clusters, recall gates, baskets) pin
     // their checkpoint blocks in the block manager until RDD GC; across a
@@ -151,26 +120,18 @@ object Bench {
     val adjacent = !sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("interleaved")
     val qlist = SparkEntry.queries.toSeq
     val (pass1, pass2) =
-      if (adjacent) {
-        val runs = qlist.map { case (name, fn) =>
+      if (adjacent)
+        qlist.map { case (name, fn) =>
           run1(name, fn) // warm-up, discarded
-          (name -> run1(name, fn), name -> run1(name, fn))
-        }
-        (runs.map(_._1), runs.map(_._2))
-      } else {
+          (run1(name, fn), run1(name, fn))
+        }.unzip
+      else {
         qlist.foreach { case (name, fn) => run1(name, fn) } // warm-up pass, discarded
-        (qlist.map { case (name, fn) => name -> run1(name, fn) },
-         qlist.map { case (name, fn) => name -> run1(name, fn) })
+        (qlist.map { case (name, fn) => run1(name, fn) },
+         qlist.map { case (name, fn) => run1(name, fn) })
       }
-    val results = qlist.map { case (name, _) =>
-      val first = pass1.collectFirst { case (n, t) if n == name => t }.get
-      val second = pass2.collectFirst { case (n, t) if n == name => t }.get
-      val best = (first, second) match {
-        case (f, s) if f < 0 && s < 0 => -1.0
-        case (f, s) if f < 0          => s
-        case (f, s) if s < 0          => f
-        case (f, s)                   => math.min(f, s)
-      }
+    val results = qlist.map(_._1).lazyZip(pass1).lazyZip(pass2).map { (name, first, second) =>
+      val best = Seq(first, second).filter(_ >= 0).minOption.getOrElse(-1.0)
       name -> (best, first, second)
     }.toMap
     // The harness that collects this line keeps only the LAST ~2000 chars of
@@ -228,13 +189,13 @@ object Bench {
     // in BENCH_FULL.json and on the long stdout line above. Timing
     // methodology unchanged (same warm-up + best-of-two, same count()
     // action); this is output plumbing only.
-    val topEntries = new scala.collection.mutable.ArrayBuffer[String]
-    var topLen = 0
-    for ((k, (best, _, _)) <- results.toSeq.sortBy { case (k, (b, _, _)) => (-b, k) }) {
-      val e = "\"" + k + "\":" + r3(best)
-      if (topLen + e.length + 1 <= 1500) { topEntries += e; topLen += e.length + 1 }
-    }
-    val topQs = topEntries.mkString("{", ",", "}")
+    // stop at the FIRST entry that overflows the budget: skipping it and
+    // packing shorter later names would break "slowest subset"
+    val bySlowest = results.toSeq.sortBy { case (k, (b, _, _)) => (-b, k) }
+      .map { case (k, (best, _, _)) => "\"" + k + "\":" + r3(best) }
+    val cumLen = bySlowest.scanLeft(0)(_ + _.length + 1).tail
+    val topQs = bySlowest.zip(cumLen).takeWhile(_._2 <= 1500).map(_._1)
+      .mkString("{", ",", "}")
     println(s"""{"queries":$topQs,"metric":"total","unit":"sec","value":${r3(total)},"sf":"$sfDir","n_queries":${results.size},"buckets":$buckets,"full":"BENCH_FULL.json","queries_are_slowest_subset":true}""")
     System.out.flush()
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{FeatureRef, FeatureTable, Project, Registry}
+import graft.model.{FeatureRef, FeatureTable, OnDemandFeature, OnDemandView, Project, Registry}
 import graft.operators.{LatestValue, PointInTimeJoin}
 import graft.serving.OnlineStore
 import graft.sources.BatchSource
@@ -23,12 +23,6 @@ import graft.sources.BatchSource
   * All registry lookups and online-store keys are scoped by `project`
   * (reference: Project.java; RedisKeyGenerator.java builds every online key
   * as project + entity names + entity values).
-  *
-  * `asofBucketSec`: when set, historical retrieval uses the skew-proof
-  * bucketed as-of join (PointInTimeJoin.asofBucketed — per-key timelines
-  * sharded into time buckets with a carry-in summary), spec-proven
-  * result-identical to the plain as-of and measured 2× faster at 30×
-  * scale on hot keys (SURVEY §5). Leave None for the single-window form.
   */
 object FeatureStore {
   /** As-of direction for [[FeatureStore.getHistoricalFeatures]]. */
@@ -44,14 +38,22 @@ object FeatureStore {
     * the round-trip is field-level lossless (RegistrySpec), and the
     * ft_historical gate runs against a reloaded registry every round. */
   def load(spark: SparkSession, registryDir: String,
-           project: String = Project.Default,
-           asofBucketSec: Option[Long] = None): FeatureStore =
-    new FeatureStore(Registry.load(spark, registryDir), spark, project, asofBucketSec)
+           project: String = Project.Default): FeatureStore =
+    new FeatureStore(Registry.load(spark, registryDir), spark, project)
+
+  /** Refs split into table refs and the on-demand views they name (each
+    * with its requested derived features). */
+  private final case class Resolved(tableRefs: Seq[FeatureRef],
+                                    views: Seq[(OnDemandView, Seq[OnDemandFeature])]) {
+    val inputRefs: Seq[FeatureRef] = views.flatMap(_._1.inputs).distinct
+    /** Inputs pulled in only for derivation (dropped from the response). */
+    val helperRefs: Seq[FeatureRef] = inputRefs.filterNot(tableRefs.contains)
+    val fetchRefs: Seq[FeatureRef] = (tableRefs ++ helperRefs).distinct
+  }
 }
 
 final class FeatureStore(val registry: Registry, spark: SparkSession,
-                         val project: String = Project.Default,
-                         val asofBucketSec: Option[Long] = None) {
+                         val project: String = Project.Default) {
 
   /** Persist this store's registry — the inverse of [[FeatureStore.load]]. */
   def saveRegistry(registryDir: String): Unit =
@@ -78,19 +80,48 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       eventTsUnit = t.labels.getOrElse("graft.ts_unit", "micros"))
   }
 
-  /** Load a table's source, projecting entities + event-ts + the requested
+  /** Load a table's source, projecting `leadCols` + the requested
     * features, CAST to their registry-declared value types (reference:
     * feature values are typed by the Value proto, not by whatever the
     * source file happens to contain). Unknown feature names fail fast with
     * the reference's error shape instead of a Spark analysis error. */
-  private def loadFeatures(t: FeatureTable, featureNames: Seq[String]): DataFrame = {
+  private def readTyped(t: FeatureTable, leadCols: Seq[String],
+                        featureNames: Seq[String]): DataFrame = {
     val declared = t.features.map(f => f.name -> f).toMap
     val unknown = featureNames.filterNot(declared.contains)
     require(unknown.isEmpty,
       s"Feature(s) ${unknown.mkString(", ")} not found in table ${t.name}")
     BatchSource.read(spark, sourceOf(t))
-      .select((t.entities :+ t.eventTsCol).map(col) ++
+      .select(leadCols.map(col) ++
         featureNames.map(n => col(n).cast(declared(n).valueType.sparkType).as(n)): _*)
+  }
+
+  /** Entities + event-ts + the requested typed features: the as-of side. */
+  private def loadFeatures(t: FeatureTable, featureNames: Seq[String]): DataFrame =
+    readTyped(t, t.entities :+ t.eventTsCol, featureNames)
+
+  /** Latest-wins order of a table's rows: event time, then created time. */
+  private def latestOrder(t: FeatureTable): Seq[String] = t.eventTsCol +: t.createdTsCol.toSeq
+
+  /** Latest row per entity key, carrying `valueCols`. */
+  private def latestPerKey(t: FeatureTable, rows: DataFrame, valueCols: Seq[String]): DataFrame =
+    LatestValue.latest(rows, keys = t.entities, orderCols = latestOrder(t), valueCols = valueCols)
+
+  /** On-demand-view resolution shared by historical and online retrieval:
+    * refs naming a registered view are split off (unknown view features
+    * fail fast), and the view inputs are retrieved beside the table refs. */
+  private def resolveOnDemand(refs: Seq[FeatureRef]): FeatureStore.Resolved = {
+    val (odfvRefs, tableRefs) =
+      refs.partition(r => registry.getOnDemandView(r.table, project).isDefined)
+    val views = odfvRefs.map(_.table).distinct.map { n =>
+      val v = registry.getOnDemandView(n, project).get
+      val wanted = odfvRefs.filter(_.table == n).map(_.feature)
+      val unknown = wanted.filterNot(v.features.map(_.name).toSet)
+      require(unknown.isEmpty,
+        s"Feature(s) ${unknown.mkString(", ")} not found in on-demand view ${v.name}")
+      v -> v.features.filter(f => wanted.contains(f.name))
+    }
+    FeatureStore.Resolved(tableRefs, views)
   }
 
   /** Point-in-time join every requested feature onto the entity dataframe.
@@ -101,9 +132,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * reference's training-retrieval semantics), Forward (earliest feature
     * ≥ entity ts: "what happened next" labeling), Nearest (closer of the
     * two, ties backward). The table's registered max_age bounds the
-    * distance in every mode. The skew-proof bucketed form (`asofBucketSec`)
-    * applies to the backward direction only; forward/nearest always use
-    * their linear window passes. */
+    * distance in every mode. */
   def getHistoricalFeatures(entityDf: DataFrame, entityTsCol: String,
                             refs: Seq[FeatureRef],
                             asofMode: FeatureStore.AsofMode = FeatureStore.Backward)
@@ -111,29 +140,14 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     // a ref naming an on-demand view derives AFTER the as-of joins (the
     // same transparent-input contract as the online path; historical rows
     // carry no __status — unmatched inputs are nulls and propagate)
-    val (odfvRefs, tableRefs) =
-      refs.partition(r => registry.getOnDemandView(r.table, project).isDefined)
-    val views = odfvRefs.map(_.table).distinct
-      .map(n => registry.getOnDemandView(n, project).get)
-    views.foreach { v =>
-      val known = v.features.map(_.name).toSet
-      val unknown = odfvRefs.filter(_.table == v.name).map(_.feature).filterNot(known)
-      require(unknown.isEmpty,
-        s"Feature(s) ${unknown.mkString(", ")} not found in on-demand view ${v.name}")
+    val od = resolveOnDemand(refs)
+    val joined = joinHistorical(entityDf, entityTsCol, od.fetchRefs, asofMode)
+    val derived = od.views.foldLeft(joined) { case (df, (v, feats)) =>
+      feats.foldLeft(df)((d, f) => d.withColumn(s"${v.name}__${f.name}", expr(f.sqlExpr)))
     }
-    val inputRefs = views.flatMap(_.inputs).distinct
-    val joined = joinHistorical(entityDf, entityTsCol,
-      (tableRefs ++ inputRefs.filterNot(tableRefs.contains)).distinct, asofMode)
-    val derived = views.foldLeft(joined) { (df, v) =>
-      val wanted = odfvRefs.filter(_.table == v.name).map(_.feature).toSet
-      v.features.filter(f => wanted(f.name)).foldLeft(df) { (d, f) =>
-        d.withColumn(s"${v.name}__${f.name}", expr(f.sqlExpr))
-      }
-    }
-    val helperCols = inputRefs.filterNot(tableRefs.contains)
-      .map(r => s"${r.table}__${r.feature}") ++
-      inputRefs.map(_.table).distinct // matched-ts col of input-only tables
-        .filterNot(t => tableRefs.exists(_.table == t)).map(t => s"${t}__ts")
+    val helperCols = od.helperRefs.map(h => s"${h.table}__${h.feature}") ++
+      od.inputRefs.map(_.table).distinct // matched-ts col of input-only tables
+        .filterNot(t => od.tableRefs.exists(_.table == t)).map(t => s"${t}__ts")
     derived.drop(helperCols: _*)
   }
 
@@ -174,30 +188,13 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       case (acc, (tname, trefs)) =>
         val t = table(tname)
         val featureNames = trefs.map(_.feature)
-        val feats = loadFeatures(t, featureNames)
-        (asofMode, asofBucketSec) match {
-          case (FeatureStore.Forward, _) =>
-            PointInTimeJoin.asofForward(
-              acc, feats, keys = t.entities, entityTs = entityTsCol,
-              featureTs = t.eventTsCol, featureCols = featureNames,
-              maxAgeSec = t.maxAgeSec, outPrefix = s"${tname}__")
-          case (FeatureStore.Nearest, _) =>
-            PointInTimeJoin.asofNearest(
-              acc, feats, keys = t.entities, entityTs = entityTsCol,
-              featureTs = t.eventTsCol, featureCols = featureNames,
-              maxAgeSec = t.maxAgeSec, outPrefix = s"${tname}__")
-          case (FeatureStore.Backward, Some(bucket)) =>
-            PointInTimeJoin.asofBucketed(
-              acc, feats, keys = t.entities, entityTs = entityTsCol,
-              featureTs = t.eventTsCol, featureCols = featureNames,
-              bucketSec = bucket, maxAgeSec = t.maxAgeSec,
-              outPrefix = s"${tname}__")
-          case (FeatureStore.Backward, None) =>
-            PointInTimeJoin.asof(
-              acc, feats, keys = t.entities, entityTs = entityTsCol,
-              featureTs = t.eventTsCol, featureCols = featureNames,
-              maxAgeSec = t.maxAgeSec, outPrefix = s"${tname}__")
+        val join = asofMode match {
+          case FeatureStore.Backward => PointInTimeJoin.asof _
+          case FeatureStore.Forward => PointInTimeJoin.asofForward _
+          case FeatureStore.Nearest => PointInTimeJoin.asofNearest _
         }
+        join(acc, loadFeatures(t, featureNames), t.entities, entityTsCol,
+          t.eventTsCol, featureNames, t.maxAgeSec, s"${tname}__")
     }
 
   /** Apply an on-demand view's derived features to a retrieval result (the
@@ -226,13 +223,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * entities, valid_from, valid_to, features (registry-typed). */
   def getFeatureTimeline(tableName: String, featureNames: Seq[String]): DataFrame = {
     val t = table(tableName)
-    val declared = t.features.map(f => f.name -> f).toMap
-    val unknown = featureNames.filterNot(declared.contains)
-    require(unknown.isEmpty,
-      s"Feature(s) ${unknown.mkString(", ")} not found in table ${t.name}")
-    val raw = BatchSource.read(spark, sourceOf(t))
-      .select((t.entities ++ Seq(t.eventTsCol) ++ t.createdTsCol).map(col) ++
-        featureNames.map(n => col(n).cast(declared(n).valueType.sparkType).as(n)): _*)
+    val raw = readTyped(t, t.entities ++ latestOrder(t), featureNames)
     graft.operators.FeatureOps.ftTimelineOf(raw, keys = t.entities,
       tsCol = t.eventTsCol, tiebreak = t.createdTsCol.toSeq,
       valueCols = featureNames)
@@ -248,9 +239,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * anchor a literal. */
   def getFreshness(tableName: String, nowTs: java.sql.Timestamp): DataFrame = {
     val t = table(tableName)
-    val latest = LatestValue.latest(BatchSource.read(spark, sourceOf(t)),
-      keys = t.entities, orderCols = Seq(t.eventTsCol) ++ t.createdTsCol,
-      valueCols = Seq(t.eventTsCol))
+    val latest = latestPerKey(t, BatchSource.read(spark, sourceOf(t)), Seq(t.eventTsCol))
     graft.operators.FeatureOps.ftFreshnessOf(latest, keys = t.entities,
       tsCol = t.eventTsCol, nowCol = lit(nowTs), maxAgeSec = t.maxAgeSec)
   }
@@ -276,18 +265,12 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     import graft.model.Expectation._
     require(checks.nonEmpty, "validateTable needs at least one expectation")
     val t = table(tableName)
-    val declared = t.features.map(f => f.name -> f).toMap
     val named = checks.collect {
       case NotNull(f, _) => f
       case InRange(f, _, _, _) => f
     }
-    val unknown = named.distinct.filterNot(declared.contains)
-    require(unknown.isEmpty,
-      s"Feature(s) ${unknown.mkString(", ")} not found in table ${t.name}")
-    val keyCols = t.entities ++ Seq(t.eventTsCol) ++ t.createdTsCol
-    val raw = BatchSource.read(spark, sourceOf(t))
-      .select(keyCols.map(col) ++ named.distinct.map(n =>
-        col(n).cast(declared(n).valueType.sparkType).as(n)): _*)
+    val keyCols = t.entities ++ latestOrder(t)
+    val raw = readTyped(t, keyCols, named.distinct)
     val aggs = Seq(count(lit(1)).as("__rows"),
         count_distinct(struct(keyCols.map(col): _*)).as("__keys")) ++
       checks.zipWithIndex.collect {
@@ -314,10 +297,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       case (Freshness(nowTs), _) =>
         // the most-stale key's latest row: per-key max(ts), then the min
         // of those — the key a serving read would fetch oldest data for
-        val worst = LatestValue.latest(
-            BatchSource.read(spark, sourceOf(t)),
-            keys = t.entities, orderCols = Seq(t.eventTsCol) ++ t.createdTsCol,
-            valueCols = Seq(t.eventTsCol))
+        val worst = latestPerKey(t, BatchSource.read(spark, sourceOf(t)), Seq(t.eventTsCol))
           .agg(min(col(t.eventTsCol)).as("__worst_ts"))
         worst
           .withColumn("__age_us",
@@ -374,9 +354,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     val featureNames = t.features.map(_.name)
     val rows = BatchSource.readRange(spark, sourceOf(t),
       "1970-01-01 00:00:00", upToExclusive)
-    val expected = LatestValue.latest(rows, keys = t.entities,
-        orderCols = Seq(t.eventTsCol) ++ t.createdTsCol,
-        valueCols = (Seq(t.eventTsCol) ++ featureNames).distinct)
+    val expected = latestPerKey(t, rows, (t.eventTsCol +: featureNames).distinct)
       .select(t.entities.map(col) ++
         (col(t.eventTsCol).as("__exp_ts") +:
           featureNames.map(n => col(n).as(s"__exp_$n"))): _*)
@@ -406,13 +384,17 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
   def materialize(tableName: String, store: OnlineStore,
                   startInclusive: String, endExclusive: String): Unit = {
     val t = table(tableName)
-    val featureNames = t.features.map(_.name)
-    val rows = BatchSource.readRange(spark, sourceOf(t), startInclusive, endExclusive)
-    store.upsert(rows.withColumn(ProjectCol, lit(project)),
-      keys = ProjectCol +: t.entities,
-      orderCols = Seq(t.eventTsCol) ++ t.createdTsCol,
-      valueCols = featureNames)
+    toStore(t, BatchSource.readRange(spark, sourceOf(t), startInclusive, endExclusive))(
+      store.upsert)
   }
+
+  /** Hand a window of `t`'s rows to a store write as (project-tagged rows,
+    * store keys, latest-wins order, value columns) — the store-column
+    * layout every materialization path shares. */
+  private def toStore(t: FeatureTable, rows: DataFrame)(
+      write: (DataFrame, Seq[String], Seq[String], Seq[String]) => Unit): Unit =
+    write(rows.withColumn(ProjectCol, lit(project)), ProjectCol +: t.entities,
+      latestOrder(t), t.features.map(_.name))
 
   /** Materialize with the table's registered TTL fused into the store
     * merge: keys whose latest feature row is already older than the
@@ -428,12 +410,8 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     val t = table(tableName)
     (store, t.maxAgeSec) match {
       case (p: graft.serving.ParquetOnlineStore, Some(maxAge)) =>
-        val rows = BatchSource.readRange(spark, sourceOf(t), startInclusive, endExclusive)
-        p.upsertCompacting(rows.withColumn(ProjectCol, lit(project)),
-          keys = ProjectCol +: t.entities,
-          orderCols = Seq(t.eventTsCol) ++ t.createdTsCol,
-          valueCols = t.features.map(_.name),
-          eventTsCol = t.eventTsCol, maxAgeSec = maxAge, nowTs = nowTs)
+        toStore(t, BatchSource.readRange(spark, sourceOf(t), startInclusive, endExclusive))(
+          p.upsertCompacting(_, _, _, _, t.eventTsCol, maxAge, nowTs))
       case _ => materialize(tableName, store, startInclusive, endExclusive)
     }
   }
@@ -456,10 +434,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       val t = table(tableName)
       val rows = BatchSource.readRange(spark, sourceOf(t), start, upToExclusive)
       val n = rows.count()
-      store.upsert(rows.withColumn(ProjectCol, lit(project)),
-        keys = ProjectCol +: t.entities,
-        orderCols = Seq(t.eventTsCol) ++ t.createdTsCol,
-        valueCols = t.features.map(_.name))
+      toStore(t, rows)(store.upsert)
       log.record(spark, project, tableName, storeName, start, upToExclusive, n)
       Some((start, upToExclusive))
     }
@@ -534,27 +509,15 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       require(r.table.nonEmpty, "FeatureTable name must be provided in FeatureReference")
       require(r.feature.nonEmpty, "Feature name must be provided in FeatureReference")
     }
-    val (odfvRefs, tableRefs) =
-      refs.partition(r => registry.getOnDemandView(r.table, project).isDefined)
-    val views = odfvRefs.map(_.table).distinct
-      .map(n => registry.getOnDemandView(n, project).get)
-    views.foreach { v =>
-      val known = v.features.map(_.name).toSet
-      val unknown = odfvRefs.filter(_.table == v.name).map(_.feature).filterNot(known)
-      require(unknown.isEmpty,
-        s"Feature(s) ${unknown.mkString(", ")} not found in on-demand view ${v.name}")
-    }
-    val inputRefs = views.flatMap(_.inputs).distinct
-    val looked = lookupOnline(store, requestDf,
-      (tableRefs ++ inputRefs.filterNot(tableRefs.contains)).distinct, requestTs)
-    val derived = views.foldLeft(looked) { (df, v) =>
-      val wanted = odfvRefs.filter(_.table == v.name).map(_.feature).toSet
+    val od = resolveOnDemand(refs)
+    val looked = lookupOnline(store, requestDf, od.fetchRefs, requestTs)
+    val derived = od.views.foldLeft(looked) { case (df, (v, feats)) =>
       val anyInput = (s: String) =>
         if (v.inputs.isEmpty) lit(false) // request-data-only view
         else v.inputs
           .map(r => col(s"${r.table}__${r.feature}__status") === s)
           .reduce(_ || _)
-      v.features.filter(f => wanted(f.name)).foldLeft(df) { (d, f) =>
+      feats.foldLeft(df) { (d, f) =>
         val out = s"${v.name}__${f.name}"
         d.withColumn(out, expr(f.sqlExpr))
           .withColumn(out + "__status",
@@ -565,8 +528,8 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       }
     }
     // inputs pulled in only for derivation don't belong to the response
-    val helperCols = inputRefs.filterNot(tableRefs.contains)
-      .flatMap(r => Seq(s"${r.table}__${r.feature}", s"${r.table}__${r.feature}__status"))
+    val helperCols = od.helperRefs
+      .flatMap(h => Seq(s"${h.table}__${h.feature}", s"${h.table}__${h.feature}__status"))
     derived.drop(helperCols: _*)
   }
 
@@ -595,11 +558,8 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
         val reqKeys = acc.select(t.entities.map(col): _*).distinct()
         val hit = stored.join(broadcast(reqKeys), t.entities, "left_semi")
         val joined = acc.join(broadcast(hit), t.entities, "left")
-        val fresh: Column = t.maxAgeSec match {
-          case Some(age) =>
-            unix_micros(col(t.eventTsCol)) >= unix_micros(requestTs) - age * 1000000L
-          case None => lit(true)
-        }
+        val fresh = t.maxAgeSec.fold(lit(true))(age =>
+          PointInTimeJoin.withinMaxAge(col(t.eventTsCol), requestTs, age))
         trefs.foldLeft(joined) { (df, r) =>
           val out = s"${tname}__${r.feature}"
           df.withColumn(out + "__status",

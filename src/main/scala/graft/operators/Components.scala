@@ -205,30 +205,42 @@ object Components {
       if (cCnt <= starDriverCap) {
         val spark = directed.sparkSession
         import spark.implicits._
-        // union-find with explicit component-min labeling — the star
-        // fixpoint's exact contract (collect is ≤ starDriverCap rows of
-        // two longs, gated by the count above)
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        cEdges.collect().foreach { r =>
-          val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-          if (ra != rb) parent(ra) = rb
-        }
-        val minOf = scala.collection.mutable.Map.empty[Long, Long]
-        parent.keys.foreach { n =>
-          val r = find(n)
-          minOf(r) = math.min(minOf.getOrElse(r, n), n)
-        }
-        val lbls = parent.keys.toSeq.map(n => (n, minOf(find(n)))).toDF("doc_id", "lbl")
-        (lbls, 0)
+        // collect is ≤ starDriverCap rows of two longs, gated by the count above
+        val pairs = cEdges.collect().map(r => (r.getLong(0), r.getLong(1)))
+        (unionFindMinLabels(pairs).toDF("doc_id", "lbl"), 0)
       } else starFixpoint(cEdges)
     val rootsR = roots.select(col("doc_id").as("rk"), col("lbl").as("root"))
     val composed = labels.join(rootsR, col("lbl") === col("rk"), "left")
       .select(col("doc_id"), coalesce(col("root"), col("lbl")).as("lbl"))
     (composed, rounds + starRounds)
+  }
+
+  /** Driver union-find with explicit component-min labeling — the star
+    * fixpoint's exact contract: (node, min node of its component) for
+    * every endpoint. `find` is iterative with path compression and unions
+    * go by size, so trees stay O(log n) deep and no edge order can
+    * overflow the stack: a path fed in order chains an unranked union
+    * up to n deep, far past a recursive find's stack at the cap. */
+  private[graft] def unionFindMinLabels(edges: Iterable[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    val size = scala.collection.mutable.HashMap.empty[Long, Int].withDefaultValue(1)
+    def find(x: Long): Long = {
+      var root = parent.getOrElseUpdate(x, x)
+      while (parent(root) != root) root = parent(root)
+      var n = x
+      while (n != root) { val next = parent(n); parent(n) = root; n = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        val (big, small) = if (size(ra) >= size(rb)) (ra, rb) else (rb, ra)
+        parent(small) = big
+        size(big) += size(small)
+      }
+    }
+    val minOf = parent.keys.toSeq.groupMapReduce(find)(identity)(math.min)
+    parent.keys.toSeq.map(n => (n, minOf(find(n))))
   }
 
   /** True iff the canonical distinct edge set is a disjoint star forest —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,58 @@ object PointInTimeJoin {
       featureTs: String,
       featureCols: Seq[String],
       maxAgeSec: Option[Long] = None,
-      outPrefix: String = "feat_"): DataFrame = {
+      outPrefix: String = "feat_"): DataFrame =
+    unionSortPass(entity, features, keys, entityTs, featureTs, featureCols,
+      maxAgeSec, outPrefix, forward = false)
+
+  /** Forward as-of join: the EARLIEST feature with `featureTs >= entityTs`
+    * (the mirror of [[asof]] — "what happened next", e.g. labeling events
+    * with the following outcome). Same union-sort pass, one shuffle, no
+    * range-join explosion; only the window direction flips (__ts desc, so
+    * the running last() carries the closest FUTURE feature). Tie rules
+    * match [[asof]]: an exact-timestamp feature is visible (>= includes
+    * equality), and among features at one (key, ts) the greatest feature
+    * struct wins. `maxAgeSec` bounds how far AHEAD a feature may be. */
+  def asofForward(
+      entity: DataFrame,
+      features: DataFrame,
+      keys: Seq[String],
+      entityTs: String,
+      featureTs: String,
+      featureCols: Seq[String],
+      maxAgeSec: Option[Long] = None,
+      outPrefix: String = "feat_"): DataFrame =
+    unionSortPass(entity, features, keys, entityTs, featureTs, featureCols,
+      maxAgeSec, outPrefix, forward = true)
+
+  /** The one max-age rule (reference: checkOutsideMaxAge): `ts` is fresh
+    * when it lies at or after `anchor − maxAge` (or, looking `forward`, at
+    * or before `anchor + maxAge`). Both sides are cast to TIMESTAMP in the
+    * session time zone — the coercion the as-of union already applies — so
+    * a TIMESTAMP_NTZ event time compares exactly like a TIMESTAMP one
+    * (the cast is a no-op, and optimized away, on TIMESTAMP inputs). */
+  private[graft] def withinMaxAge(ts: Column, anchor: Column, maxAgeSec: Long,
+                                  forward: Boolean = false): Column = {
+    val t = unix_micros(ts.cast("timestamp"))
+    val a = unix_micros(anchor.cast("timestamp"))
+    val ageUs = maxAgeSec * 1000000L
+    if (forward) t <= a + ageUs else t >= a - ageUs
+  }
+
+  /** The union-sort pass behind [[asof]] and [[asofForward]]: tag, union,
+    * ONE key-partitioned window carrying the last seen feature, keep the
+    * entity rows, apply the max-age rule, project. `forward` only flips the
+    * time order (and the side of the anchor the max age bounds). */
+  private def unionSortPass(
+      entity: DataFrame,
+      features: DataFrame,
+      keys: Seq[String],
+      entityTs: String,
+      featureTs: String,
+      featureCols: Seq[String],
+      maxAgeSec: Option[Long],
+      outPrefix: String,
+      forward: Boolean): DataFrame = {
     val keyCols = keys.map(col)
 
     val entityOut = entity.columns.toSeq
@@ -57,15 +108,16 @@ object PointInTimeJoin {
 
     // Window order does triple duty, so feature-side ties need NO separate
     // dedup aggregation (saves a whole shuffle+sort of the feature table):
-    //  - __ts asc: as-of ordering;
+    //  - __ts (asc backward, desc forward): as-of ordering;
     //  - __is_entity asc: features sort before entities at equal __ts, so an
-    //    exact-timestamp feature is visible to the entity row (<= semantics);
+    //    exact-timestamp feature is visible to the entity row (<= / >=);
     //  - __feat asc: among feature rows at the same (key, ts), last() sees
     //    the greatest feature struct — the deterministic latest-wins rule
     //    (use LatestValue.dedup upstream for explicit created-ts semantics).
     val w = Window
       .partitionBy(keyCols: _*)
-      .orderBy(col("__ts").asc, col("__is_entity").asc, col("__feat").asc)
+      .orderBy(if (forward) col("__ts").desc else col("__ts").asc,
+        col("__is_entity").asc, col("__feat").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     val attached = e
@@ -75,160 +127,9 @@ object PointInTimeJoin {
       .withColumn("__last_feat", last(col("__feat"), ignoreNulls = true).over(w))
       .filter(col("__is_entity") === 1)
 
-    val fresh = maxAgeSec match {
-      case Some(age) =>
-        col("__last_ts").isNotNull &&
-          unix_micros(col("__last_ts")) >= unix_micros(col(entityTs)) - age * 1000000L
-      case None => col("__last_ts").isNotNull
-    }
-
-    val out = attached
-      .withColumn(s"${outPrefix}ts", when(fresh, col("__last_ts")))
-      .withColumns(featureCols.map(c =>
-        s"$outPrefix$c" -> when(fresh, col(s"__last_feat.$c"))).toMap)
-
-    out.select(entityOut.map(col) ++
-      (s"${outPrefix}ts" +: featureCols.map(c => s"$outPrefix$c")).map(col): _*)
-  }
-
-  /** Skew-proof variant of [[asof]] for pathologically hot keys.
-    *
-    * A window partitioned by key cannot be salted or AQE-split — every row of
-    * a key must land in one partition, so ONE key with billions of rows
-    * stalls the stage. This variant shards the timeline instead: partition by
-    * (key, time-bucket) and stitch buckets with a carry-in summary:
-    *
-    *  1. per-(key, bucket) last-feature summary — a partial-aggregatable
-    *     `max(struct(ts, feat))` groupBy (map-side combined, tiny output);
-    *  2. carry-in per bucket = running max of summaries over PRECEDING
-    *     buckets (a window over the per-bucket summary — rows per key =
-    *     #buckets, not #events);
-    *  3. the [[asof]] union-sort pass, but partitioned by (key, bucket), with
-    *     the carry-in as the fallback when a bucket has no earlier feature.
-    *
-    * Identical results to [[asof]]; `bucketSec` trades shuffle-key fan-out
-    * against summary size (e.g. 1 day for multi-year event streams).
-    */
-  def asofBucketed(
-      entity: DataFrame,
-      features: DataFrame,
-      keys: Seq[String],
-      entityTs: String,
-      featureTs: String,
-      featureCols: Seq[String],
-      bucketSec: Long,
-      maxAgeSec: Option[Long] = None,
-      outPrefix: String = "feat_"): DataFrame = {
-    val keyCols = keys.map(col)
-    val bucketLenUs = bucketSec * 1000000L
-    def bucketOf(ts: String) = floor(unix_micros(col(ts)) / bucketLenUs).cast("long")
-
-    val entityOut = entity.columns.toSeq
-    val e = entity
-      .withColumn("__ts", col(entityTs))
-      .withColumn("__bucket", bucketOf(entityTs))
-      .withColumn("__is_entity", lit(1))
-    val f = features.select(
-      keyCols ++ Seq(
-        col(featureTs).as("__ts"),
-        struct(featureCols.map(col): _*).as("__feat"),
-        lit(0).as("__is_entity")): _*)
-      .withColumn("__bucket", bucketOf("__ts"))
-
-    // 1. per-(key, bucket) latest feature (lexicographic max over (ts, feat))
-    val summary = f
-      .groupBy(keyCols :+ col("__bucket"): _*)
-      .agg(max(struct(col("__ts").as("ts"), col("__feat").as("f"))).as("__last"))
-
-    // 2. carry-in per occupied bucket (union of feature- and entity-buckets,
-    //    so entity buckets with no in-bucket feature still get a carry)
-    val allBuckets = summary.select(keyCols :+ col("__bucket"): _*)
-      .unionByName(e.select(keyCols :+ col("__bucket"): _*))
-      .distinct()
-    val wCarry = Window.partitionBy(keyCols: _*).orderBy(col("__bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = allBuckets
-      .join(summary, keys :+ "__bucket", "left")
-      .withColumn("__carry", max(col("__last")).over(wCarry))
-      .select(keyCols ++ Seq(col("__bucket"), col("__carry")): _*)
-
-    // 3. in-bucket union-sort pass, partitioned by (key, bucket)
-    val w = Window
-      .partitionBy(keyCols :+ col("__bucket"): _*)
-      .orderBy(col("__ts").asc, col("__is_entity").asc, col("__feat").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val attached = e
-      .unionByName(f, allowMissingColumns = true)
-      .withColumn("__in_ts",
-        last(when(col("__is_entity") === 0, col("__ts")), ignoreNulls = true).over(w))
-      .withColumn("__in_feat", last(col("__feat"), ignoreNulls = true).over(w))
-      .filter(col("__is_entity") === 1)
-      .join(carry, keys :+ "__bucket", "left")
-      .withColumn("__last_ts", coalesce(col("__in_ts"), col("__carry.ts")))
-      .withColumn("__last_feat", coalesce(col("__in_feat"), col("__carry.f")))
-
-    val fresh = maxAgeSec match {
-      case Some(age) =>
-        col("__last_ts").isNotNull &&
-          unix_micros(col("__last_ts")) >= unix_micros(col(entityTs)) - age * 1000000L
-      case None => col("__last_ts").isNotNull
-    }
-
-    attached
-      .withColumn(s"${outPrefix}ts", when(fresh, col("__last_ts")))
-      .withColumns(featureCols.map(c =>
-        s"$outPrefix$c" -> when(fresh, col(s"__last_feat.$c"))).toMap)
-      .select(entityOut.map(col) ++
-        (s"${outPrefix}ts" +: featureCols.map(c => s"$outPrefix$c")).map(col): _*)
-  }
-
-  /** Forward as-of join: the EARLIEST feature with `featureTs >= entityTs`
-    * (the mirror of [[asof]] — "what happened next", e.g. labeling events
-    * with the following outcome). Same union-sort algorithm, one shuffle,
-    * no range-join explosion; only the window direction flips (__ts desc,
-    * so the running last() carries the closest FUTURE feature). Tie rules
-    * match [[asof]]: an exact-timestamp feature is visible (>= includes
-    * equality), and among features at one (key, ts) the greatest feature
-    * struct wins. `maxAgeSec` bounds how far AHEAD a feature may be. */
-  def asofForward(
-      entity: DataFrame,
-      features: DataFrame,
-      keys: Seq[String],
-      entityTs: String,
-      featureTs: String,
-      featureCols: Seq[String],
-      maxAgeSec: Option[Long] = None,
-      outPrefix: String = "feat_"): DataFrame = {
-    val keyCols = keys.map(col)
-
-    val entityOut = entity.columns.toSeq
-    val e = entity
-      .withColumn("__ts", col(entityTs))
-      .withColumn("__is_entity", lit(1))
-    val f = features.select(
-      keyCols ++ Seq(
-        col(featureTs).as("__ts"),
-        struct(featureCols.map(col): _*).as("__feat"),
-        lit(0).as("__is_entity")): _*)
-
-    val w = Window
-      .partitionBy(keyCols: _*)
-      .orderBy(col("__ts").desc, col("__is_entity").asc, col("__feat").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val attached = e
-      .unionByName(f, allowMissingColumns = true)
-      .withColumn("__last_ts",
-        last(when(col("__is_entity") === 0, col("__ts")), ignoreNulls = true).over(w))
-      .withColumn("__last_feat", last(col("__feat"), ignoreNulls = true).over(w))
-      .filter(col("__is_entity") === 1)
-
-    val fresh = maxAgeSec match {
-      case Some(age) =>
-        col("__last_ts").isNotNull &&
-          unix_micros(col("__last_ts")) <= unix_micros(col(entityTs)) + age * 1000000L
-      case None => col("__last_ts").isNotNull
-    }
+    val matched = col("__last_ts").isNotNull
+    val fresh = maxAgeSec.fold(matched)(age =>
+      matched && withinMaxAge(col("__last_ts"), col(entityTs), age, forward))
 
     attached
       .withColumn(s"${outPrefix}ts", when(fresh, col("__last_ts")))

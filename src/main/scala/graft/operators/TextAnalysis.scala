@@ -1229,8 +1229,9 @@ object TextAnalysis {
     * ride a tiny partial-aggregated groupBy, the cross-bucket running
     * offset is a window over that ≤|langs|×1024-row aggregate, and each
     * doc's exact global running sum = broadcast bucket offset + a
-    * within-bucket window — 1024-way parallelism per language, the same
-    * carry-in sharding discipline as PointInTimeJoin.asofBucketed. Docs
+    * within-bucket window — 1024-way parallelism per language (carry-in
+    * sharding: per-shard summaries, a running offset over them, then
+    * the in-shard window). Docs
     * with equal priority share a bucket (bucket is a function of h), so
     * the sharded sum equals the naive window unconditionally; the DuckDB
     * oracle deliberately computes the NAIVE form, cross-proving the

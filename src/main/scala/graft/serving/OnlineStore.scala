@@ -2,7 +2,7 @@ package graft.serving
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.LatestValue
+import graft.operators.{LatestValue, PointInTimeJoin}
 
 /** Online-store abstraction (reference: storage/api OnlineRetrieverV2 + the
   * redis/cassandra/bigtable connectors). The reference stores exactly one
@@ -226,10 +226,14 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
   def upsertCompacting(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
                        valueCols: Seq[String], eventTsCol: String, maxAgeSec: Long,
                        nowTs: java.sql.Timestamp): Unit = {
-    import org.apache.spark.sql.functions._
-    val cutoff = unix_micros(lit(nowTs)) - maxAgeSec * 1000000L
     stageThenSwap(merge(rows, keys, orderCols, valueCols)
-      .filter(unix_micros(col(eventTsCol)) >= cutoff))
+      .filter(live(eventTsCol, maxAgeSec, nowTs)))
+  }
+
+  /** Rows still inside the TTL at `nowTs` — the serving max-age rule. */
+  private def live(eventTsCol: String, maxAgeSec: Long, nowTs: java.sql.Timestamp) = {
+    import org.apache.spark.sql.functions.{col, lit}
+    PointInTimeJoin.withinMaxAge(col(eventTsCol), lit(nowTs), maxAgeSec)
   }
 
   /** Latest-per-key merge of the incoming batch with the live store (one
@@ -237,14 +241,12 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
   private def merge(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
                     valueCols: Seq[String]): DataFrame = {
     val spark = rows.sparkSession
-    val cols = (keys ++ (orderCols ++ valueCols).distinct).distinct
-    val incoming = LatestValue.latest(rows, keys, orderCols, (orderCols ++ valueCols).distinct)
-      .selectExpr(cols: _*)
+    val carried = (orderCols ++ valueCols).distinct
+    val cols = (keys ++ carried).distinct
+    def latest(df: DataFrame) = LatestValue.latest(df, keys, orderCols, carried).selectExpr(cols: _*)
+    val incoming = latest(rows)
     if (StorePaths.exists(spark, path))
-      LatestValue.latest(
-        spark.read.parquet(path).selectExpr(cols: _*).unionByName(incoming),
-        keys, orderCols, (orderCols ++ valueCols).distinct)
-        .selectExpr(cols: _*)
+      latest(spark.read.parquet(path).selectExpr(cols: _*).unionByName(incoming))
     else incoming
   }
 
@@ -280,17 +282,16 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
               nowTs: java.sql.Timestamp): Long = {
     import org.apache.spark.sql.functions._
     if (!StorePaths.exists(spark, path)) return 0L
-    val cutoff = unix_micros(lit(nowTs)) - maxAgeSec * 1000000L
+    val fresh = live(eventTsCol, maxAgeSec, nowTs)
     // one aggregate pass decides; the rewrite pass only happens when
     // something actually lapsed — at store scale the scans ARE the cost of
     // compaction, so bookkeeping must not add passes of its own
     val lapsed = Option(
       spark.read.parquet(path)
-        .agg(sum(when(unix_micros(col(eventTsCol)) < cutoff, 1L).otherwise(0L)))
+        .agg(sum(when(!fresh, 1L).otherwise(0L)))
         .head().getAs[java.lang.Long](0)).map(_.toLong).getOrElse(0L)
     if (lapsed > 0L)
-      stageThenSwap(spark.read.parquet(path)
-        .filter(unix_micros(col(eventTsCol)) >= cutoff))
+      stageThenSwap(spark.read.parquet(path).filter(fresh))
     lapsed
   }
 }

@@ -1387,8 +1387,6 @@ object ScaleProbe {
       .select(col("user_id"), col("ts"), col("value"))
     time(s"pit_join x$k")(graft.operators.PointInTimeJoin.asof(
       entity, feats, Seq("user_id"), "entity_ts", "ts", Seq("value")).count())
-    time(s"pit_bucketed x$k")(graft.operators.PointInTimeJoin.asofBucketed(
-      entity, feats, Seq("user_id"), "entity_ts", "ts", Seq("value"), 86400L).count())
 
     time(s"corpus_mix x$k")(
       graft.operators.TextAnalysis.corpusMixOf(docs).count())

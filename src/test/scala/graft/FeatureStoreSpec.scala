@@ -265,21 +265,6 @@ class FeatureStoreSpec extends SparkSpecBase {
     assert(ex.getMessage.contains("not found in table typed"))
   }
 
-  test("bucketed-asof facade mode returns identical historical features") {
-    val entities = Seq(
-      (1L, ts("2024-01-03 00:00:00"), 100L),
-      (1L, ts("2024-01-06 00:00:00"), 101L),
-      (3L, ts("2024-01-03 00:00:00"), 102L))
-      .toDF("user_id", "event_timestamp", "row_id")
-    val refs = Seq(FeatureRef("activity", "value"), FeatureRef("activity", "event_type"))
-    def result(fs: FeatureStore) =
-      fs.getHistoricalFeatures(entities, "event_timestamp", refs)
-        .orderBy(col("row_id")).collect().map(_.toSeq).toSeq
-    val bucketed = new FeatureStore(store.registry, spark,
-      asofBucketSec = Some(86400L))
-    assert(result(bucketed) == result(store))
-  }
-
   test("list-valued features flow through retrieval and serving") {
     // reference Value proto has list variants; arrays must survive the
     // as-of join, materialization merge and online lookup unchanged
@@ -536,6 +521,51 @@ class FeatureStoreSpec extends SparkSpecBase {
          r.getAs[String]("activity__value__status"))).toMap
     assert(out(1L) == (None, "OUTSIDE_MAX_AGE"))
     assert(out(2L) == (None, "OUTSIDE_MAX_AGE"))
+  }
+
+  test("a TIMESTAMP_NTZ event time serves like its TIMESTAMP twin, max-age boundary included") {
+    val feats = Seq(
+      (1L, ts("2024-01-01 10:00:00"), 10.0),
+      (1L, ts("2024-01-05 10:00:00"), 11.0),
+      (2L, ts("2024-01-02 10:00:00"), 20.0)).toDF("user_id", "ts", "value")
+    feats.write.mode("overwrite").parquet(s"$workDir/twin-tz")
+    feats.withColumn("ts", col("ts").cast("timestamp_ntz"))
+      .write.mode("overwrite").parquet(s"$workDir/twin-ntz")
+    val r = new Registry
+    r.applyEntity(Entity("user_id", ValueKind.Int64K))
+    for (name <- Seq("tz", "ntz"))
+      r.applyTable(FeatureTable(name, Seq("user_id"), Seq(Feature("value", ValueKind.DoubleK)),
+        maxAgeSec = Some(10L * 86400), eventTsCol = "ts",
+        batchSourcePath = Some(s"$workDir/twin-$name")))
+    val fs2 = new FeatureStore(r, spark)
+    val req = Seq(1L, 2L, 9L).toDF("user_id")
+    def served(name: String, online: ParquetOnlineStore, now: String) =
+      fs2.getOnlineFeatures(online, req, Seq(FeatureRef(name, "value")), lit(ts(now)))
+        .collect().map(rw => rw.getAs[Long]("user_id") ->
+          (Option(rw.getAs[java.lang.Double](s"${name}__value")),
+           rw.getAs[String](s"${name}__value__status"))).toMap
+    val stores = Seq("tz", "ntz").map { name =>
+      val online = new ParquetOnlineStore(s"$workDir/online-$name")
+      fs2.materialize(name, online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
+      name -> online
+    }.toMap
+    // user 2's only row is 2024-01-02 10:00: exactly 10 days old at the
+    // boundary (still fresh), lapsed one microsecond later
+    val boundary = "2024-01-12 10:00:00"
+    for (now <- Seq("2024-01-06 00:00:00", "2024-01-12 09:59:59.999999", boundary,
+                    "2024-01-12 10:00:00.000001", "2024-06-01 00:00:00"))
+      assert(served("ntz", stores("ntz"), now) == served("tz", stores("tz"), now), s"at $now")
+    assert(served("ntz", stores("ntz"), boundary)(2L) == (Some(20.0), "PRESENT"))
+    assert(served("ntz", stores("ntz"), "2024-01-12 10:00:00.000001")(2L) ==
+      (None, "OUTSIDE_MAX_AGE"))
+    assert(served("ntz", stores("ntz"), "2024-01-06 00:00:00")(9L) == (None, "NOT_FOUND"))
+    // the fused TTL merge applies the same rule: lapsed keys are dropped
+    val now = new Timestamp(ts(boundary).getTime); now.setNanos(1000)
+    for (name <- Seq("tz", "ntz"))
+      fs2.materializeCompacting(name, stores(name), "2024-01-01 00:00:00",
+        "2024-02-01 00:00:00", now)
+    assert(served("ntz", stores("ntz"), boundary) == served("tz", stores("tz"), boundary))
+    assert(served("ntz", stores("ntz"), boundary)(2L) == (None, "NOT_FOUND"))
   }
 
   test("getHistoricalFeatures asofMode exposes forward and nearest directions") {

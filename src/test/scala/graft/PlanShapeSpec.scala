@@ -335,6 +335,29 @@ class PlanShapeSpec extends SparkSpecBase {
         ent, fts, Seq("user_id"), "entity_ts", "ts", Seq("value"))
       assert(dataShuffles(near) == 2,
         s"nearest as-of is two chained passes, got ${dataShuffles(near)}")
+      val back = graft.operators.PointInTimeJoin.asof(
+        ent, fts, Seq("user_id"), "entity_ts", "ts", Seq("value"))
+      assert(dataShuffles(back) == 1,
+        s"backward as-of must shuffle once, got ${dataShuffles(back)}")
+      // the facade: one pass per feature table, one more for the label
+      val workDir = Files.createTempDirectory("graft-plan-pit").toString
+      val r = new Registry
+      r.applyEntity(Entity("user_id", ValueKind.Int64K))
+      for (name <- Seq("clicks", "spend")) {
+        fts.write.mode("overwrite").parquet(s"$workDir/$name")
+        r.applyTable(FeatureTable(name, Seq("user_id"),
+          Seq(Feature("value", ValueKind.DoubleK)), eventTsCol = "ts",
+          batchSourcePath = Some(s"$workDir/$name")))
+      }
+      val fs = new FeatureStore(r, spark)
+      val refs = Seq(FeatureRef("clicks", "value"), FeatureRef("spend", "value"))
+      val hist = fs.getHistoricalFeatures(ent, "entity_ts", refs)
+      assert(dataShuffles(hist) == 2,
+        s"two-table retrieval is two as-of passes, got ${dataShuffles(hist)}")
+      val train = fs.getTrainingSet(ent, "entity_ts", refs,
+        FeatureRef("spend", "value"), labelWindowSec = 86400L)
+      assert(dataShuffles(train) == 3,
+        s"training set adds one forward label pass, got ${dataShuffles(train)}")
     }
   }
 

@@ -84,6 +84,23 @@ class Round15OpsSpec extends SparkSpecBase {
     }
   }
 
+  test("driver union-find labels a StarDriverCap-node path of hashed ids without overflow") {
+    // a path over hashed 64-bit ids, edges in canonical (greater, lesser)
+    // form: fed in path order, an unranked union chains the roots into
+    // one deep list, and hashed ids defeat the ascending HashMap visit order
+    // that compresses sequential-id chains as a side effect, so a
+    // recursive find overflows the stack here. A shuffled order must agree.
+    val n = Components.StarDriverCap.toInt
+    val ids = (0L until n.toLong).map(scala.util.hashing.byteswap64)
+    val path = ids.sliding(2).map(p => (p.max, p.min)).toVector
+    for (edges <- Seq(path, new scala.util.Random(212).shuffle(path))) {
+      val labels = Components.unionFindMinLabels(edges)
+      assert(labels.size == n)
+      assert(labels.map(_._2).toSet == Set(ids.min),
+        "the path must be one component labeled by its min id")
+    }
+  }
+
   test("mixed corpus (cliques + planted deep chain): exact from any entry round") {
     val rnd = new scala.util.Random(151)
     for (trial <- 1 to 4) {
