@@ -533,8 +533,9 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     derived.drop(helperCols: _*)
   }
 
-  /** The feature-table half of online retrieval: semi-filtered snapshot
-    * lookup + per-field status per requested table ref. */
+  /** The feature-table half of online retrieval, one table at a time:
+    * semi-filter the snapshot by the request keys, left-join the hits onto
+    * the request, then emit the table's statuses and values in one select. */
   private def lookupOnline(store: OnlineStore, requestDf: DataFrame,
                            refs: Seq[FeatureRef], requestTs: Column): DataFrame = {
     refs.groupBy(_.table).toSeq.sortBy(_._1).foldLeft(requestDf) {
@@ -555,20 +556,25 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
         // keys — the snapshot streams once, never shuffles, and the output
         // is at most |request keys| rows; (2) broadcast that tiny filtered
         // snapshot into the left join that preserves every request row.
-        val reqKeys = acc.select(t.entities.map(col): _*).distinct()
-        val hit = stored.join(broadcast(reqKeys), t.entities, "left_semi")
+        // The key side is the request itself, not `acc`: it carries none of
+        // the earlier tables' lookup joins, and a semi join ignores
+        // duplicate build keys, so a distinct would only add a shuffle.
+        val requestKeys = requestDf.select(t.entities.map(col): _*)
+        val hit = stored.join(broadcast(requestKeys), t.entities, "left_semi")
         val joined = acc.join(broadcast(hit), t.entities, "left")
         val fresh = t.maxAgeSec.fold(lit(true))(age =>
           PointInTimeJoin.withinMaxAge(col(t.eventTsCol), requestTs, age))
-        trefs.foldLeft(joined) { (df, r) =>
+        val lookupCols = (t.eventTsCol +: trefs.map(_.feature)).toSet
+        val served = trefs.flatMap { r =>
           val out = s"${tname}__${r.feature}"
-          df.withColumn(out + "__status",
-              when(col(t.eventTsCol).isNull, lit("NOT_FOUND"))
+          Seq(when(col(t.eventTsCol).isNull, lit("NOT_FOUND"))
                 .when(!fresh, lit("OUTSIDE_MAX_AGE"))
                 .when(col(r.feature).isNull, lit("NULL_VALUE"))
-                .otherwise(lit("PRESENT")))
-            .withColumn(out, when(fresh, col(r.feature)))
-        }.drop(t.eventTsCol).drop(trefs.map(_.feature): _*)
+                .otherwise(lit("PRESENT")).as(out + "__status"),
+              when(fresh, col(r.feature)).as(out))
+        }
+        joined.select(
+          joined.columns.filterNot(lookupCols).map(c => col(s"`$c`")) ++ served: _*)
     }
   }
 }

@@ -341,7 +341,9 @@ object FeatureOps {
     * statuses. The store is a read-only view (snapshot = latest event per
     * user computed on the fly) so the gate query stays deterministic and
     * writes nothing; the lookup itself is the exact production path —
-    * semi-filtered snapshot, broadcast request keys, per-field statuses.
+    * the snapshot semi-filtered by the broadcast request keys, the hits
+    * broadcast into the request-preserving left join, and each table's
+    * statuses and values emitted in one select.
     * The single-row max(ts) collect fixes the serving "now" (the same
     * driver-side traffic class as the quantizer training loops). */
   def serveOnlineOdfv(spark: SparkSession, dir: String): DataFrame = {

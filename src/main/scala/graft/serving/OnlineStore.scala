@@ -1,6 +1,7 @@
 package graft.serving
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{LatestValue, PointInTimeJoin}
 
@@ -207,8 +208,17 @@ final class MaterializationLog(path: String) {
 
 /** Parquet-directory store: durable, idempotent upserts via read-merge-write.
   * At cluster scale this would be a KV connector (the merge itself is the
-  * same single-pass LatestValue aggregation). */
+  * same single-pass LatestValue aggregation).
+  *
+  * Every read lists the directory, but the handle keeps the schema it last
+  * wrote or inferred together with the part files it holds for: while a
+  * read lists exactly those files, it skips parquet schema inference (a
+  * Spark job per read). Another handle's swap leaves other part files, so
+  * its rows and schema are re-read, never hidden. */
 final class ParquetOnlineStore(path: String) extends OnlineStore {
+
+  /** (part files, their schema) from this handle's last write or inference. */
+  @volatile private var known: Option[(Set[String], StructType)] = None
 
   override def upsert(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
                       valueCols: Seq[String]): Unit =
@@ -246,7 +256,7 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
     def latest(df: DataFrame) = LatestValue.latest(df, keys, orderCols, carried).selectExpr(cols: _*)
     val incoming = latest(rows)
     if (StorePaths.exists(spark, path))
-      latest(spark.read.parquet(path).selectExpr(cols: _*).unionByName(incoming))
+      latest(snapshot(spark).selectExpr(cols: _*).unionByName(incoming))
     else incoming
   }
 
@@ -262,10 +272,24 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
     if (fsys.exists(target)) fsys.delete(target, true)
     require(fsys.rename(new org.apache.hadoop.fs.Path(staging), target),
       s"swap failed: $path")
+    known = Some((partFiles(spark.read.schema(replacement.schema).parquet(path)),
+      replacement.schema))
   }
 
+  /** Names of the data files a read lists (file metadata, no data scan). */
+  private def partFiles(df: DataFrame): Set[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+
+  /** The live store, read with the known schema while it lists the files
+    * that schema holds for, else inferred once and remembered. */
   override def snapshot(spark: SparkSession): DataFrame =
-    spark.read.parquet(path)
+    known.map { case (files, schema) => (files, spark.read.schema(schema).parquet(path)) }
+      .collect { case (files, df) if partFiles(df) == files => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        known = Some((partFiles(df), df.schema))
+        df
+      }
 
   /** TTL compaction: drop keys whose latest row is already older than
     * `maxAgeSec` at `nowTs` — those rows can only ever serve
@@ -287,11 +311,11 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
     // something actually lapsed — at store scale the scans ARE the cost of
     // compaction, so bookkeeping must not add passes of its own
     val lapsed = Option(
-      spark.read.parquet(path)
+      snapshot(spark)
         .agg(sum(when(!fresh, 1L).otherwise(0L)))
         .head().getAs[java.lang.Long](0)).map(_.toLong).getOrElse(0L)
     if (lapsed > 0L)
-      stageThenSwap(spark.read.parquet(path).filter(fresh))
+      stageThenSwap(snapshot(spark).filter(fresh))
     lapsed
   }
 }

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.catalyst.optimizer.{BuildRight, BuildSide}
 import org.apache.spark.sql.catalyst.plans.{LeftOuter, LeftSemi}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -42,10 +42,25 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
+  /** Every broadcast left-semi key filter must build from the request
+    * keys alone: a join on its build side means a later table's key side
+    * re-broadcasts the earlier tables' lookups. */
+  private def assertKeySidesJoinFree(plan: SparkPlan): Unit = {
+    val semis = plan.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(semis.nonEmpty, "expected a broadcast left-semi key filter")
+    semis.foreach { s =>
+      val joins = s.right.collect { case j: BaseJoinExec => j.nodeName }
+      assert(joins.isEmpty, s"left-semi key side carries joins: ${joins.mkString(", ")}")
+    }
+  }
+
   test("serve_online never broadcasts the store snapshot side") {
     withoutAqe {
-      assertLookupShape(
-        FeatureOps.serveOnline(spark, sfDir).queryExecution.executedPlan)
+      val plan = FeatureOps.serveOnline(spark, sfDir).queryExecution.executedPlan
+      assertLookupShape(plan)
+      assertKeySidesJoinFree(plan)
     }
   }
 
@@ -67,10 +82,26 @@ class PlanShapeSpec extends SparkSpecBase {
         Seq(FeatureRef("activity", "value")),
         lit(Timestamp.valueOf("2024-01-02 00:00:00")))
       assertLookupShape(df.queryExecution.executedPlan)
+      assertKeySidesJoinFree(df.queryExecution.executedPlan)
       // semantics unchanged by the plan shape
       val out = df.collect().map(rw => rw.getAs[Long]("user_id") ->
         rw.getAs[String]("activity__value__status")).toMap
       assert(out == Map(1L -> "PRESENT", 9L -> "NOT_FOUND"))
+    }
+  }
+
+  test("a two-table online read keys each table's semi filter on the request alone") {
+    withoutAqe {
+      val (fs, store) = OnlineLookupSpec.twoEntityFixture(spark)
+      val df = fs.getOnlineFeatures(store,
+        Seq((1L, 100L), (3L, 300L)).toDF("user_id", "item_id"),
+        Seq(FeatureRef("users", "level"), FeatureRef("items", "rating")),
+        lit(Timestamp.valueOf("2024-01-02 00:00:00")))
+      val plan = df.queryExecution.executedPlan
+      assertLookupShape(plan)
+      assertKeySidesJoinFree(plan)
+      assert(plan.collect { case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }
+        .size == 2)
     }
   }
 
