@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{FeatureRef, FeatureTable, OnDemandFeature, OnDemandView, Project, Registry}
 import graft.operators.{LatestValue, PointInTimeJoin}
-import graft.serving.OnlineStore
+import graft.serving.{OnlineStore, ParquetOnlineStore}
 import graft.sources.BatchSource
 
 /** The user-facing API: the reference's three core operations on one object
@@ -402,25 +402,23 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * they are dropped inside the SAME read-merge-write the upsert pays
     * anyway (ParquetOnlineStore.upsertCompacting) — the steady-state
     * ingestion loop gets TTL hygiene for free instead of running a
-    * separate compact scan per cycle. Tables without a max_age, or stores
-    * without the fused path, fall back to the plain [[materialize]]. */
-  def materializeCompacting(tableName: String, store: OnlineStore,
+    * separate compact scan per cycle. A table without a max_age does a
+    * plain upsert. */
+  def materializeCompacting(tableName: String, store: ParquetOnlineStore,
                             startInclusive: String, endExclusive: String,
                             nowTs: java.sql.Timestamp): Unit = {
     val t = table(tableName)
-    (store, t.maxAgeSec) match {
-      case (p: graft.serving.ParquetOnlineStore, Some(maxAge)) =>
-        toStore(t, BatchSource.readRange(spark, sourceOf(t), startInclusive, endExclusive))(
-          p.upsertCompacting(_, _, _, _, t.eventTsCol, maxAge, nowTs))
-      case _ => materialize(tableName, store, startInclusive, endExclusive)
-    }
+    toStore(t, BatchSource.readRange(spark, sourceOf(t), startInclusive, endExclusive))(
+      t.maxAgeSec.fold(store.upsert _)(maxAge =>
+        store.upsertCompacting(_, _, _, _, t.eventTsCol, maxAge, nowTs)))
   }
 
   /** Incremental materialization: materialize only [last-completed-end,
     * upToExclusive) as recorded in `log`, then record the new window
     * (reference: JobService's ingestion-job tracking is what makes
     * "materialize the delta" possible instead of re-reading history).
-    * Returns the window materialized, or None when already up to date. */
+    * Returns the window materialized, or None when already up to date.
+    * Bounds compare as Spark reads them (a 'T' or a ' ' separator). */
   def materializeIncremental(tableName: String, store: OnlineStore,
                              log: graft.serving.MaterializationLog,
                              upToExclusive: String,
@@ -429,7 +427,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       : Option[(String, String)] = {
     val start = log.lastEndExclusive(spark, project, tableName, storeName)
       .getOrElse(origin)
-    if (start >= upToExclusive) None
+    if (boundMicros(start) >= boundMicros(upToExclusive)) None
     else {
       val t = table(tableName)
       val rows = BatchSource.readRange(spark, sourceOf(t), start, upToExclusive)
@@ -438,6 +436,16 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       log.record(spark, project, tableName, storeName, start, upToExclusive, n)
       Some((start, upToExclusive))
     }
+  }
+
+  /** A window bound as Spark's string → TIMESTAMP cast reads it (the cast
+    * [[BatchSource.readRange]] applies), evaluated on the driver: no job. */
+  private def boundMicros(bound: String): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    Option(Cast(Literal(bound), org.apache.spark.sql.types.TimestampType,
+        Some(spark.conf.get("spark.sql.session.timeZone"))).eval())
+      .map(_.asInstanceOf[Long])
+      .getOrElse(throw new IllegalArgumentException(s"not a timestamp: $bound"))
   }
 
   /** Stream half of materialization (reference: ingestion into the online
@@ -481,7 +489,7 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * declared a store in the registry gets a working handle back for
     * [[getOnlineFeatures]]. */
   def materializeSubscribed(storeName: String, startInclusive: String,
-                            endExclusive: String): (OnlineStore, Seq[String]) = {
+                            endExclusive: String): (ParquetOnlineStore, Seq[String]) = {
     val spec = registry.getStore(storeName).getOrElse(
       throw new IllegalArgumentException(s"unknown store: $storeName"))
     val store = OnlineStore.fromSpec(spec)

@@ -286,34 +286,53 @@ object FeatureOps {
       |FROM jc JOIN jv ON jc.row_id = jv.row_id AND jv.rn = 1
       |WHERE jc.rn = 1 ORDER BY jc.row_id""".stripMargin
 
-  /** Online serving: latest value per requested key at request time, with the
-    * reference's field statuses (OnlineServingServiceV2.getMetadata /
-    * checkOutsideMaxAge): PRESENT / OUTSIDE_MAX_AGE / NOT_FOUND. */
+  /** Online serving end-to-end through the facade
+    * (`FeatureStore.getOnlineFeatures`): latest value per requested key at
+    * request time, with the reference's field statuses
+    * (OnlineServingServiceV2.getMetadata / checkOutsideMaxAge) under a 4 h
+    * max-age table. The store is a read-only [[viewStore]] of the latest
+    * event per user, and the collected max(ts) is the serving "now" — the
+    * serve_online_odfv discipline. `events.value` is never null in the
+    * gate corpora, so the facade's NULL_VALUE branch never fires and the
+    * statuses are PRESENT / OUTSIDE_MAX_AGE / NOT_FOUND. */
   def serveOnline(spark: SparkSession, dir: String): DataFrame = {
+    val r = new graft.model.Registry
+    r.applyEntity(graft.model.Entity("user_id", graft.model.ValueKind.Int64K))
+    r.applyTable(graft.model.FeatureTable(
+      name = "user_latest", entities = Seq("user_id"),
+      features = Seq(graft.model.Feature("value", graft.model.ValueKind.DoubleK)),
+      maxAgeSec = Some(4L * 3600), eventTsCol = "ts",
+      batchSourcePath = Some(s"$dir/events.parquet"),
+      labels = Map("graft.ts_unit" -> "nanos")))
+    val fs = new graft.FeatureStore(r, spark)
     val ev = Tables.events(spark, dir)
-    val maxAgeSec = 4L * 3600
-    val latest = LatestValue.latest(ev, keys = Seq("user_id"),
-      orderCols = Seq("ts", "event_id"), valueCols = Seq("ts", "value"))
-    val reqTs = ev.agg(max(col("ts")).as("req_ts"))
-    val stale = unix_micros(col("ts")) < unix_micros(col("req_ts")) - maxAgeSec * 1000000L
-    // Never broadcast the store snapshot (one row per entity key — unbounded
-    // at scale). An outer join can only build its non-preserved side, so:
-    // left-semi filter the snapshot by the broadcast request keys (snapshot
-    // streams once, output ≤ |requests| rows), then broadcast the tiny
-    // filtered snapshot into the request-preserving left join.
-    val requests = spark.range(0, 20).select(col("id").as("user_id"))
-    val hit = latest.join(broadcast(requests), Seq("user_id"), "left_semi")
-    requests
-      .crossJoin(broadcast(reqTs))
-      .join(broadcast(hit), Seq("user_id"), "left")
-      .select(
-        col("user_id"),
-        when(col("ts").isNotNull && !stale, col("value")).as("value"),
-        when(col("ts").isNull, lit("NOT_FOUND"))
-          .when(stale, lit("OUTSIDE_MAX_AGE"))
-          .otherwise(lit("PRESENT")).as("status"))
+    val reqTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+    fs.getOnlineFeatures(viewStore(latestEvent(ev)),
+        spark.range(0, 20).select(col("id").as("user_id")),
+        Seq(graft.model.FeatureRef("user_latest", "value")),
+        lit(reqTs).cast("timestamp")) // cast: a null max-ts (empty corpus) must stay TIMESTAMP-typed
+      .select(col("user_id"), col("user_latest__value").as("value"),
+        col("user_latest__value__status").as("status"))
       .orderBy(col("user_id"))
   }
+
+  /** Latest event per user, tagged with the default project — the store
+    * contents the view-store gates serve. */
+  private def latestEvent(ev: DataFrame): DataFrame =
+    LatestValue.latest(ev, keys = Seq("user_id"),
+        orderCols = Seq("ts", "event_id"), valueCols = Seq("ts", "value"))
+      .withColumn("__project", lit("default"))
+
+  /** A read-only online store whose snapshot is `contents`, computed on the
+    * fly: the gate queries stay deterministic and write nothing, while the
+    * read goes through the production facade. */
+  private def viewStore(contents: DataFrame): graft.serving.OnlineStore =
+    new graft.serving.OnlineStore {
+      override def upsert(rows: DataFrame, keys: Seq[String],
+                          orderCols: Seq[String], valueCols: Seq[String]): Unit =
+        throw new UnsupportedOperationException("read-only view store")
+      override def snapshot(s: SparkSession): DataFrame = contents
+    }
 
   val serveOnlineSql: String =
     """WITH req AS (SELECT user_id FROM range(0, 20) t(user_id)),
@@ -350,17 +369,8 @@ object FeatureOps {
     val reg = Registry.demo(dir)
     val fs = new graft.FeatureStore(reg, spark)
     val ev = Tables.events(spark, dir)
-    val latest = LatestValue.latest(ev, keys = Seq("user_id"),
-        orderCols = Seq("ts", "event_id"), valueCols = Seq("ts", "value"))
-      .withColumn("__project", lit("default"))
-    val viewStore = new graft.serving.OnlineStore {
-      override def upsert(rows: DataFrame, keys: Seq[String],
-                          orderCols: Seq[String], valueCols: Seq[String]): Unit =
-        throw new UnsupportedOperationException("read-only view store")
-      override def snapshot(s: SparkSession): DataFrame = latest
-    }
     val reqTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    fs.getOnlineFeatures(viewStore,
+    fs.getOnlineFeatures(viewStore(latestEvent(ev)),
         spark.range(0, 20).select(col("id").as("user_id")),
         Seq(graft.model.FeatureRef("user_activity", "value"),
           graft.model.FeatureRef("activity_derived", "value_x2"),
@@ -728,17 +738,8 @@ object FeatureOps {
       labels = Map("graft.ts_unit" -> "nanos")))
     val fs = new graft.FeatureStore(r, spark)
     val ev = Tables.events(spark, dir)
-    val partial = LatestValue.latest(ev.filter(pmod(col("event_id"), lit(2)) === 0),
-        keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
-        valueCols = Seq("ts", "value"))
-      .withColumn("__project", lit("default"))
-    val viewStore = new graft.serving.OnlineStore {
-      override def upsert(rows: DataFrame, keys: Seq[String],
-                          orderCols: Seq[String], valueCols: Seq[String]): Unit =
-        throw new UnsupportedOperationException("read-only view store")
-      override def snapshot(s: SparkSession): DataFrame = partial
-    }
-    fs.auditStore("user_activity_audit", viewStore, "2100-01-01 00:00:00")
+    val partial = latestEvent(ev.filter(pmod(col("event_id"), lit(2)) === 0))
+    fs.auditStore("user_activity_audit", viewStore(partial), "2100-01-01 00:00:00")
   }
 
   val storeAuditSql: String =

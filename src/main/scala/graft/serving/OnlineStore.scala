@@ -29,25 +29,34 @@ object OnlineStore {
     * store config → retriever): a store DECLARED in the registry becomes a
     * USABLE handle without the caller knowing connector classes.
     *
-    * Types: "parquet" → [[ParquetOnlineStore]] at `config("path")`;
-    * "memory" → [[MemoryOnlineStore]] (per-name singleton, so every handle
-    * to the same declared store shares state the way two clients of one
-    * Redis do). Unknown types fail fast, mirroring Store.fromProto's
-    * "Unsupported store type" error. */
-  def fromSpec(spec: graft.model.StoreSpec): OnlineStore =
+    * Both types build a [[ParquetOnlineStore]]: "parquet" at
+    * `config("path")`; "memory" under its own random subdir of the
+    * `graft.snapstore.dir` session conf (on a real cluster point it at
+    * SHARED storage — executors cannot reach a driver-local tmpdir), or of
+    * a driver-local temp dir when unset (local mode only). A "memory" store
+    * is a per-name singleton, so every handle to the same declared store
+    * shares state the way two clients of one Redis do. Unknown types fail
+    * fast, mirroring Store.fromProto's "Unsupported store type" error. */
+  def fromSpec(spec: graft.model.StoreSpec): ParquetOnlineStore =
     spec.storeType.toLowerCase match {
       case "parquet" =>
         val path = spec.config.getOrElse("path", throw new IllegalArgumentException(
           s"store ${spec.name}: parquet store requires config key 'path'"))
         new ParquetOnlineStore(path)
       case "memory" =>
-        memoryStores.getOrElseUpdate(spec.name, new MemoryOnlineStore)
+        memoryStores.getOrElseUpdate(spec.name, {
+          val root = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+            .flatMap(_.conf.getOption("graft.snapstore.dir"))
+            .getOrElse(java.nio.file.Files.createTempDirectory("graft_snapstore").toString)
+          new ParquetOnlineStore(
+            root + "/snap_" + java.util.UUID.randomUUID().toString.take(12) + "/store")
+        })
       case other =>
         throw new IllegalArgumentException(s"Unsupported store type: $other")
     }
 
   private val memoryStores =
-    scala.collection.concurrent.TrieMap.empty[String, MemoryOnlineStore]
+    scala.collection.concurrent.TrieMap.empty[String, ParquetOnlineStore]
 }
 
 /** Hadoop-FileSystem path helpers: store/log paths must resolve through the
@@ -87,11 +96,17 @@ private[graft] object StorePaths {
     val tmp = new org.apache.hadoop.fs.Path(
       p.getParent, p.getName + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
     val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    if (f.exists(p)) f.delete(p, true)
-    if (!f.rename(tmp, p))
-      throw new java.io.IOException(s"atomic artifact rename failed: $tmp -> $p")
+    try {
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp.toString)
+      if (f.exists(p)) f.delete(p, true)
+      if (!f.rename(tmp, p))
+        throw new java.io.IOException(s"atomic artifact rename failed: $tmp -> $p")
+    } catch {
+      // a failed write leaves its output dir behind, and the GC in
+      // cachedArtifact never touches '.tmp-' names: drop it here
+      case e: Throwable => f.delete(tmp, true); throw e
+    }
   }
 
   /** THE fingerprinted-artifact discipline, factored once (trade edges,
@@ -190,7 +205,9 @@ final class MaterializationLog(path: String) {
   }
 
   /** Exclusive end of the latest completed window for (project, table,
-    * store), i.e. the next run's inclusive start. */
+    * store), i.e. the next run's inclusive start. Ends are ordered as
+    * timestamps, not strings: callers may write a bound with a 'T' or a
+    * ' ' separator, and 'T' > ' ' would rank an earlier end last. */
   def lastEndExclusive(spark: SparkSession, project: String, table: String,
                        storeName: String): Option[String] = {
     if (!StorePaths.exists(spark, path)) return None
@@ -198,7 +215,7 @@ final class MaterializationLog(path: String) {
     spark.read.parquet(path)
       .filter(col("project") === project && col("table_name") === table &&
         col("store_name") === storeName)
-      .agg(max(col("end_ts")))
+      .agg(max_by(col("end_ts"), col("end_ts").cast("timestamp")))
       .collect().headOption.flatMap(r => Option(r.getString(0)))
   }
 
@@ -222,11 +239,11 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
 
   override def upsert(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
                       valueCols: Seq[String]): Unit =
-    stageThenSwap(merge(rows, keys, orderCols, valueCols))
+    swap(merge(rows, keys, orderCols, valueCols))
 
   /** Upsert with the TTL cutoff fused into the merge's single read: rows
     * (existing or incoming) whose event time already lapsed are dropped in
-    * the same stage-then-swap write the merge pays anyway. A separate
+    * the same atomic swap the merge pays anyway. A separate
     * [[compact]] pass re-scans the whole store AFTER upsert just read it —
     * at store scale the scans ARE the cost of maintenance, so the steady
     * state (periodic materialize + TTL hygiene) should pay one read, not
@@ -236,7 +253,7 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
   def upsertCompacting(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
                        valueCols: Seq[String], eventTsCol: String, maxAgeSec: Long,
                        nowTs: java.sql.Timestamp): Unit = {
-    stageThenSwap(merge(rows, keys, orderCols, valueCols)
+    swap(merge(rows, keys, orderCols, valueCols)
       .filter(live(eventTsCol, maxAgeSec, nowTs)))
   }
 
@@ -246,32 +263,28 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
     PointInTimeJoin.withinMaxAge(col(eventTsCol), lit(nowTs), maxAgeSec)
   }
 
-  /** Latest-per-key merge of the incoming batch with the live store (one
-    * read of the existing contents; no write). */
+  /** Latest-per-key merge of the incoming batch with the live store: ONE
+    * latest over store ∪ batch (one read of the existing contents, one
+    * aggregate exchange; no write). */
   private def merge(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
                     valueCols: Seq[String]): DataFrame = {
     val spark = rows.sparkSession
     val carried = (orderCols ++ valueCols).distinct
     val cols = (keys ++ carried).distinct
-    def latest(df: DataFrame) = LatestValue.latest(df, keys, orderCols, carried).selectExpr(cols: _*)
-    val incoming = latest(rows)
-    if (StorePaths.exists(spark, path))
-      latest(snapshot(spark).selectExpr(cols: _*).unionByName(incoming))
-    else incoming
+    val batch = rows.selectExpr(cols: _*)
+    val all =
+      if (StorePaths.exists(spark, path)) snapshot(spark).selectExpr(cols: _*).unionByName(batch)
+      else batch
+    LatestValue.latest(all, keys, orderCols, carried).selectExpr(cols: _*)
   }
 
-  /** Stage-then-swap write discipline shared by upsert and compact: the
-    * computation reads the live path, so materialize fully into a staging
-    * dir first, then replace via the path's own FileSystem (works on
-    * HDFS/S3A the same as on local disk; no driver collect). */
-  private def stageThenSwap(replacement: DataFrame): Unit = {
+  /** Replace the store with `replacement` through
+    * [[StorePaths.writeParquetAtomic]] (the computation reads the live
+    * path, so it is staged fully before the swap), then remember the new
+    * part files and their schema. */
+  private def swap(replacement: DataFrame): Unit = {
     val spark = replacement.sparkSession
-    val staging = path + "__staging"
-    replacement.write.mode("overwrite").parquet(staging)
-    val (fsys, target) = StorePaths.fs(spark, path)
-    if (fsys.exists(target)) fsys.delete(target, true)
-    require(fsys.rename(new org.apache.hadoop.fs.Path(staging), target),
-      s"swap failed: $path")
+    StorePaths.writeParquetAtomic(replacement, path)
     known = Some((partFiles(spark.read.schema(replacement.schema).parquet(path)),
       replacement.schema))
   }
@@ -297,9 +310,9 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
     * store pays for on every merge and snapshot scan. Serving semantics
     * change only from OUTSIDE_MAX_AGE to NOT_FOUND (both serve no value);
     * the reference's TTL stores (e.g. per-key Redis expiry) make the same
-    * transition when a key lapses. Same stage-then-swap write discipline
-    * as upsert. This standalone pass exists for TTL hygiene BETWEEN
-    * ingestion runs; the steady-state materialize loop should use
+    * transition when a key lapses. Same atomic swap as upsert. This
+    * standalone pass exists for TTL hygiene BETWEEN ingestion runs; the
+    * steady-state materialize loop should use
     * [[upsertCompacting]], which fuses the same cutoff into the merge's
     * single read instead of paying a second full store scan. */
   def compact(spark: SparkSession, eventTsCol: String, maxAgeSec: Long,
@@ -315,50 +328,7 @@ final class ParquetOnlineStore(path: String) extends OnlineStore {
         .agg(sum(when(!fresh, 1L).otherwise(0L)))
         .head().getAs[java.lang.Long](0)).map(_.toLong).getOrElse(0L)
     if (lapsed > 0L)
-      stageThenSwap(snapshot(spark).filter(fresh))
+      swap(snapshot(spark).filter(fresh))
     lapsed
   }
-}
-
-/** Snapshot-store template behind the "memory" StoreSpec type — the
-  * DEFAULT demo store. Earlier builds held collected Rows on the driver
-  * (fine for specs, but a wide key space would have made the DRIVER the
-  * store); contents now live as a parquet snapshot under a managed
-  * scratch path with [[ParquetOnlineStore]]'s distributed latest-merge
-  * and stage-then-swap write — NO collect anywhere in the upsert path,
-  * so a declared demo store scales exactly like the durable one. The
-  * per-name singleton handed out by [[OnlineStore.fromSpec]] keeps the
-  * reference semantics (two handles to one declared store share state
-  * like two clients of one Redis); a real KV connector swaps the
-  * snapshot read/write for client put/get calls, nothing else.
-  *
-  * Scratch path: the `graft.snapstore.dir` session conf, when set, roots
-  * every snapshot store there (each instance under its own random subdir)
-  * — on a real cluster point it at SHARED storage, because executors
-  * cannot reach a driver-local tmpdir. The default (a driver-local temp
-  * directory) is LOCAL-MODE ONLY, which is exactly the demo/spec scope
-  * this store exists for. */
-final class MemoryOnlineStore extends OnlineStore {
-  @volatile private var inner: ParquetOnlineStore = _
-  @volatile private var touched = false
-
-  private def innerFor(spark: SparkSession): ParquetOnlineStore = synchronized {
-    if (inner == null) {
-      val base = spark.conf.getOption("graft.snapstore.dir")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft_snapstore").toString)
-      inner = new ParquetOnlineStore(
-        base + "/snap_" + java.util.UUID.randomUUID().toString.take(12) + "/store")
-    }
-    inner
-  }
-
-  override def upsert(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
-                      valueCols: Seq[String]): Unit = {
-    innerFor(rows.sparkSession).upsert(rows, keys, orderCols, valueCols)
-    touched = true
-  }
-
-  override def snapshot(spark: SparkSession): DataFrame =
-    if (touched) innerFor(spark).snapshot(spark)
-    else throw new IllegalStateException("empty online store")
 }

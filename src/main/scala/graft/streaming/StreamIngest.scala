@@ -765,8 +765,8 @@ object StreamIngest {
     * per-day register table, and serve the trailing-7-day WAU curve from
     * it — the serving loop the batch gate (`events_wau_sketch`) proved
     * the register algebra for. foreachBatch max-merges each micro-batch
-    * into the parquet table (read-merge-write with the stage-then-swap
-    * discipline): element-wise MAX is idempotent/commutative/monotone,
+    * into the parquet table (read-merge-write through the
+    * StorePaths.writeParquetAtomic swap): element-wise MAX is idempotent/commutative/monotone,
     * so update-mode re-emissions, re-deliveries, and arbitrary batch
     * boundaries all converge to the same table — which is why the merge
     * needs no transactional log, only atomic replacement. The curve

@@ -240,6 +240,32 @@ class FeatureStoreSpec extends SparkSpecBase {
     assert(log.entries(spark).count() == 2)
   }
 
+  test("incremental windows order 'T' and ' ' separated bounds as timestamps") {
+    import graft.serving.MaterializationLog
+    val base = s"$workDir/incr-sep"
+    Seq((1L, ts("2024-01-10 10:00:00"), 1.0), (2L, ts("2024-01-10 15:00:00"), 2.0))
+      .toDF("user_id", "ts", "value").write.mode("overwrite").parquet(s"$base/src")
+    val r = new Registry
+    r.applyEntity(Entity("user_id", ValueKind.Int64K))
+    r.applyTable(FeatureTable("incr_sep", Seq("user_id"),
+      Seq(Feature("value", ValueKind.DoubleK)), eventTsCol = "ts",
+      batchSourcePath = Some(s"$base/src")))
+    val fs = new FeatureStore(r, spark)
+    val online = new ParquetOnlineStore(s"$base/store")
+    val log = new MaterializationLog(s"$base/log")
+    assert(fs.materializeIncremental("incr_sep", online, log, "2024-01-10T12:00:00")
+      .contains(("1970-01-01 00:00:00", "2024-01-10T12:00:00")))
+    // as strings ' ' < 'T', yet six hours are pending
+    assert(fs.materializeIncremental("incr_sep", online, log, "2024-01-10 18:00:00")
+      .contains(("2024-01-10T12:00:00", "2024-01-10 18:00:00")))
+    assert(log.lastEndExclusive(spark, Project.Default, "incr_sep", "default")
+      .contains("2024-01-10 18:00:00"))
+    assert(fs.materializeIncremental("incr_sep", online, log, "2024-01-10T18:00:00").isEmpty)
+    val snap = online.snapshot(spark).collect()
+      .map(rw => rw.getAs[Long]("user_id") -> rw.getAs[Double]("value")).toMap
+    assert(snap == Map(1L -> 1.0, 2L -> 2.0))
+  }
+
   test("features are cast to registry-declared types; unknown features fail fast") {
     // source stores value as BIGINT; registry declares INT32 + DOUBLE views
     val feats = Seq((1L, ts("2024-01-01 00:00:00"), 41L))
@@ -376,7 +402,7 @@ class FeatureStoreSpec extends SparkSpecBase {
     // seed: user 1 fresh (Jan 05), user 2 stale (Jan 02)
     store.materialize("activity", online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
     // one fused call at Jan 11 with a 7-day TTL: merges a new batch for
-    // user 3 AND drops user 2 in the same stage-then-swap write
+    // user 3 AND drops user 2 in the same atomic swap
     import spark.implicits._
     // same row shape materialize upserts: the __project key namespaces keys
     val batch = Seq(("default", 3L, ts("2024-01-10 00:00:00"), 9.5, "click"))
@@ -414,14 +440,14 @@ class FeatureStoreSpec extends SparkSpecBase {
         rw.getAs[String]("activity__value__status")).toMap
     assert(out(1L) == "PRESENT")
     assert(out(2L) == "NOT_FOUND")
-    // a store without the fused path falls back to the plain upsert
-    val mem = new graft.serving.MemoryOnlineStore
+    // a declared "memory" store is the same store class: it drops the key too
+    val mem = graft.serving.OnlineStore.fromSpec(StoreSpec("ttl-mem", "memory"))
     store.materializeCompacting("activity", mem,
       "2024-01-01 00:00:00", "2024-02-01 00:00:00", ts("2024-01-13 00:00:00"))
     val memOut = store.getOnlineFeatures(mem, Seq(2L).toDF("user_id"),
         Seq(FeatureRef("activity", "value")), lit(ts("2024-01-13 00:00:00")))
       .head().getAs[String]("activity__value__status")
-    assert(memOut == "OUTSIDE_MAX_AGE") // plain path keeps the lapsed key
+    assert(memOut == "NOT_FOUND")
   }
 
   test("project namespacing isolates online keys sharing one store") {
@@ -499,6 +525,17 @@ class FeatureStoreSpec extends SparkSpecBase {
     import graft.serving.OnlineStore
     assert(OnlineStore.fromSpec(StoreSpec("m1", "memory")) eq
            OnlineStore.fromSpec(StoreSpec("m1", "memory")))
+    // a declared store that was never written has no snapshot
+    assertThrows[org.apache.spark.sql.AnalysisException](
+      OnlineStore.fromSpec(StoreSpec("m-empty", "memory")).snapshot(spark))
+    // a memory store lives under the graft.snapstore.dir root when it is set
+    val snapRoot = s"$workDir/snaproot"
+    spark.conf.set("graft.snapstore.dir", snapRoot)
+    try OnlineStore.fromSpec(StoreSpec("m-rooted", "memory")).upsert(
+      Seq((1L, ts("2024-01-01 10:00:00"), 1.0)).toDF("user_id", "ts", "value"),
+      Seq("user_id"), Seq("ts"), Seq("value"))
+    finally spark.conf.unset("graft.snapstore.dir")
+    assert(new java.io.File(snapRoot).listFiles().exists(_.getName.startsWith("snap_")))
     // reference error shapes: unknown type, missing required config
     val ex = intercept[IllegalArgumentException](
       OnlineStore.fromSpec(StoreSpec("bad", "somethingelse")))

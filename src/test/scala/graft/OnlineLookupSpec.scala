@@ -100,6 +100,22 @@ class OnlineLookupSpec extends SparkSpecBase {
     })
   }
 
+  test("an upsert into an existing store runs one shuffle stage") {
+    val online = new ParquetOnlineStore(s"$workDir/online-merge-budget")
+    def upsert(rows: Seq[(Long, Timestamp, Double)]): Unit =
+      online.upsert(rows.toDF("user_id", "ts", "value"), Seq("user_id"), Seq("ts"), Seq("value"))
+    upsert(Seq((1L, ts("2024-01-01 10:00:00"), 10.0), (2L, ts("2024-01-02 10:00:00"), 20.0)))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val (_, shuffleStages) = jobsAndShuffleStages {
+      upsert(Seq((1L, ts("2024-01-05 10:00:00"), 11.0), (1L, ts("2024-01-04 10:00:00"), 12.0),
+        (2L, ts("2024-01-01 10:00:00"), 99.0), (3L, ts("2024-01-04 10:00:00"), 30.0)))
+    }
+    assert(shuffleStages == 1, s"one upsert ran $shuffleStages shuffle stages")
+    val snap = online.snapshot(spark).collect()
+      .map(rw => rw.getAs[Long]("user_id") -> rw.getAs[Double]("value")).toMap
+    assert(snap == Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0))
+  }
+
   test("a composite entity key serves online") {
     val src = s"$workDir/by-region"
     Seq((1L, "eu", ts("2024-01-01 10:00:00"), 1.0),

@@ -9,6 +9,21 @@ import graft.operators.{Dedup, Similarity}
 class Round10OpsSpec extends SparkSpecBase {
   import spark.implicits._
 
+  test("cachedArtifact: a derive that throws mid-write leaves no .tmp- sibling") {
+    val base = java.nio.file.Files.createTempDirectory("graft-art-fail").toString
+    spark.conf.set("graft.test.art.dir", base)
+    try {
+      val boom = udf((id: Long) => { if (id > 0) throw new IllegalStateException("boom"); id })
+      // a range, not a local Seq: the optimizer would evaluate the UDF over
+      // a local relation while planning, before the write starts
+      intercept[Exception](graft.serving.StorePaths.cachedArtifact(spark,
+        "graft.test.art.dir", "unused", "gk1-", "f1")(
+        spark.range(1, 3).select(boom(col("id")).as("id"))))
+      val names = new java.io.File(base).listFiles().map(_.getName).toSet
+      assert(names.isEmpty, s"failed write left: $names")
+    } finally spark.conf.unset("graft.test.art.dir")
+  }
+
   test("cachedArtifact: derive-once, completeness probe, same-prefix orphan GC") {
     val base = java.nio.file.Files.createTempDirectory("graft-art").toString
     spark.conf.set("graft.test.art.dir", base)

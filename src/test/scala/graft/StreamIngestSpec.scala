@@ -110,19 +110,6 @@ class StreamIngestSpec extends SparkSpecBase {
       fs.materializeStream("batch_only", store, batch1.toDF().schema))
   }
 
-  test("MemoryOnlineStore matches ParquetOnlineStore upsert semantics") {
-    val dir = Files.createTempDirectory("graft-memstore").toString
-    val pq = new ParquetOnlineStore(s"$dir/store")
-    val mem = new graft.serving.MemoryOnlineStore
-    for (s <- Seq(pq, mem); b <- Seq(batch1, batch2))
-      s.upsert(b.toDF(), Seq("user_id"), Seq("ts", "event_id"), Seq("event_type", "value"))
-    def snap(s: graft.serving.OnlineStore) = s.snapshot(spark)
-      .select("user_id", "ts", "event_id", "event_type", "value")
-      .collect().map(r => r.getLong(0) -> (r.getTimestamp(1), r.getLong(2), r.getDouble(4))).toSet
-    assert(snap(pq) == snap(mem))
-    assertThrows[IllegalStateException](new graft.serving.MemoryOnlineStore().snapshot(spark))
-  }
-
   test("streaming TTL-fused upsert drops lapsed keys per micro-batch") {
     val dir = Files.createTempDirectory("graft-stream-ttl").toString
     val store = new ParquetOnlineStore(s"$dir/store")
@@ -251,7 +238,7 @@ class StreamIngestSpec extends SparkSpecBase {
         streamSource = Some(KafkaSourceSpec("broker-1:9092", "clicks.v1",
           StreamFormat.AvroFormat(), eventTsCol = "ts"))))
       val fs = new FeatureStore(r, spark)
-      val store = new graft.serving.MemoryOnlineStore
+      val store = graft.serving.OnlineStore.fromSpec(StoreSpec("rate-demo-kafka", "memory"))
       val schema = StructType(Seq(
         StructField("user_id", LongType), StructField("ts", TimestampType),
         StructField("value", DoubleType), StructField("event_type", StringType)))
@@ -264,7 +251,7 @@ class StreamIngestSpec extends SparkSpecBase {
         while (n == 0 && System.currentTimeMillis() < deadline) {
           Thread.sleep(250)
           n = try store.snapshot(spark).count()
-              catch { case _: IllegalStateException => 0L }
+              catch { case _: org.apache.spark.sql.AnalysisException => 0L }
         }
         assert(n > 0, "no rows flowed from the Kafka-spec'd demo stream")
       } finally q.stop()
@@ -300,7 +287,7 @@ class StreamIngestSpec extends SparkSpecBase {
         streamSource = Some(KinesisSourceSpec("us-east-1", "taps.v1",
           StreamFormat.AvroFormat(), eventTsCol = "ts"))))
       val fs = new FeatureStore(r, spark)
-      val store = new graft.serving.MemoryOnlineStore
+      val store = graft.serving.OnlineStore.fromSpec(StoreSpec("rate-demo-kinesis", "memory"))
       val schema = StructType(Seq(
         StructField("user_id", LongType), StructField("ts", TimestampType),
         StructField("value", DoubleType), StructField("event_type", StringType)))
@@ -312,7 +299,7 @@ class StreamIngestSpec extends SparkSpecBase {
         while (n == 0 && System.currentTimeMillis() < deadline) {
           Thread.sleep(250)
           n = try store.snapshot(spark).count()
-              catch { case _: IllegalStateException => 0L }
+              catch { case _: org.apache.spark.sql.AnalysisException => 0L }
         }
         assert(n > 0, "no rows flowed from the Kinesis-spec'd demo stream")
       } finally q.stop()
