@@ -41,6 +41,9 @@ object FeatureStore {
            project: String = Project.Default): FeatureStore =
     new FeatureStore(Registry.load(spark, registryDir), spark, project)
 
+  /** A store write: (rows, store keys, latest-wins order, value columns). */
+  private type Write = (DataFrame, Seq[String], Seq[String], Seq[String]) => Unit
+
   /** Refs split into table refs and the on-demand views they name (each
     * with its requested derived features). */
   private final case class Resolved(tableRefs: Seq[FeatureRef],
@@ -391,26 +394,30 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
   /** Hand a window of `t`'s rows to a store write as (project-tagged rows,
     * store keys, latest-wins order, value columns) — the store-column
     * layout every materialization path shares. */
-  private def toStore(t: FeatureTable, rows: DataFrame)(
-      write: (DataFrame, Seq[String], Seq[String], Seq[String]) => Unit): Unit =
+  private def toStore(t: FeatureTable, rows: DataFrame)(write: FeatureStore.Write): Unit =
     write(rows.withColumn(ProjectCol, lit(project)), ProjectCol +: t.entities,
       latestOrder(t), t.features.map(_.name))
 
+  /** The store write a table's registered max_age picks: with one, the TTL
+    * is fused into the store merge at `now()` (evaluated per write) — keys
+    * whose latest feature row is already older than the max_age can only
+    * ever serve OUTSIDE_MAX_AGE, so they are dropped inside the SAME
+    * read-merge-write the upsert pays anyway
+    * (ParquetOnlineStore.upsertCompacting), instead of a separate compact
+    * scan per cycle. A table without a max_age does a plain upsert. */
+  private def ttlWrite(t: FeatureTable, store: ParquetOnlineStore,
+                       now: () => java.sql.Timestamp): FeatureStore.Write =
+    t.maxAgeSec.fold(store.upsert _)(maxAge =>
+      store.upsertCompacting(_, _, _, _, t.eventTsCol, maxAge, now()))
+
   /** Materialize with the table's registered TTL fused into the store
-    * merge: keys whose latest feature row is already older than the
-    * table's max_age at `nowTs` can only ever serve OUTSIDE_MAX_AGE, so
-    * they are dropped inside the SAME read-merge-write the upsert pays
-    * anyway (ParquetOnlineStore.upsertCompacting) — the steady-state
-    * ingestion loop gets TTL hygiene for free instead of running a
-    * separate compact scan per cycle. A table without a max_age does a
-    * plain upsert. */
+    * merge at `nowTs` (see [[ttlWrite]]). */
   def materializeCompacting(tableName: String, store: ParquetOnlineStore,
                             startInclusive: String, endExclusive: String,
                             nowTs: java.sql.Timestamp): Unit = {
     val t = table(tableName)
     toStore(t, BatchSource.readRange(spark, sourceOf(t), startInclusive, endExclusive))(
-      t.maxAgeSec.fold(store.upsert _)(maxAge =>
-        store.upsertCompacting(_, _, _, _, t.eventTsCol, maxAge, nowTs)))
+      ttlWrite(t, store, () => nowTs))
   }
 
   /** Incremental materialization: materialize only [last-completed-end,
@@ -430,9 +437,12 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     if (boundMicros(start) >= boundMicros(upToExclusive)) None
     else {
       val t = table(tableName)
+      // the row count rides the upsert's own scan of the window
+      val counted = new org.apache.spark.sql.Observation()
       val rows = BatchSource.readRange(spark, sourceOf(t), start, upToExclusive)
-      val n = rows.count()
+        .observe(counted, count(lit(1)).as("n"))
       toStore(t, rows)(store.upsert)
+      val n = counted.get("n").asInstanceOf[Long]
       log.record(spark, project, tableName, storeName, start, upToExclusive, n)
       Some((start, upToExclusive))
     }
@@ -451,10 +461,13 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
   /** Stream half of materialization (reference: ingestion into the online
     * store is decoupled from reading; stream DataSource in
     * FeatureTable.java:94-97): open the table's registered stream-source
-    * spec and continuously upsert latest values — the same LatestValue
-    * merge as batch [[materialize]], so the two paths cannot diverge.
-    * Returns the writer; callers start it with their trigger/checkpoint. */
-  def materializeStream(tableName: String, store: OnlineStore,
+    * spec and write each micro-batch with the store write
+    * [[materializeCompacting]] uses — a table with a max_age drops its
+    * lapsed keys at the micro-batch's processing time, one without does a
+    * plain upsert; the same LatestValue merge as batch [[materialize]],
+    * so the two paths cannot diverge. Returns the writer; callers start
+    * it with their trigger/checkpoint. */
+  def materializeStream(tableName: String, store: ParquetOnlineStore,
                         schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val t = table(tableName)
@@ -462,10 +475,11 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
       throw new IllegalArgumentException(s"table $tableName has no stream source"))
     val stream = graft.streaming.StreamIngest.readStreamSource(spark, spec, schema)
     graft.streaming.StreamIngest.latestUpsert(
-      stream.withColumn(ProjectCol, lit(project)), store,
+      stream.withColumn(ProjectCol, lit(project)),
       keys = ProjectCol +: t.entities,
       orderCols = Seq(spec.eventTsCol) ++ t.createdTsCol,
-      valueCols = t.features.map(_.name))
+      valueCols = t.features.map(_.name))(
+      ttlWrite(t, store, () => new java.sql.Timestamp(System.currentTimeMillis())))
   }
 
   /** Materialize every table of this project that `storeSpec` subscribes to
@@ -582,7 +596,8 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
               when(fresh, col(r.feature)).as(out))
         }
         joined.select(
-          joined.columns.filterNot(lookupCols).map(c => col(s"`$c`")) ++ served: _*)
+          (joined.columns.filterNot(lookupCols).map(c => col(s"`$c`")) ++ served)
+            .toIndexedSeq: _*)
     }
   }
 }

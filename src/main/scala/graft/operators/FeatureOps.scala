@@ -633,7 +633,9 @@ object FeatureOps {
     * with a table's declared max_age. Buckets follow the serve_online
     * ratio the gate query pins: FRESH inside a quarter of the max_age
     * (4·age < max_age, exact integers), AGING inside it, OUTSIDE_MAX_AGE
-    * beyond — the read-time checkOutsideMaxAge boundary. A table with no
+    * only when OLDER than now − max_age — the read-time boundary, through
+    * the same [[PointInTimeJoin.withinMaxAge]] serving applies (so age ==
+    * max_age is AGING, and serves PRESENT). A table with no
     * max_age has no staleness contract: everything reports FRESH. */
   def ftFreshnessOf(latest: DataFrame, keys: Seq[String], tsCol: String,
       nowCol: org.apache.spark.sql.Column, maxAgeSec: Option[Long]): DataFrame = {
@@ -643,7 +645,7 @@ object FeatureOps {
     val status = maxAgeSec match {
       case Some(m) =>
         when(col("age_sec") * 4 < m, lit("FRESH"))
-          .when(col("age_sec") < m, lit("AGING"))
+          .when(PointInTimeJoin.withinMaxAge(col(tsCol), col("__now"), m), lit("AGING"))
           .otherwise(lit("OUTSIDE_MAX_AGE"))
       case None => lit("FRESH")
     }
@@ -658,7 +660,7 @@ object FeatureOps {
       |SELECT l.user_id,
       |  (epoch_us(m.now_ts) - epoch_us(l.ts)) // 1000000 AS age_sec,
       |  CASE WHEN (epoch_us(m.now_ts) - epoch_us(l.ts)) // 1000000 < 3600 THEN 'FRESH'
-      |       WHEN (epoch_us(m.now_ts) - epoch_us(l.ts)) // 1000000 < 14400 THEN 'AGING'
+      |       WHEN epoch_us(m.now_ts) - epoch_us(l.ts) <= 14400000000 THEN 'AGING'
       |       ELSE 'OUTSIDE_MAX_AGE' END AS status
       |FROM latest l CROSS JOIN mx m ORDER BY l.user_id""".stripMargin
 

@@ -2981,9 +2981,9 @@ object Similarity {
         .limit(0)
     // fold the per-component scale into the literals — scaling is free
     val scaled = comps.zip(scales).map { case (v, s) => v.map(_ * s) }
-    val compLit = array(scaled.map(v => array(v.map(lit(_)): _*)): _*)
+    val compLit = array(scaled.map(v => array(v.map(lit(_)).toIndexedSeq: _*)).toIndexedSeq: _*)
     val offLit = array(scaled.map(v =>
-      lit(v.indices.map(t => v(t) * mean(t)).sum)): _*)
+      lit(v.indices.map(t => v(t) * mean(t)).sum)).toIndexedSeq: _*)
     emb.select(col("vec_id"),
         posexplode(transform(compLit, (v, j) =>
           round((aggregate(zip_with(col("embedding"), v,
@@ -3028,7 +3028,7 @@ object Similarity {
 
   def embedProjectOracle(spark: SparkSession, dir: String): DataFrame = {
     val comps = Array.tabulate(ProjOracleD, 64)((j, t) => projOracleSign(j, t))
-    val compLit = array(comps.map(v => array(v.map(lit(_)): _*)): _*)
+    val compLit = array(comps.map(v => array(v.map(lit(_)).toIndexedSeq: _*)).toIndexedSeq: _*)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         transform(col("embedding"), x => round(x.cast("double") * 1000).cast("long")).as("q"))

@@ -2,22 +2,21 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.model.{FileStreamSourceSpec, KafkaSourceSpec, KinesisSourceSpec, StreamSourceSpec}
-import graft.serving.OnlineStore
 
 /** Structured-Streaming ingestion — the stream half of the reference's
   * decoupled ingest path (README: "ingesting data into the online store is
   * decoupled from reading"; stream DataSource in FeatureTable.java:94-97).
   *
-  * Two standard shapes:
-  *  - continuous materialization: micro-batch → latest-per-key upsert into an
-  *    OnlineStore via foreachBatch (exactly the batch LatestValue operator, so
-  *    batch and stream materialization cannot diverge semantically);
-  *  - windowed aggregation with watermarked event time (the streaming twin of
-  *    Analytics.eventsTumble).
+  * Continuous materialization: micro-batch → latest-per-key store write
+  * via foreachBatch (the same store merge as batch materialization, so
+  * batch and stream materialization cannot diverge semantically). The
+  * other operators maintain what batch queries read — sketch registers,
+  * vector indexes, decontamination flags — plus interval joins and
+  * jitter-tolerant dedup.
   */
 object StreamIngest {
 
@@ -79,57 +78,23 @@ object StreamIngest {
     mapping.foldLeft(raw) { case (df, (from, to)) => df.withColumnRenamed(from, to) }
   }
 
-  /** Continuous latest-value materialization into an online store. */
-  def latestUpsert(
-      stream: DataFrame,
-      store: OnlineStore,
-      keys: Seq[String],
-      orderCols: Seq[String],
-      valueCols: Seq[String]): DataStreamWriter[Row] =
+  /** Continuous latest-value materialization: every non-empty micro-batch
+    * goes to `write` as (rows, store keys, latest-wins order, value
+    * columns) — a store write such as `ParquetOnlineStore.upsert`. */
+  def latestUpsert(stream: DataFrame, keys: Seq[String], orderCols: Seq[String],
+                   valueCols: Seq[String])(
+      write: (DataFrame, Seq[String], Seq[String], Seq[String]) => Unit)
+      : DataStreamWriter[Row] =
     stream.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.upsert(batch, keys, orderCols, valueCols)
+        if (!batch.isEmpty) write(batch, keys, orderCols, valueCols)
       }
-
-  /** Continuous materialization with the TTL fused into each micro-batch
-    * merge (ParquetOnlineStore.upsertCompacting): long-running streaming
-    * ingest is exactly the workload where lapsed keys otherwise accumulate
-    * between compaction jobs — fusing the cutoff into the merge's own
-    * read-merge-write gives the stream TTL hygiene per batch for free.
-    * The cutoff is evaluated at each batch's processing time (the same
-    * "now" serving uses), so a key lapses in the store at the moment it
-    * would stop serving a value anyway (OUTSIDE_MAX_AGE → NOT_FOUND). */
-  def latestUpsertCompacting(
-      stream: DataFrame,
-      store: graft.serving.ParquetOnlineStore,
-      keys: Seq[String],
-      orderCols: Seq[String],
-      valueCols: Seq[String],
-      eventTsCol: String,
-      maxAgeSec: Long): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          store.upsertCompacting(batch, keys, orderCols, valueCols,
-            eventTsCol, maxAgeSec,
-            new java.sql.Timestamp(System.currentTimeMillis()))
-      }
-
-  /** Streaming ingestion dedup: drop exact re-deliveries of the same
-    * (keys, event-ts) within the watermark horizon — the streaming twin of
-    * LatestValue.dedup for at-least-once sources. */
-  def dedupStream(stream: DataFrame, tsCol: String, keys: Seq[String],
-                  watermark: String): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .dropDuplicates(keys :+ tsCol)
 
   /** Jitter-tolerant streaming dedup: drop re-deliveries of the same keys
     * even when the retry carries a DIFFERENT event timestamp (proxies
-    * re-stamping at send time, a common at-least-once reality
-    * [[dedupStream]]'s exact (keys, ts) match cannot absorb).
+    * re-stamping at send time, a common at-least-once reality an exact
+    * (keys, ts) match cannot absorb).
     * `dropDuplicatesWithinWatermark` keeps the first-seen row per key and
     * holds key state only until the watermark passes it — bounded state,
     * unlike a global dropDuplicates on keys alone, whose state grows with
@@ -161,555 +126,9 @@ object StreamIngest {
           col(leftTs) <= col(rightTs) &&
           col(leftTs) >= col(rightTs) - expr(s"INTERVAL $windowSec SECONDS"))
 
-  /** Watermarked tumbling-window aggregation over an event stream. */
-  def windowedAgg(stream: DataFrame, tsCol: String, windowLen: String,
-                  watermark: String): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen).as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-      .select(col("win.start").as("window_start"), col("event_type"),
-        col("n_events"), col("total_value"))
-
-  /** Watermarked hopping-window aggregation (streaming twin of
-    * Analytics.eventsHop): each event lands in windowLen/slide windows. */
-  def hoppingAgg(stream: DataFrame, tsCol: String, windowLen: String,
-                 slide: String, watermark: String): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen, slide).as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-      .select(col("win.start").as("window_start"), col("event_type"),
-        col("n_events"), col("total_value"))
-
-  /** Watermarked session-window aggregation — the streaming twin of
-    * Analytics.eventsSessionize (30-min-gap sessions), using Spark's native
-    * `session_window` state store instead of a batch sort+scan: sessions
-    * merge incrementally as events arrive and close when the watermark
-    * passes gap past the last event. */
-  def sessionAgg(stream: DataFrame, tsCol: String, keyCol: String,
-                 gap: String, watermark: String): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap).as("sess"), col(keyCol))
-      .agg(count(lit(1)).as("n_events"),
-        min(col(tsCol)).as("session_start"),
-        max(col(tsCol)).as("session_end"),
-        round(sum(col("value")), 4).as("total_value"))
-      .select(col(keyCol), col("session_start"), col("session_end"),
-        col("n_events"), col("total_value"))
-
-  /** Input row for [[sessionizeStateful]]. */
-  final case class SessEvent(user_id: Long, ts: java.sql.Timestamp,
-                             event_id: Long, value: Double)
-
-  /** Per-user session state: `ord` is the ordinal of the CURRENT (or last
-    * closed) session — the cross-session counter native `session_window`
-    * cannot carry. */
-  final case class SessState(ord: Long, open: Boolean, startMs: Long,
-                             endMs: Long, n: Long, sumE4: Long)
-
-  /** One closed session (column shape = batch `events_sessionize`). */
-  final case class SessionRow(user_id: Long, session_id: Long,
-                              n_events: Long, session_start: java.sql.Timestamp,
-                              session_end: java.sql.Timestamp, total_value_e4: Long)
-
-  /** Custom-state sessionization via `flatMapGroupsWithState` — the
-    * streaming operator `session_window` CANNOT express: per-user ORDINAL
-    * session ids (session 1, 2, 3 … per key), because numbering a user's
-    * next session requires state that survives across closed sessions.
-    * Column-for-column the streaming twin of batch `events_sessionize`
-    * (Analytics.scala): 30-min default gap, value sum as integral e4.
-    *
-    * Mechanics: events group-shuffle once on user_id; within a micro-batch
-    * each group's slice is sorted in memory (bounded by the batch, never
-    * the stream); sessions that close INSIDE the batch emit immediately,
-    * the open tail is stored with an event-time timeout at end+gap, and
-    * the watermark firing that timeout emits it. After emitting, the state
-    * row is kept (open = false) so the ordinal survives — one ~40-byte row
-    * per user, the same per-key state any latest-value materialization
-    * carries; a deployment that can't afford per-key residue uses
-    * [[sessionAgg]] and keys sessions by start instead of ordinal.
-    * Timeout timestamps clamp to watermark+1 because Spark rejects
-    * timeouts at-or-before the current watermark (a batch can contain
-    * events already straddling it).
-    *
-    * Out-of-order arrivals across micro-batches: the open session's
-    * aggregate interval is merged INTO the sorted batch timeline and the
-    * combined list is re-sessionized, so a late event (within the
-    * watermark) that lands before the open session's start extends it
-    * backward when within the gap, and forms its own EARLIER session when
-    * beyond it. Inserting that earlier session before the open one is
-    * batch-correct for ordinals: every event the operator sees is ≥ the
-    * watermark, and every previously EMITTED session ended > gap before
-    * the watermark that fired it — so late events always sort after all
-    * emitted sessions, and only the not-yet-emitted open session needs
-    * renumbering, which this does by numbering the merged timeline
-    * consecutively from the state's counter. Value e4 rounds HALF_UP via
-    * BigDecimal — the same away-from-zero rule as batch `round()`
-    * (math.rint's half-to-even diverges on exact .5 boundaries). */
-  def sessionizeStateful(events: Dataset[SessEvent], gapMinutes: Int = 30,
-                         watermark: String = "1 hour"): Dataset[SessionRow] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60000L
-    def emit(user: Long, s: SessState): SessionRow =
-      SessionRow(user, s.ord, s.n, new java.sql.Timestamp(s.startMs),
-        new java.sql.Timestamp(s.endMs), s.sumE4)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SessionRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[SessEvent], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            if (s.open) { state.update(s.copy(open = false)); Iterator(emit(user, s)) }
-            else Iterator.empty
-          } else {
-            // one session-in-progress on the merged timeline
-            case class Iv(startMs: Long, endMs: Long, n: Long, sumE4: Long)
-            def e4(v: Double): Long =
-              BigDecimal(v * 10000).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-            val st0 = state.getOption
-            val items =
-              (st0.filter(_.open).map(s => Iv(s.startMs, s.endMs, s.n, s.sumE4)).toSeq ++
-                rows.toArray.sortBy(e => (e.ts.getTime, e.event_id))
-                  .map(e => Iv(e.ts.getTime, e.ts.getTime, 1L, e4(e.value))))
-                .sortBy(iv => (iv.startMs, iv.endMs))
-            val merged = scala.collection.mutable.ArrayBuffer.empty[Iv]
-            items.foreach { iv =>
-              if (merged.nonEmpty && iv.startMs - merged.last.endMs <= gapMs)
-                merged(merged.size - 1) = Iv(
-                  math.min(merged.last.startMs, iv.startMs),
-                  math.max(merged.last.endMs, iv.endMs),
-                  merged.last.n + iv.n, merged.last.sumE4 + iv.sumE4)
-              else merged += iv
-            }
-            if (merged.isEmpty) Iterator.empty
-            else {
-              // number the merged timeline consecutively from the counter:
-              // the open session keeps its ordinal unless a late-but-earlier
-              // session was inserted before it (see scaladoc)
-              val base = st0 match {
-                case Some(s) if s.open => s.ord - 1
-                case Some(s)           => s.ord
-                case None              => 0L
-              }
-              val out = merged.init.zipWithIndex.map { case (iv, i) =>
-                emit(user, SessState(base + i + 1, open = true,
-                  iv.startMs, iv.endMs, iv.n, iv.sumE4))
-              }
-              val last = merged.last
-              val open = SessState(base + merged.size, open = true,
-                last.startMs, last.endMs, last.n, last.sumE4)
-              state.update(open)
-              state.setTimeoutTimestamp(
-                math.max(open.endMs + gapMs, state.getCurrentWatermarkMs() + 1))
-              out.iterator
-            }
-          }
-      }
-  }
-
-  /** Streaming corpus dedup: each micro-batch of documents folds through
-    * the SAME incremental band-index pipeline as batch
-    * `dedup_incremental` (Dedup.dedupIncrementalBatch — first-seen wins,
-    * every seen doc indexed, index streamed / delta broadcast), and the
-    * per-doc keep decisions append to `decisionsPath`. Batch and stream
-    * ingestion therefore CANNOT diverge: the keep-set equals folding the
-    * same batches by hand, which the incremental contract makes equal to
-    * the global smaller-id rule under append-only ids (spec-proven). The
-    * stream's unit of progress is the micro-batch, which is exactly the
-    * bounded "delta" the index probe broadcasts. */
-  def dedupCorpusStream(stream: DataFrame, indexPath: String,
-                        decisionsPath: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Dedup.dedupIncrementalBatch(batch, indexPath)
-            .write.mode("append").parquet(decisionsPath)
-        }
-      }
-
-  /** Input row for [[pathMineStream]]. */
-  final case class PathEvent(user_id: Long, ts: java.sql.Timestamp,
-                             event_id: Long, event_type: String)
-
-  /** Per-user path-mining state: the two most recent event types plus the
-    * last event's µs time — the sliding 3-gram window plus the lag(1)
-    * timestamp, ~50 bytes per user. */
-  final case class PathState(lastUs: Long, last1: String, last2: String)
-
-  /** One mined step, emitted per event: `gap_s` is the exact-integer-second
-    * gap to the same user's previous event (null on the user's first —
-    * batch `events_inter_arrival`'s grain), and (`step1`, `step2`,
-    * `event_type`) is the 3-step path COMPLETED by this event (step1/step2
-    * null until the user has two events of history — batch
-    * `events_top_paths`' triple). */
-  final case class PathStep(user_id: Long, ts: java.sql.Timestamp,
-                            event_type: String, gap_s: java.lang.Long,
-                            step1: String, step2: String)
-
-  private def micros(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
-  /** Streaming twin of the path-mining family's analytic shuffle: batch
-    * `events_top_paths` / `events_inter_arrival` / `events_transitions`
-    * all ride ONE user_id exchange feeding lag()/lead() — this is that
-    * exchange as `flatMapGroupsWithState` carrying a 3-gram sliding window
-    * per user, so each arriving event immediately yields its completed
-    * path triple and its inter-arrival gap. Downstream windowed
-    * aggregations (path counts, gap stats) compose on the emitted stream;
-    * batch parity of the substrate is spec-proven column-for-column
-    * (StreamIngestSpec).
-    *
-    * Ordering contract: events are sorted within each micro-batch (the
-    * sessionizeStateful discipline), so in-order streams match batch
-    * exactly. A CROSS-batch late arrival appends to the user's chain in
-    * ARRIVAL order — unlike sessions (interval algebra merges), an
-    * already-emitted lag/lead context cannot be retracted in append mode;
-    * that is the documented divergence, bounded by the watermark. */
-  def pathMineStream(events: Dataset[PathEvent], watermark: String = "1 hour")
-      : Dataset[PathStep] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[PathState, PathStep](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[PathEvent], state: GroupState[PathState]) =>
-          val evs = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(PathState(Long.MinValue, null, null))
-          val out = evs.map { e =>
-            val us = micros(e.ts)
-            val gap: java.lang.Long =
-              if (st.lastUs == Long.MinValue) null
-              else java.lang.Long.valueOf(Math.floorDiv(us - st.lastUs, 1000000L))
-            val step = PathStep(user, e.ts, e.event_type, gap, st.last2, st.last1)
-            st = PathState(us, e.event_type, st.last1)
-            step
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
+  /** Input row for [[registerSketchStream]]. */
   final case class DayEvent(user_id: Long, ts: java.sql.Timestamp)
-  /** Disjoint, ascending, non-adjacent [start, end] epoch-day islands. */
-  final case class StreakState(intervals: List[(Long, Long)])
-  final case class StreakRow(user_id: Long, n_active_days: Long,
-                             n_streaks: Long, longest_streak: Long)
-
-  /** Streaming twin of the batch `events_streaks` gaps-and-islands
-    * operator: per-user consecutive-day activity runs maintained as
-    * disjoint day-interval state — the SAME interval algebra the
-    * sessionizeStateful rework proved out, at day granularity with
-    * adjacency (gap = 1 day) as the merge rule. Because a late day can
-    * BRIDGE two islands, intervals (not scalar counters) are the only
-    * state shape that stays batch-exact under out-of-order arrival;
-    * state size is bounded by the user's island count (calendar-bounded),
-    * the flatMapGroupsWithState analogue of the batch operator's
-    * day-grain window. Emits each touched user's refreshed
-    * (n_active_days, n_streaks, longest_streak) per micro-batch; the
-    * LAST row per user equals the batch answer on the same events
-    * (spec-proven, including a cross-batch island bridge).
-    *
-    * Watermark caveat: under `GroupStateTimeout.NoTimeout` Spark does NOT
-    * drop watermark-late rows before `flatMapGroupsWithState`, so the
-    * watermark here only bounds DOWNSTREAM composition (windowed aggs
-    * over the emitted stream) — arbitrarily-late days still merge into
-    * state, which is exactly what keeps the operator batch-exact (the
-    * spec's bridge case relies on it). Switching to EventTimeTimeout
-    * would make the watermark real and break batch parity for late
-    * arrivals — don't, without revisiting the spec. */
-  def streaksStream(events: Dataset[DayEvent], watermark: String = "1 hour")
-      : Dataset[StreakRow] = {
-    import events.sparkSession.implicits._
-    def insert(ivs: List[(Long, Long)], d: Long): List[(Long, Long)] = {
-      val (lo, rest) = ivs.partition(_._2 < d - 1)
-      val (touch, hi) = rest.partition(_._1 <= d + 1)
-      val merged =
-        if (touch.isEmpty) (d, d)
-        else (math.min(touch.head._1, d), math.max(touch.last._2, d))
-      lo ::: merged :: hi
-    }
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[StreakState, StreakRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[DayEvent], state: GroupState[StreakState]) =>
-          val days = rows.map(e => Math.floorDiv(micros(e.ts), 86400000000L)).toSet
-          var ivs = state.getOption.map(_.intervals).getOrElse(Nil)
-          days.foreach(d => ivs = insert(ivs, d))
-          state.update(StreakState(ivs))
-          val lens = ivs.map(i => i._2 - i._1 + 1L)
-          Iterator.single(StreakRow(user, lens.sum, lens.length.toLong, lens.max))
-      }
-  }
-
-  final case class FunnelEvent(user_id: Long, ts: java.sql.Timestamp,
-                               event_type: String)
-  /** Stage-chained funnel state (µs times; Long.MaxValue = unset): the
-    * first-view minimum, the current stage-2/3 minima, and the PENDING
-    * candidates — stage events seen before their gate opened (a click
-    * before any view, a purchase before any qualifying click) that a late
-    * earlier-stage arrival could still promote. Pending lists are pruned
-    * against the current minima (anything ≥ the stage minimum can never
-    * become it: stage minima only decrease), so in-order traffic keeps
-    * them at the user's pre-first-view event count, not their history. */
-  final case class FunnelState(minView: Long, bestClick: Long, bestPurch: Long,
-                               pendClicks: List[Long], pendPurch: List[Long])
-  final case class FunnelRow(user_id: Long, t1_us: java.lang.Long,
-                             t2_us: java.lang.Long, t3_us: java.lang.Long)
-
-  /** Streaming twin of batch `events_funnel`: per user the stage-chained
-    * minima t1 = min(view), t2 = min(click ≥ t1), t3 = min(purchase ≥ t2)
-    * as `flatMapGroupsWithState` — each micro-batch emits every touched
-    * user's refreshed stage times; the funnel COUNTS are one aggregation
-    * over the latest row per user (the fields are monotone non-increasing
-    * and fill-only, so "latest" = field-wise min, which is how the spec
-    * folds the emitted stream).
-    *
-    * Unlike the lag/lead substrate ([[pathMineStream]]'s documented
-    * append-mode divergence), funnel state is EXACTLY recoverable under
-    * arbitrary cross-batch lateness: a late view can re-open stage 2, so
-    * the state keeps not-yet-admissible stage events as pending
-    * candidates and re-resolves the chain each batch — spec-proven equal
-    * to batch semantics under fully shuffled batching. NoTimeout keeps
-    * late rows flowing into state (the [[streaksStream]] caveat); the
-    * watermark only bounds downstream composition. */
-  def funnelStream(events: Dataset[FunnelEvent],
-      stages: Seq[String] = Seq("view", "click", "purchase"),
-      watermark: String = "1 hour"): Dataset[FunnelRow] = {
-    import events.sparkSession.implicits._
-    require(stages.length == 3, "funnelStream chains exactly three stages")
-    val Seq(s1, s2, s3) = stages
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          val st = state.getOption.getOrElse(
-            FunnelState(Long.MaxValue, Long.MaxValue, Long.MaxValue, Nil, Nil))
-          var mv = st.minView
-          var pc = st.pendClicks
-          var pp = st.pendPurch
-          rows.foreach { e =>
-            val us = micros(e.ts)
-            if (e.event_type == s1) mv = math.min(mv, us)
-            // a candidate ≥ the current stage minimum can never become it
-            else if (e.event_type == s2) { if (us < st.bestClick) pc ::= us }
-            else if (e.event_type == s3) { if (us < st.bestPurch) pp ::= us }
-          }
-          // re-resolve the chain: a lowered t1 can admit pending clicks,
-          // and a lowered t2 can admit pending purchases
-          var bc = st.bestClick
-          if (mv != Long.MaxValue) {
-            val adm = pc.filter(_ >= mv)
-            if (adm.nonEmpty) bc = math.min(bc, adm.min)
-            pc = pc.filter(_ < bc)
-          }
-          var bp = st.bestPurch
-          if (bc != Long.MaxValue) {
-            val adm = pp.filter(_ >= bc)
-            if (adm.nonEmpty) bp = math.min(bp, adm.min)
-            pp = pp.filter(_ < bp)
-          }
-          state.update(FunnelState(mv, bc, bp, pc, pp))
-          def opt(v: Long): java.lang.Long =
-            if (v == Long.MaxValue) null else java.lang.Long.valueOf(v)
-          Iterator.single(FunnelRow(user, opt(mv), opt(bc), opt(bp)))
-      }
-  }
-
-  /** Sorted distinct epoch days this user has been active. */
-  final case class ActiveDaysState(srcDays: List[Long])
-  /** One exactly-once contribution: `kind` = "dau" (first sight of this
-    * user on `day`) or "wau" (`day` newly covered by the user's trailing
-    * 7-day windows). */
-  final case class ActiveContrib(user_id: Long, day: Long, kind: String)
-
-  /** Streaming twin of batch `events_active_users` (DAU/WAU): the batch
-    * form's blocker in a stream is count-DISTINCT, which streaming
-    * aggregation cannot do. This operator dissolves the distinct instead
-    * of fighting it: per-user state remembers which (user, day) sightings
-    * and which trailing-window contribution days have ALREADY been
-    * emitted, and emits each exactly once stream-wide — after which
-    * DAU(d) / WAU(d) are plain (non-distinct) counts of "dau"/"wau" rows
-    * any stateless sink or windowed count can fold, in any order, across
-    * any batching.
-    *
-    * Exactly-once is order-independent because coverage is a union: a
-    * contribution day t is owed iff some src day lands in [t−6, t], and
-    * whichever src day FIRST covers t emits it — late or shuffled arrival
-    * moves which day emits, never whether or how often. State is the
-    * user's distinct active-day list (calendar-bounded, the
-    * [[streaksStream]] state class). NoTimeout keeps watermark-late days
-    * merging into state (same caveat as streaksStream: the watermark
-    * bounds downstream composition only). */
-  def activeUsersStream(events: Dataset[DayEvent], watermark: String = "1 hour")
-      : Dataset[ActiveContrib] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ActiveDaysState, ActiveContrib](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[DayEvent], state: GroupState[ActiveDaysState]) =>
-          var seen = state.getOption.map(_.srcDays.toSet).getOrElse(Set.empty[Long])
-          val out = scala.collection.mutable.ArrayBuffer.empty[ActiveContrib]
-          val days = rows.map(e => Math.floorDiv(micros(e.ts), 86400000000L))
-            .toSet.diff(seen).toArray.sorted
-          days.foreach { d =>
-            out += ActiveContrib(user, d, "dau")
-            var t = d
-            while (t <= d + 6) {
-              // t already covered iff an existing src day lies in [t-6, t]
-              if (!seen.exists(s => s >= t - 6 && s <= t))
-                out += ActiveContrib(user, t, "wau")
-              t += 1
-            }
-            seen += d
-          }
-          state.update(ActiveDaysState(seen.toList.sorted))
-          out.iterator
-      }
-  }
-
-  final case class LifecycleContrib(user_id: Long, day: Long, cls: String,
-    delta: Long)
-
-  /** Streaming twin of the batch growth-accounting ledger
-    * ([[graft.operators.Growth.eventsLifecycle]]): per-user DELTA
-    * contributions (day, class, ±1) such that summing deltas per
-    * (day, class) — then clipping churn to the observed day grid, the
-    * batch presentation rule — reproduces the batch ledger under ANY
-    * batching of the same events, including late days that land BETWEEN
-    * already-seen days.
-    *
-    * Exactly-once with retraction: each user's state is the sorted set of
-    * known active days; a new day d with floor-neighbor p and
-    * ceiling-neighbor n (1) emits d's own class from p (none → new,
-    * p = d−1 → retained, else resurrected), (2) RE-classifies n if d
-    * changed its predecessor (the old class — new when p was absent,
-    * resurrected otherwise — flips to retained when d = n−1, to
-    * resurrected when p was absent and d < n−1; a −1/+1 pair), and
-    * (3) maintains churn: p's standing churn-at-(p+1) retracts iff
-    * d = p+1, and d adds churn at d+1 unless n = d+1. n's own churn is
-    * untouched (its successor didn't change). Every emission is O(1) per
-    * arriving day against a per-user state bounded by the activity
-    * horizon — the flatMapGroupsWithState shape that scales to
-    * 100 TB streams (state is per-user days, not per-event).
-    *
-    * Parity contract (spec-proven under shuffled batching): classes sum
-    * exactly; churn sums exactly on every day ≤ the batch grid's max —
-    * the stream also carries each current-max day's open churn at max+1,
-    * which the batch grid clip discards and a consumer joining to the
-    * dense grid discards identically. */
-  def lifecycleStream(events: Dataset[DayEvent], watermark: String = "1 hour")
-      : Dataset[LifecycleContrib] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ActiveDaysState, LifecycleContrib](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[DayEvent], state: GroupState[ActiveDaysState]) =>
-          var seen = state.getOption.map(_.srcDays.toSet).getOrElse(Set.empty[Long])
-          val out = scala.collection.mutable.ArrayBuffer.empty[LifecycleContrib]
-          def classOf(prev: Option[Long], d: Long): String = prev match {
-            case None                  => "new"
-            case Some(p) if p == d - 1 => "retained"
-            case Some(_)               => "resurrected"
-          }
-          val days = rows.map(e => Math.floorDiv(micros(e.ts), 86400000000L))
-            .toSet.diff(seen).toArray.sorted
-          days.foreach { d =>
-            val p = seen.filter(_ < d) match { case s if s.isEmpty => None; case s => Some(s.max) }
-            val n = seen.filter(_ > d) match { case s if s.isEmpty => None; case s => Some(s.min) }
-            out += LifecycleContrib(user, d, classOf(p, d), 1L)
-            n.foreach { nd =>
-              val oldCls = classOf(p, nd)
-              val newCls = classOf(Some(d), nd)
-              if (oldCls != newCls) {
-                out += LifecycleContrib(user, nd, oldCls, -1L)
-                out += LifecycleContrib(user, nd, newCls, 1L)
-              }
-            }
-            p.foreach { pd =>
-              if (d == pd + 1) out += LifecycleContrib(user, pd + 1, "churned", -1L)
-            }
-            if (!n.contains(d + 1))
-              out += LifecycleContrib(user, d + 1, "churned", 1L)
-            seen += d
-          }
-          state.update(ActiveDaysState(seen.toList.sorted))
-          out.iterator
-      }
-  }
-
-  final case class RetentionContrib(user_id: Long, cohort_wk: Long,
-    week_offset: Long, delta: Long)
-
-  /** Streaming twin of weekly cohort retention
-    * ([[graft.operators.Analytics.eventsRetention]]): per-user DELTA
-    * contributions (cohort_week, week_offset, ±1) whose per-(cohort,
-    * offset) fold equals the batch triangle's distinct-user counts under
-    * any batching. Weeks are the Monday-truncated epoch-week index
-    * (floorDiv(epoch_day + 3, 7) — 1970-01-01 was a Thursday), the same
-    * buckets `date_trunc('week')` yields.
-    *
-    * The hard case is COHORT REASSIGNMENT: a user's cohort is their
-    * earliest active week, and a late event from an earlier week moves it
-    * — every previously emitted (cohort, offset) pair for that user is
-    * then wrong, because offsets are relative to the cohort. State is the
-    * user's sorted active-week set; when the minimum drops, the user's
-    * whole triangle row retracts (−1 per old pair) and re-emits against
-    * the new cohort — O(weeks-per-user) work, bounded by the calendar
-    * horizon, only on the rare reassignment. Otherwise each new active
-    * week costs exactly one (cohort, w − cohort, +1) row. Distinct-count
-    * over users dissolves into a plain delta sum, the
-    * [[activeUsersStream]] discipline. */
-  def retentionStream(events: Dataset[DayEvent], watermark: String = "1 hour")
-      : Dataset[RetentionContrib] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ActiveDaysState, RetentionContrib](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[DayEvent], state: GroupState[ActiveDaysState]) =>
-          // state reuses ActiveDaysState, holding WEEK indexes
-          val seen = state.getOption.map(_.srcDays.toSet).getOrElse(Set.empty[Long])
-          val fresh = rows
-            .map(e => Math.floorDiv(Math.floorDiv(micros(e.ts), 86400000000L) + 3, 7L))
-            .toSet.diff(seen)
-          val out = scala.collection.mutable.ArrayBuffer.empty[RetentionContrib]
-          if (fresh.nonEmpty) {
-            val all = seen ++ fresh
-            val oldMin = if (seen.isEmpty) Long.MaxValue else seen.min
-            val newMin = all.min
-            if (newMin < oldMin) {
-              // cohort reassignment: retract the old triangle row, emit new
-              seen.foreach(w =>
-                out += RetentionContrib(user, oldMin, w - oldMin, -1L))
-              all.foreach(w =>
-                out += RetentionContrib(user, newMin, w - newMin, 1L))
-            } else {
-              fresh.foreach(w =>
-                out += RetentionContrib(user, oldMin, w - oldMin, 1L))
-            }
-            state.update(ActiveDaysState(all.toList.sorted))
-          }
-          out.iterator
-      }
-  }
-
-  /** Convenience: run a writer until all currently-available data is
-    * processed (test/demo helper; production would use its own trigger). */
+  /** Input row for [[errorBudgetStream]]. */
   final case class ErrEvent(ts: java.sql.Timestamp, event_type: String)
 
   /** Streaming twin of the daily error-budget table
@@ -723,8 +142,8 @@ object StreamIngest {
     * arbitrary batching is the engine's contract, and the ZERO-DAY rows
     * a stream can never emit (a silent day produces no update) are
     * restored by the shared finisher's calendar grid — the reason the
-    * finisher, not the stream, owns the grid. Compose [[dedupStream]]
-    * upstream for at-least-once transports. */
+    * finisher, not the stream, owns the grid. Compose
+    * [[dedupStreamJittered]] upstream for at-least-once transports. */
   def errorBudgetStream(events: Dataset[ErrEvent], watermark: String = "1 hour")
       : DataFrame =
     events.toDF()
@@ -743,8 +162,8 @@ object StreamIngest {
     * idempotent, commutative and monotone, so arbitrary batching,
     * re-delivery and late events all fold to the same converged
     * registers with Spark's own windowed accumulator as the only state
-    * (contrast count-distinct, which [[activeUsersStream]] had to
-    * dissolve with custom exactly-once state). Downstream, the batch
+    * (contrast count-distinct, which would need custom exactly-once
+    * state). Downstream, the batch
     * summary/estimate pipeline reads the converged registers unchanged. */
   def registerSketchStream(events: Dataset[DayEvent], watermark: String = "1 hour")
       : DataFrame = {
@@ -761,47 +180,7 @@ object StreamIngest {
       .select(col("day"), col("bucket"), col("m_reg"))
   }
 
-  /** Materialize [[registerSketchStream]]'s update stream into a DURABLE
-    * per-day register table, and serve the trailing-7-day WAU curve from
-    * it — the serving loop the batch gate (`events_wau_sketch`) proved
-    * the register algebra for. foreachBatch max-merges each micro-batch
-    * into the parquet table (read-merge-write through the
-    * StorePaths.writeParquetAtomic swap): element-wise MAX is idempotent/commutative/monotone,
-    * so update-mode re-emissions, re-deliveries, and arbitrary batch
-    * boundaries all converge to the same table — which is why the merge
-    * needs no transactional log, only atomic replacement. The curve
-    * read-out is [[graft.operators.Sketches.wauCurveFromRegisters]],
-    * the IDENTICAL code path the batch gate runs — streamed and batch
-    * curves are register-exact equal (spec-pinned). */
-  def registerTableStream(events: Dataset[DayEvent], tablePath: String,
-                          watermark: String = "1 hour"): DataStreamWriter[Row] =
-    registerSketchStream(events, watermark)
-      .writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeRegisterTable(batch, tablePath)
-      }
-
-  /** One max-merge upsert of a register batch into the parquet table —
-    * also the recovery path: replaying ANY suffix of batches (or the
-    * whole stream) against an existing table is idempotent. */
-  private[graft] def mergeRegisterTable(batch: DataFrame, tablePath: String): Unit = {
-    val spark = batch.sparkSession
-    val cols = Seq("day", "bucket", "m_reg").map(col)
-    val incoming = batch.select(cols: _*)
-    val merged =
-      if (graft.serving.StorePaths.exists(spark, tablePath))
-        spark.read.parquet(tablePath).select(cols: _*).unionByName(incoming)
-          .groupBy(col("day"), col("bucket"))
-          .agg(org.apache.spark.sql.functions.max(col("m_reg")).as("m_reg"))
-      else incoming.groupBy(col("day"), col("bucket"))
-        .agg(org.apache.spark.sql.functions.max(col("m_reg")).as("m_reg"))
-    graft.serving.StorePaths.writeParquetAtomic(merged, tablePath)
-  }
-
-  /** The live WAU curve off the maintained register table. */
-  def wauCurveFromTable(spark: SparkSession, tablePath: String): DataFrame =
-    graft.operators.Sketches.wauCurveFromRegisters(spark.read.parquet(tablePath))
-
+  /** Input row for [[quantileSketchStream]]. */
   final case class ValueEvent(event_id: Long, ts: java.sql.Timestamp,
     value: Double)
 
@@ -819,8 +198,7 @@ object StreamIngest {
     * watermark, and the count aggregate sees each event exactly once.
     * This is the supported dedup→aggregate stateful-operator chain, all
     * Spark-managed state — no custom exactly-once bookkeeping needed
-    * because event ids (unlike [[activeUsersStream]]'s cross-window
-    * coverage) make duplicates LOCALLY recognizable. Sub-cent and
+    * because event ids make duplicates LOCALLY recognizable. Sub-cent and
     * non-positive values clamp to the v = 1 bucket (the sketch domain is
     * v ≥ 1), identically in the batch comparator. */
   def quantileSketchStream(events: Dataset[ValueEvent], watermark: String = "1 hour")
@@ -839,86 +217,6 @@ object StreamIngest {
       .select(col("day"), col("bucket"), col("n"))
   }
 
-  final case class ConvEvent(user_id: Long, ts: java.sql.Timestamp,
-    event_type: String)
-  /** One live session interval: event-time bounds in micros + how many
-    * purchase events it absorbed (the conversion flag is nPurch > 0;
-    * the COUNT makes merges associative). */
-  final case class ConvIv(startUs: Long, endUs: Long, nPurch: Long)
-  final case class ConvState(ivs: List[ConvIv])
-  final case class ConvContrib(user_id: Long, day: Long, sess_delta: Long,
-    conv_delta: Long)
-
-  /** Streaming twin of per-day session conversion
-    * ([[graft.operators.Growth.eventsSessionConversionOf]]): per-user
-    * DELTA contributions (day-of-session-START, ±sessions, ±conversions)
-    * whose per-day fold equals the batch table under ANY batching —
-    * the retraction discipline of [[retentionStream]] applied to
-    * gap-sessionization's three late-event hazards:
-    *  - a late event can BRIDGE two existing sessions (two sessions
-    *    retract, one merged session emits),
-    *  - PREPEND before a session's start (its day attribution moves),
-    *  - add the first purchase to an already-emitted session (its
-    *    conversion flag flips).
-    * State per user is the session INTERVAL list — (start, end,
-    * purchase-count) only, never the events (bounded by sessions, not
-    * activity; the count keeps merges associative where a boolean would
-    * lose how many purchases each side carried). Sessions are connected
-    * components of the ≤gap adjacency over event times — order-
-    * independent, so arrival order cannot change the converged result.
-    * Contributions are suppressed when an absorbed event changes neither
-    * the session's start DAY nor its conversion flag (also what makes a
-    * re-delivered duplicate event contribution-neutral: it always lands
-    * inside its own session). The gap compares SECOND-truncated times
-    * ("> 1800 s starts a session"), exactly the batch rule's
-    * `cast(ts as long)` arithmetic; day attribution keeps full micros. */
-  def sessionConversionStream(events: Dataset[ConvEvent],
-                              gapSec: Long = 1800L,
-                              watermark: String = "1 hour")
-      : Dataset[ConvContrib] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ConvState, ConvContrib](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[ConvEvent], state: GroupState[ConvState]) =>
-          var ivs = state.getOption.map(_.ivs).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[ConvContrib]
-          def dayOf(iv: ConvIv): Long = Math.floorDiv(iv.startUs, 86400000000L)
-          def convOf(iv: ConvIv): Long = if (iv.nPurch > 0) 1L else 0L
-          def sec(us: Long): Long = Math.floorDiv(us, 1000000L)
-          rows.foreach { e =>
-            val tUs = micros(e.ts)
-            val p = if (e.event_type == "purchase") 1L else 0L
-            val (touch, rest) = ivs.partition(iv =>
-              sec(tUs) >= sec(iv.startUs) - gapSec && sec(tUs) <= sec(iv.endUs) + gapSec)
-            val merged = ConvIv(
-              (tUs +: touch.map(_.startUs)).min,
-              (tUs +: touch.map(_.endUs)).max,
-              touch.map(_.nPurch).sum + p)
-            val unchanged = touch match {
-              case old :: Nil => dayOf(old) == dayOf(merged) && convOf(old) == convOf(merged)
-              case _          => false
-            }
-            if (!unchanged) {
-              touch.foreach(old =>
-                out += ConvContrib(user, dayOf(old), -1L, -convOf(old)))
-              out += ConvContrib(user, dayOf(merged), 1L, convOf(merged))
-            }
-            ivs = (merged :: rest).sortBy(_.startUs)
-          }
-          state.update(ConvState(ivs))
-          out.iterator
-      }
-  }
-
-  /** In-stream hook for [[compactStreamIndex]]: fires every
-    * `compactEvery` micro-batches AFTER the batch's own sink write, so
-    * the just-written (possibly still-uncommitted) batch is the max id
-    * and never folds — replay safety is exactly the offline call's.
-    * Idempotent under replay: a replayed batch re-runs the compaction,
-    * which either no-ops (< 3 dirs) or folds the same committed set. */
   /** After this many CONSECUTIVE fold failures on one fold UNIT the hook
     * stops retrying that unit: a persistently failing compactor
     * (permissions, corrupt footer) would otherwise be
@@ -1591,264 +889,8 @@ object StreamIngest {
       }
   }
 
-  /** Input row for [[pitJoinStream]]: ONE unioned stream of feature
-    * updates (`kind = "feat"`: ts = feature event time, `value` = the
-    * feature value, row_id ignored) and serving requests (`kind = "req"`:
-    * ts = entity time, `row_id` = the caller's row identity, value
-    * ignored). One stream rather than two because the join's state is
-    * per-entity-key either way and a union keys both sides through the
-    * same single shuffle. */
-  final case class PitRow(user_id: Long, ts: java.sql.Timestamp, kind: String,
-                          row_id: Long, value: Double)
-
-  /** Per-key [[pitJoinStream]] state: the retained feature timeline and
-    * the not-yet-answerable requests, as parallel arrays (tiny, codable
-    * with Spark's product encoder; both bounded — see the scaladoc). */
-  final case class PitJoinState(featTs: Array[Long], featVal: Array[Double],
-                                pendTs: Array[Long], pendId: Array[Long])
-
-  /** One served request — column-for-column the batch
-    * [[graft.operators.PointInTimeJoin.asof]] row shape (row_id, key,
-    * entity ts, matched feature ts/value; None = no feature in range). */
-  final case class PitServed(row_id: Long, user_id: Long,
-                             entity_ts: java.sql.Timestamp,
-                             feat_ts: Option[java.sql.Timestamp],
-                             feat_value: Option[Double])
-
-  /** Streaming point-in-time join — the reference's historical-retrieval
-    * semantics (latest feature at-or-before entity time, optional max
-    * age) applied to a LIVE request stream: training-data generation and
-    * online enrichment from the same operator, the streaming twin of
-    * batch `pit_join` / `pit_join_maxage`.
-    *
-    * Why not a stream-stream interval join: Spark's interval join needs a
-    * FINITE time window on both sides, but "latest at-or-before" has an
-    * unbounded lookback (a request may match a feature written years
-    * ago). The state that makes unbounded lookback bounded is exactly the
-    * online store's: per key, only the LATEST feature at-or-before the
-    * watermark can ever serve a future request, so everything older
-    * retires. Custom state holds:
-    *  - features: the latest one ≤ watermark plus any not-yet-final ones
-    *    above it (bounded by the watermark delay), each (ts, value) with
-    *    same-ts duplicates collapsed to max value — the batch oracle's
-    *    (key, ts, max(value)) feature grain;
-    *  - pending requests: those with ts ≥ watermark (bounded by the
-    *    watermark delay; anything older answered and emitted already).
-    * A request emits exactly once, when the watermark passes STRICTLY
-    * beyond its ts — only then can no feature at-or-before it still
-    * arrive (arrivals carry ts ≥ watermark, and a tie at ts = watermark
-    * could otherwise land later). Emission happens inline when the
-    * request is already answerable and via event-time timeout otherwise.
-    * With `maxAgeSec` set, a key whose whole timeline has lapsed past
-    * max-age GCs its state entirely on a timeout — per-key residue is
-    * then zero for dead keys, one (ts, value) pair for live ones; without
-    * it, residue is the latest pair per key, the same footprint any
-    * latest-value materialization carries. */
-  def pitJoinStream(rows: Dataset[PitRow], maxAgeSec: Option[Long] = None,
-                    watermark: String = "1 hour"): Dataset[PitServed] = {
-    import rows.sparkSession.implicits._
-    val maxAgeUs = maxAgeSec.map(_ * 1000000L)
-    rows
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[PitJoinState, PitServed](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, it: Iterator[PitRow], state: GroupState[PitJoinState]) =>
-          val wm = state.getCurrentWatermarkMs() * 1000L // ms → µs event time
-          val st = state.getOption.getOrElse(
-            PitJoinState(Array.empty, Array.empty, Array.empty, Array.empty))
-          // fold arrivals into the state's timeline + pending set
-          var feats = st.featTs.zip(st.featVal)
-          var pend = st.pendTs.zip(st.pendId)
-          val arrivals = it.toArray
-          val newFeats = arrivals.filter(_.kind == "feat")
-            .map(r => (micros(r.ts), r.value))
-          if (newFeats.nonEmpty)
-            feats = (feats ++ newFeats).groupBy(_._1).view
-              .mapValues(_.map(_._2).max).toArray.sortBy(_._1)
-          pend = pend ++ arrivals.filter(_.kind == "req")
-            .map(r => (micros(r.ts), r.row_id))
-          // answer every request the watermark has finalized
-          val (ready, stillPend) = pend.partition(_._1 < wm)
-          val out = ready.sortBy(p => (p._1, p._2)).map { case (tUs, rowId) =>
-            val inRange = feats.filter { case (f, _) =>
-              f <= tUs && maxAgeUs.forall(a => f >= tUs - a) }
-            val hit = inRange.sortBy(f => (f._1, f._2)).lastOption
-            PitServed(rowId, user, new java.sql.Timestamp(tUs / 1000L),
-              hit.map(h => new java.sql.Timestamp(h._1 / 1000L)),
-              hit.map(_._2))
-          }
-          // retire history: of the features ≤ watermark only the latest
-          // can ever serve again (and with max-age, only while unlapsed)
-          val (past, future) = feats.partition(_._1 <= wm)
-          val keptPast = past.sortBy(_._1).lastOption
-            .filter { case (f, _) => maxAgeUs.forall(a => f >= wm - a) }
-          val kept = (keptPast.toArray ++ future).sortBy(_._1)
-          if (kept.isEmpty && stillPend.isEmpty) {
-            if (state.exists) state.remove()
-          } else {
-            state.update(PitJoinState(kept.map(_._1), kept.map(_._2),
-              stillPend.map(_._1), stillPend.map(_._2)))
-            // wake when the oldest pending request finalizes; else (with a
-            // TTL) when the whole timeline will have lapsed, to GC the key
-            val wakeUs: Option[Long] =
-              if (stillPend.nonEmpty) Some(stillPend.map(_._1).min + 1)
-              else maxAgeUs.map(a => kept.map(_._1).max + a + 1)
-            wakeUs.foreach(u => state.setTimeoutTimestamp(
-              math.max(u / 1000L, state.getCurrentWatermarkMs() + 1)))
-          }
-          out.iterator
-      }
-  }
-
-  /** Input token for [[heavyHittersStream]]. */
-  final case class TokRow(gram: String)
-  /** One retained counter: estimate `n_est` overestimates the true count
-    * by at most `err` (the evicted minimum the slot inherited). */
-  final case class HHEntry(gram: String, n_est: Long, err: Long)
-  final case class HHState(ver: Long, entries: List[HHEntry])
-  /** Summary row: `ver` is the per-shard state version — a consumer takes
-    * the max-ver rows per shard as the current summary (append-mode sinks
-    * accumulate snapshots; the version makes "current" selectable). */
-  final case class HHRow(shard: Int, ver: Long, gram: String,
-                         n_est: Long, err: Long)
-
-  /** Streaming heavy hitters — the bounded-memory twin of
-    * [[graft.operators.HeavyHitters.corpusHeavyHitters]] (whose phase-1
-    * Misra-Gries pass is the batch analogue), via SpaceSaving (Metwally
-    * et al., ICDT'05): per hash-shard, a CAPPED set of `capacity`
-    * counters; a full summary meeting a new key evicts the minimum
-    * counter, and the newcomer inherits min+1 with `err` = the evicted
-    * minimum. Invariants (any arrival order, any batching): every key
-    * with true count > N_shard/capacity is retained, and for every
-    * retained key true ≤ n_est ≤ true + err — so the summary is a
-    * candidate SUPERSET of the exact heavy hitters and the batch gate's
-    * exact confirm join applies unchanged downstream.
-    *
-    * This is the third streaming-register pattern in the module, and the
-    * one the other two can't express: [[registerSketchStream]] merges by
-    * MAX (idempotent, Spark-managed), [[quantileSketchStream]] by SUM
-    * behind dedup (Spark-managed) — a top-k summary needs EVICTION,
-    * i.e. keyed state with a bounded footprint, which is exactly what
-    * `flatMapGroupsWithState` provides: state is O(shards × capacity)
-    * REGARDLESS of vocabulary size, the property that makes the operator
-    * viable over an unbounded token stream where per-gram counting state
-    * would grow with the vocabulary.
-    *
-    * Sharding is BY GRAM (all occurrences of a gram meet one state), so
-    * per-shard guarantees compose: a corpus-global heavy hitter is heavy
-    * in its own shard. Each batch emits the shard's full summary
-    * (≤ capacity rows) under a bumped version — tiny by construction. */
-  def heavyHittersStream(toks: Dataset[TokRow], capacity: Int = 64,
-                         nShards: Int = 8): Dataset[HHRow] = {
-    import toks.sparkSession.implicits._
-    toks
-      .groupByKey(r => Math.floorMod(r.gram.hashCode, nShards))
-      .flatMapGroupsWithState[HHState, HHRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (shard: Int, rows: Iterator[TokRow], state: GroupState[HHState]) =>
-          val prev = state.getOption.getOrElse(HHState(0L, Nil))
-          val counters = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-          prev.entries.foreach(e => counters(e.gram) = (e.n_est, e.err))
-          rows.foreach { r =>
-            counters.get(r.gram) match {
-              case Some((n, err)) => counters(r.gram) = (n + 1L, err)
-              case None if counters.size < capacity =>
-                counters(r.gram) = (1L, 0L)
-              case None =>
-                // evict the minimum estimate (gram asc tie-break: the
-                // choice among equal minima is arbitrary for the bounds
-                // but made deterministic for replay/debugging)
-                val (mg, (mn, _)) = counters.minBy { case (g, (n, _)) => (n, g) }
-                counters.remove(mg)
-                counters(r.gram) = (mn + 1L, mn)
-            }
-          }
-          val entries = counters.iterator
-            .map { case (g, (n, e)) => HHEntry(g, n, e) }.toList
-          val ver = prev.ver + 1L
-          state.update(HHState(ver, entries))
-          entries.iterator.map(e => HHRow(shard, ver, e.gram, e.n_est, e.err))
-      }
-  }
-
-  /** Input row for [[botFlagStream]]. */
-  final case class BotEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long)
-  final case class BotGap(delta_s: Long, n: Long, err: Long)
-  final case class BotState(ver: Long, lastTsUs: Long, lastMinute: Long,
-                            minuteCount: Long, burstMax: Long, nEvents: Long,
-                            nGaps: Long, gaps: List[BotGap])
-  final case class BotRow(user_id: Long, ver: Long, n_events: Long,
-                          burst_max: Long, modal_delta_s: Long,
-                          modal_share_bp: Long, bot_flag: Long)
-
-  /** Streaming twin of [[graft.operators.Growth.eventsBotFlag]] — bot
-    * detection AT INGESTION, where traffic hygiene actually wants to run
-    * (flagging after the counts are poisoned is too late). Per-user state
-    * is O(capacity): burst tracking carries (current minute, count, max)
-    * and the cadence histogram is a SpaceSaving summary
-    * ([[heavyHittersStream]]'s eviction pattern applied per user) — and
-    * the bound is PROVABLY sufficient for the batch flag rule: the rule
-    * fires on modal share ≥ 2500 bp = ¼, SpaceSaving at capacity 64
-    * guarantees retention of any gap over 1/64 of the user's gaps, and
-    * when the gap alphabet fits the capacity the whole summary is exact
-    * (the batch-parity case, spec-pinned).
-    *
-    * Ordering caveat (the streaks/path-mining class, same contract):
-    * per-batch rows fold in (ts, event_id) order, but a cross-batch late
-    * event cannot retro-insert a gap — its gap-vs-last-seen is skipped
-    * when negative, and a late minute counts alone. The batch op is the
-    * retrospective truth; this twin is the in-flight approximation whose
-    * guarantees above are what the flag rule needs. Emission carries the
-    * per-user state version (append sinks accumulate; max-ver = current). */
-  def botFlagStream(events: Dataset[BotEvent], capacity: Int = 64)
-      : Dataset[BotRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BotState, BotRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[BotEvent], state: GroupState[BotState]) =>
-          var s = state.getOption.getOrElse(
-            BotState(0L, Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, Nil))
-          val counters = scala.collection.mutable.HashMap.empty[Long, (Long, Long)]
-          s.gaps.foreach(g => counters(g.delta_s) = (g.n, g.err))
-          def addGap(d: Long): Unit = counters.get(d) match {
-            case Some((n, e)) => counters(d) = (n + 1L, e)
-            case None if counters.size < capacity => counters(d) = (1L, 0L)
-            case None =>
-              val (mg, (mn, _)) = counters.minBy { case (g, (n, _)) => (n, g) }
-              counters.remove(mg)
-              counters(d) = (mn + 1L, mn)
-          }
-          var (lastTs, lastMin, minCnt, burst, nEv, nGaps) =
-            (s.lastTsUs, s.lastMinute, s.minuteCount, s.burstMax, s.nEvents, s.nGaps)
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val tUs = micros(e.ts)
-            nEv += 1
-            val minute = Math.floorDiv(tUs, 60000000L)
-            if (minute == lastMin) minCnt += 1
-            else { lastMin = minute; minCnt = 1L }
-            if (minCnt > burst) burst = minCnt
-            if (lastTs != Long.MinValue && tUs >= lastTs) {
-              addGap(Math.floorDiv(tUs - lastTs, 1000000L))
-              nGaps += 1
-            }
-            if (tUs >= lastTs) lastTs = tUs
-          }
-          val gaps = counters.iterator.map { case (d, (n, e)) => BotGap(d, n, e) }.toList
-          val ver = s.ver + 1L
-          state.update(BotState(ver, lastTs, lastMin, minCnt, burst, nEv, nGaps, gaps))
-          val (modalD, modalN) =
-            if (gaps.isEmpty) (0L, 0L)
-            else { val m = gaps.maxBy(g => (g.n, -g.delta_s)); (m.delta_s, m.n) }
-          val shareBp = if (nGaps > 0) modalN * 10000L / nGaps else 0L
-          val flag = if (burst >= 10L || (nEv >= 20L && shareBp >= 2500L)) 1L else 0L
-          Iterator.single(BotRow(user, ver, nEv, burst,
-            if (nGaps > 0) modalD else 0L, shareBp, flag))
-      }
-  }
-
+  /** Convenience: run a writer until all currently-available data is
+    * processed (test/demo helper; production would use its own trigger). */
   def runOnce(w: DataStreamWriter[Row], checkpoint: String): StreamingQuery =
     w.option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

@@ -99,6 +99,9 @@ class FeatureStoreSpec extends SparkSpecBase {
     val jan13 = statuses("2024-01-13 10:00:00")
     assert(jan13(1L)._2 == "AGING")                // 8d
     assert(jan13(2L)._2 == "OUTSIDE_MAX_AGE")      // 11d > max_age
+    // the serving boundary: stale only when OLDER than now - max_age
+    assert(statuses("2024-01-12 10:00:00")(2L) == (10L * 86400L, "AGING"))
+    assert(statuses("2024-01-12 10:00:01")(2L) == (10L * 86400L + 1L, "OUTSIDE_MAX_AGE"))
     // a table with no max_age has no staleness contract
     val r2 = new Registry
     r2.applyEntity(Entity("user_id", ValueKind.Int64K))

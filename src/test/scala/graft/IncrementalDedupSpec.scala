@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.streaming.StreamIngest
 
 /** Contract pins for incremental dedup: first-seen-wins against a
   * persisted band index, every seen document indexed (dropped ones too),
@@ -68,37 +67,6 @@ class IncrementalDedupSpec extends SparkSpecBase {
       "corpus should contain at least one duplicate to make the test meaningful")
     assert(run(2) == one)
     assert(run(5) == one)
-  }
-
-  test("streaming corpus dedup equals the hand-folded incremental batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val base = Files.createTempDirectory("graft-inc-stream").toString
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"))
-    val ids = docs.select(col("doc_id")).orderBy(col("doc_id"))
-      .collect().map(_.getLong(0))
-    val mid = ids(ids.length / 2)
-    val b1 = docs.filter(col("doc_id") <= mid)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val b2 = docs.filter(col("doc_id") > mid)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val input = MemoryStream[(Long, String)](spark)
-    val q = StreamIngest.dedupCorpusStream(
-        input.toDF().toDF("doc_id", "text"),
-        s"$base/index", s"$base/decisions")
-      .option("checkpointLocation", s"$base/cp")
-      .start()
-    input.addData(b1: _*); q.processAllAvailable()
-    input.addData(b2: _*); q.processAllAvailable()
-    q.stop()
-    val streamed = keeps(spark.read.parquet(s"$base/decisions"))
-    // reference: the same two batches folded by hand through a fresh index
-    val refIdx = s"$base/ref-index"
-    val expected =
-      keeps(Dedup.dedupIncrementalBatch(docs.filter(col("doc_id") <= mid), refIdx)) ++
-      keeps(Dedup.dedupIncrementalBatch(docs.filter(col("doc_id") > mid), refIdx))
-    assert(streamed == expected)
-    assert(streamed.values.exists(!_), "corpus should contain duplicates")
   }
 
   test("cross-batch duplicate drops; the earlier copy keeps") {

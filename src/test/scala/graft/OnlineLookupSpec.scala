@@ -41,6 +41,10 @@ class OnlineLookupSpec extends SparkSpecBase {
 
   private val value = Seq(FeatureRef("activity", "value"))
 
+  /** Jobs of one materializeIncremental tick into an existing store and
+    * log. */
+  private val JobsPerTick = 7
+
   private def served(df: DataFrame): Seq[(Option[Long], Option[Double], String)] =
     df.collect().toSeq.map(rw => (Option(rw.getAs[java.lang.Long]("user_id")).map(_.toLong),
       Option(rw.getAs[java.lang.Double]("activity__value")).map(_.toDouble),
@@ -114,6 +118,24 @@ class OnlineLookupSpec extends SparkSpecBase {
     val snap = online.snapshot(spark).collect()
       .map(rw => rw.getAs[Long]("user_id") -> rw.getAs[Double]("value")).toMap
     assert(snap == Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0))
+  }
+
+  test("an incremental tick logs its window's row count from the upsert's own scan") {
+    val online = new ParquetOnlineStore(s"$workDir/online-incremental")
+    val log = new graft.serving.MaterializationLog(s"$workDir/incremental-log")
+    def tick(upTo: String): Unit =
+      assert(fs.materializeIncremental("activity", online, log, upTo,
+        origin = "2024-01-01 00:00:00").isDefined)
+    tick("2024-01-03 00:00:00")
+    val (jobs, _) = jobsAndShuffleStages(tick("2024-02-01 00:00:00"))
+    tick("2024-03-01 00:00:00") // an empty window
+    // no count of its own: a separate count() of the window ran 2 more
+    // jobs (its aggregate's map stage and result under AQE)
+    assert(jobs <= JobsPerTick, s"one incremental tick ran $jobs jobs")
+    val logged = log.entries(spark).collect()
+      .map(rw => rw.getAs[String]("end_ts") -> rw.getAs[Long]("n_rows")).toMap
+    assert(logged == Map("2024-01-03 00:00:00" -> 2L, "2024-02-01 00:00:00" -> 2L,
+      "2024-03-01 00:00:00" -> 0L))
   }
 
   test("a composite entity key serves online") {

@@ -951,7 +951,8 @@ class Round7OpsSpec extends SparkSpecBase {
     val now = ev.map(_._2).max
     val expected = latest.map { case (u, us) =>
       val age = (now - us) / 1000000L
-      u -> (age, if (age < 3600L) "FRESH" else if (age < 14400L) "AGING"
+      // stale only when older than now - max_age (the serving rule, in µs)
+      u -> (age, if (age < 3600L) "FRESH" else if (now - us <= 14400L * 1000000L) "AGING"
         else "OUTSIDE_MAX_AGE")
     }
     assert(out == expected)

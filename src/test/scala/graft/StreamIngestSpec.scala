@@ -33,9 +33,9 @@ class StreamIngestSpec extends SparkSpecBase {
     val store = new ParquetOnlineStore(s"$dir/store")
     val input = MemoryStream[EventRow](spark)
 
-    val writer = StreamIngest.latestUpsert(input.toDF(), store,
+    val writer = StreamIngest.latestUpsert(input.toDF(),
       keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
-      valueCols = Seq("event_type", "value"))
+      valueCols = Seq("event_type", "value"))(store.upsert)
 
     input.addData(batch1: _*)
     StreamIngest.runOnce(writer, s"$dir/cp1").awaitTermination()
@@ -62,9 +62,9 @@ class StreamIngestSpec extends SparkSpecBase {
     batch1.toDF().write.mode("append").parquet(s"$dir/in")
     val schema = batch1.toDF().schema
     val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-    val writer = StreamIngest.latestUpsert(stream, store,
+    val writer = StreamIngest.latestUpsert(stream,
       keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
-      valueCols = Seq("event_type", "value"))
+      valueCols = Seq("event_type", "value"))(store.upsert)
     StreamIngest.runOnce(writer, s"$dir/cp").awaitTermination()
     batch2.toDF().write.mode("append").parquet(s"$dir/in")
     StreamIngest.runOnce(writer, s"$dir/cp").awaitTermination() // same checkpoint: only new files
@@ -111,40 +111,39 @@ class StreamIngestSpec extends SparkSpecBase {
   }
 
   test("streaming TTL-fused upsert drops lapsed keys per micro-batch") {
+    import graft.model._
+    // the registry's max_age picks the stream write: a 7-day table drops
+    // the 30-day-old key at the micro-batch's processing time, a table
+    // without a max_age keeps it
     val dir = Files.createTempDirectory("graft-stream-ttl").toString
-    val store = new ParquetOnlineStore(s"$dir/store")
-    val input = MemoryStream[EventRow](spark)
     val now = System.currentTimeMillis()
     val fresh = new Timestamp(now - 3600L * 1000)           // 1h old
     val stale = new Timestamp(now - 30L * 86400 * 1000)     // 30d old
-    input.addData(
+    val rows = Seq(
       EventRow(1L, fresh, 1L, "click", 1.0),
-      EventRow(2L, stale, 2L, "view", 2.0))
-    val writer = StreamIngest.latestUpsertCompacting(input.toDF(), store,
-      keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
-      valueCols = Seq("event_type", "value"),
-      eventTsCol = "ts", maxAgeSec = 7L * 86400)
-    StreamIngest.runOnce(writer, s"$dir/cp").awaitTermination()
-    val keys = store.snapshot(spark).select("user_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(keys == Set(1L), s"stale key must lapse in the fused merge: $keys")
-  }
-
-  test("dedupStream drops exact re-deliveries within the watermark") {
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
-    val input = MemoryStream[EventRow](spark)
-    // row 1 delivered twice (at-least-once source), row 3 once
-    input.addData(batch1.head, batch1.head, batch1(2))
-    val q = StreamIngest.dedupStream(input.toDF(), "ts", Seq("user_id"), "1 hour")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table("dedup_out").collect()
-    assert(out.length == 2)
-    assert(out.map(_.getAs[Long]("event_id")).toSet == Set(1L, 3L))
+      EventRow(2L, stale, 2L, "view", 2.0)).toDF()
+    rows.write.parquet(s"$dir/in")
+    val r = new Registry
+    r.applyEntity(Entity("user_id", ValueKind.Int64K))
+    def declare(name: String, maxAgeSec: Option[Long]): Unit =
+      r.applyTable(FeatureTable(name, Seq("user_id"),
+        Seq(Feature("value", ValueKind.DoubleK), Feature("event_type", ValueKind.StringK)),
+        maxAgeSec = maxAgeSec, eventTsCol = "ts", createdTsCol = Some("event_id"),
+        batchSourcePath = Some(s"$dir/in"),
+        streamSource = Some(FileStreamSourceSpec(s"$dir/in", "parquet", "ts"))))
+    declare("activity_ttl", Some(7L * 86400))
+    declare("activity_nottl", None)
+    val fs = new FeatureStore(r, spark)
+    def streamedKeys(table: String): Set[Long] = {
+      val store = new ParquetOnlineStore(s"$dir/store-$table")
+      StreamIngest.runOnce(fs.materializeStream(table, store, rows.schema),
+        s"$dir/cp-$table").awaitTermination()
+      store.snapshot(spark).select("user_id").collect().map(_.getLong(0)).toSet
+    }
+    assert(streamedKeys("activity_ttl") == Set(1L),
+      "stale key must lapse in the fused merge")
+    assert(streamedKeys("activity_nottl") == Set(1L, 2L),
+      "a table without a max_age keeps every key")
   }
 
   test("dedupStreamJittered drops re-stamped re-deliveries, keeps distinct keys") {
@@ -167,60 +166,6 @@ class StreamIngestSpec extends SparkSpecBase {
     assert(out.map(_.getAs[Long]("user_id")).sorted.toSeq == Seq(7L, 8L))
     // first-seen wins for the duplicated key
     assert(out.map(_.getAs[Long]("event_id")).toSet == Set(1L, 3L))
-  }
-
-  test("streaming session_window agg matches batch sessionization") {
-    val dir = Files.createTempDirectory("graft-stream-sess").toString
-    // events for one user: two 30-min-gap sessions (10:00-10:20, 11:30)
-    val rows = Seq(
-      EventRow(1L, ts("2024-01-01 10:00:00"), 7L, "click", 1.0),
-      EventRow(2L, ts("2024-01-01 10:20:00"), 7L, "view", 2.0),
-      EventRow(3L, ts("2024-01-01 11:30:00"), 7L, "click", 4.0),
-      // a far-future event advances the watermark so both sessions close
-      EventRow(9L, ts("2024-01-02 00:00:00"), 8L, "click", 0.5))
-    val input = MemoryStream[EventRow](spark)
-    input.addData(rows: _*)
-    val q = StreamIngest.sessionAgg(input.toDF(), "ts", "user_id", "30 minutes", "1 hour")
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.table("sess_out").filter(col("user_id") === 7L)
-      .orderBy(col("session_start")).collect()
-      .map(r => (r.getAs[Timestamp]("session_start"), r.getAs[Timestamp]("session_end"),
-                 r.getAs[Long]("n_events"), r.getAs[Double]("total_value")))
-    assert(streamed.toSeq == Seq(
-      (ts("2024-01-01 10:00:00"), ts("2024-01-01 10:20:00"), 2L, 3.0),
-      (ts("2024-01-01 11:30:00"), ts("2024-01-01 11:30:00"), 1L, 4.0)))
-  }
-
-  test("hopping streaming agg matches batch hopping aggregation") {
-    val dir = Files.createTempDirectory("graft-stream-hop").toString
-    val input = MemoryStream[EventRow](spark)
-    input.addData(batch1 ++ batch2: _*)
-    val q = StreamIngest.hoppingAgg(input.toDF(), "ts", "1 hour", "30 minutes", "2 hours")
-      .writeStream.format("memory").queryName("hop_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.table("hop_out").collect()
-      .map(r => (r.getAs[Timestamp]("window_start"), r.getAs[String]("event_type")) ->
-        (r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))).toMap
-    // batch twin: each event belongs to the two slide-aligned windows
-    val batch = (batch1 ++ batch2).toDF()
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-      .select(col("win.start").as("window_start"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .collect()
-      .map(r => (r.getAs[Timestamp]("window_start"), r.getAs[String]("event_type")) ->
-        (r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))).toMap
-    assert(streamed.nonEmpty)
-    streamed.foreach { case (k, v) => assert(batch(k) == v) }
   }
 
   test("Kafka spec drives materializeStream end-to-end (rate demo transport)") {
@@ -378,525 +323,6 @@ class StreamIngestSpec extends SparkSpecBase {
     assert(streamed == batchPairs)
   }
 
-  test("windowed streaming agg matches batch tumbling aggregation") {
-    val dir = Files.createTempDirectory("graft-stream-win").toString
-    val input = MemoryStream[EventRow](spark)
-    input.addData(batch1 ++ batch2: _*)
-
-    val q = StreamIngest.windowedAgg(input.toDF(), "ts", "1 hour", "2 hours")
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // append mode only emits windows the watermark has passed; ensure the
-    // emitted subset matches the batch computation exactly
-    val streamed = spark.table("win_out")
-      .collect().map(r => (r.getAs[Timestamp]("window_start"), r.getAs[String]("event_type")) ->
-        (r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))).toMap
-    val batch = (batch1 ++ batch2).toDF()
-      .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-      .collect().map(r => (r.getAs[Timestamp]("window_start"), r.getAs[String]("event_type")) ->
-        (r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))).toMap
-    assert(streamed.nonEmpty)
-    streamed.foreach { case (k, v) => assert(batch(k) == v) }
-  }
-
-  test("stateful sessionization emits ordinal sessions matching batch shape") {
-    val dir = Files.createTempDirectory("graft-stream-fmgws").toString
-    val rows = Seq(
-      // user 7: two sessions — (10:00,10:20) then (11:30)
-      StreamIngest.SessEvent(7L, ts("2024-01-01 10:00:00"), 1L, 1.0),
-      StreamIngest.SessEvent(7L, ts("2024-01-01 10:20:00"), 2L, 2.0),
-      StreamIngest.SessEvent(7L, ts("2024-01-01 11:30:00"), 3L, 4.0),
-      // user 8: far-future event advances the watermark past 12:00 so user
-      // 7's open second session times out and emits; user 8's own stays open
-      StreamIngest.SessEvent(8L, ts("2024-01-02 00:00:00"), 9L, 0.5))
-    val input = MemoryStream[StreamIngest.SessEvent](spark)
-    input.addData(rows: _*)
-    val q = StreamIngest.sessionizeStateful(input.toDS(), 30, "1 hour")
-      .writeStream.format("memory").queryName("fmgws_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table("fmgws_out").filter(col("user_id") === 7L)
-      .orderBy(col("session_id")).collect()
-      .map(r => (r.getAs[Long]("session_id"), r.getAs[Long]("n_events"),
-        r.getAs[Timestamp]("session_start"), r.getAs[Timestamp]("session_end"),
-        r.getAs[Long]("total_value_e4")))
-    // identical column semantics to batch events_sessionize: ordinal ids,
-    // min/max ts bounds, integral e4 value sum
-    assert(out.toSeq == Seq(
-      (1L, 2L, ts("2024-01-01 10:00:00"), ts("2024-01-01 10:20:00"), 30000L),
-      (2L, 1L, ts("2024-01-01 11:30:00"), ts("2024-01-01 11:30:00"), 40000L)))
-    // the watermark has not passed user 8's session — nothing emitted for it
-    assert(spark.table("fmgws_out").filter(col("user_id") === 8L).count() == 0)
-  }
-
-  test("stateful sessionization ordinals survive across closed sessions and batches") {
-    val dir = Files.createTempDirectory("graft-stream-fmgws2").toString
-    val input = MemoryStream[StreamIngest.SessEvent](spark)
-    val q = StreamIngest.sessionizeStateful(input.toDS(), 30, "1 hour")
-      .writeStream.format("memory").queryName("fmgws2_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    // batch A: user 9 opens session 1; user 8 advances the watermark
-    input.addData(
-      StreamIngest.SessEvent(9L, ts("2024-01-01 10:00:00"), 1L, 1.0),
-      StreamIngest.SessEvent(8L, ts("2024-01-03 00:00:00"), 100L, 0.0))
-    q.processAllAvailable()
-    // batch B: user 9 returns days later — session 1 must close as ordinal
-    // 1 and the NEW session must number 2 (state carried across sessions)
-    input.addData(StreamIngest.SessEvent(9L, ts("2024-01-05 10:00:00"), 2L, 2.0))
-    q.processAllAvailable()
-    // batch C: advance the watermark past session 2's gap so it emits too
-    input.addData(StreamIngest.SessEvent(8L, ts("2024-01-10 00:00:00"), 101L, 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("fmgws2_out").filter(col("user_id") === 9L)
-      .orderBy(col("session_id")).collect()
-      .map(r => (r.getAs[Long]("session_id"), r.getAs[Long]("n_events"),
-        r.getAs[Long]("total_value_e4")))
-    assert(out.toSeq == Seq((1L, 1L, 10000L), (2L, 1L, 20000L)))
-  }
-
-  test("stateful sessionization handles late events BEFORE the open session") {
-    val dir = Files.createTempDirectory("graft-stream-fmgws3").toString
-    val input = MemoryStream[StreamIngest.SessEvent](spark)
-    val q = StreamIngest.sessionizeStateful(input.toDS(), 30, "2 hours")
-      .writeStream.format("memory").queryName("fmgws3_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    // batch A: user 11 opens a session at 12:00; user 12 opens one at
-    // 13:00, setting the watermark to 11:00 (2h delay)
-    input.addData(
-      StreamIngest.SessEvent(11L, ts("2024-01-01 12:00:00"), 1L, 1.0),
-      StreamIngest.SessEvent(12L, ts("2024-01-01 13:00:00"), 2L, 2.0),
-      StreamIngest.SessEvent(8L, ts("2024-01-01 12:30:00"), 100L, 0.0))
-    q.processAllAvailable()
-    // batch B, both events late (≥ watermark 11:00) and EARLIER than their
-    // user's open session start:
-    //  - user 11's 11:40 is within the 30-min gap of 12:00 → the open
-    //    session must extend BACKWARD (start 11:40), not swallow the event
-    //    while keeping start 12:00 (the pre-fix behavior)
-    //  - user 12's 11:35 is 85 min before 13:00 → beyond the gap, so it is
-    //    its own EARLIER session: ordinal 1, and the open session renumbers
-    //    to 2. The value 0.03125 → e4 312.5 must round HALF-UP to 313 like
-    //    batch round() (math.rint's half-even gave 312).
-    input.addData(
-      StreamIngest.SessEvent(11L, ts("2024-01-01 11:40:00"), 3L, 4.0),
-      StreamIngest.SessEvent(12L, ts("2024-01-01 11:35:00"), 4L, 0.03125))
-    q.processAllAvailable()
-    // batch C: far-future event flushes every open session
-    input.addData(StreamIngest.SessEvent(8L, ts("2024-01-02 12:00:00"), 101L, 0.0))
-    q.processAllAvailable()
-    q.stop()
-    def sessions(user: Long) =
-      spark.table("fmgws3_out").filter(col("user_id") === user)
-        .orderBy(col("session_id")).collect()
-        .map(r => (r.getAs[Long]("session_id"), r.getAs[Long]("n_events"),
-          r.getAs[Timestamp]("session_start"), r.getAs[Timestamp]("session_end"),
-          r.getAs[Long]("total_value_e4")))
-    assert(sessions(11L).toSeq == Seq(
-      (1L, 2L, ts("2024-01-01 11:40:00"), ts("2024-01-01 12:00:00"), 50000L)))
-    assert(sessions(12L).toSeq == Seq(
-      (1L, 1L, ts("2024-01-01 11:35:00"), ts("2024-01-01 11:35:00"), 313L),
-      (2L, 1L, ts("2024-01-01 13:00:00"), ts("2024-01-01 13:00:00"), 20000L)))
-  }
-
-  test("streaming path mining matches the batch lag/lead substrate across batches") {
-    val dir = Files.createTempDirectory("graft-stream-path").toString
-    val types = Seq("view", "click", "purchase")
-    // 3 users x 12 events, deterministic interleaved types; per-user gaps
-    // differ by user so the gap column is exercised at multiple values
-    val all = for {
-      u <- 1L to 3L
-      i <- 0 until 12
-    } yield StreamIngest.PathEvent(u,
-      ts(f"2024-01-01 ${10 + (i * (5 + u.toInt)) / 60}%02d:${(i * (5 + u.toInt)) % 60}%02d:00"),
-      u * 100 + i, types(((i * 7 + u.toInt) % 3)))
-    val (batchA, batchB) = all.partition(e => e.event_id % 100 < 6)
-    val input = MemoryStream[StreamIngest.PathEvent](spark)
-    val q = StreamIngest.pathMineStream(input.toDS())
-      .writeStream.format("memory").queryName("path_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    input.addData(batchA: _*); q.processAllAvailable()
-    input.addData(batchB: _*); q.processAllAvailable()
-    q.stop()
-    def rowSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Timestamp]("ts"),
-        r.getAs[String]("event_type"), Option(r.getAs[java.lang.Long]("gap_s")),
-        Option(r.getAs[String]("step1")), Option(r.getAs[String]("step2")))).toSet
-    val streamed = rowSet(spark.table("path_out"))
-    // the batch form of the same substrate: ONE user_id analytic shuffle
-    // feeding lag() — what events_top_paths / events_inter_arrival /
-    // events_transitions all build on
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val batch = rowSet(all.toDF()
-      .withColumn("gap_s",
-        floor((unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(w)))
-          / lit(1000000L)).cast("long"))
-      .withColumn("step1", lag(col("event_type"), 2).over(w))
-      .withColumn("step2", lag(col("event_type"), 1).over(w))
-      .select(col("user_id"), col("ts"), col("event_type"), col("gap_s"),
-        col("step1"), col("step2")))
-    assert(streamed == batch, "streaming substrate diverged from batch lag/lead")
-    assert(streamed.size == 36)
-  }
-
-  test("streaming path mining randomized differential across batch splits") {
-    val rnd = new scala.util.Random(13)
-    val typeNames = Seq("view", "click", "purchase", "scroll")
-    val baseMs = ts("2024-03-01 00:00:00").getTime
-    // 20 users, random-length in-order timelines with random gaps and
-    // duplicate timestamps (event_id breaks ties), split at a random
-    // per-user point into two micro-batches — the operator's in-order
-    // contract, exercised across the state handoff
-    val perUser = (1L to 20L).map { u =>
-      var t = baseMs + rnd.nextInt(3600) * 1000L
-      val evs = (0 until (2 + rnd.nextInt(10))).map { i =>
-        if (rnd.nextBoolean()) t += rnd.nextInt(7200) * 1000L // else: exact tie
-        StreamIngest.PathEvent(u, new Timestamp(t), u * 1000 + i,
-          typeNames(rnd.nextInt(typeNames.length)))
-      }
-      val cut = rnd.nextInt(evs.length + 1)
-      (evs.take(cut), evs.drop(cut))
-    }
-    val (batchA, batchB) = (perUser.flatMap(_._1), perUser.flatMap(_._2))
-    val dir = Files.createTempDirectory("graft-stream-path-rnd").toString
-    val input = MemoryStream[StreamIngest.PathEvent](spark)
-    // 720h watermark: no batch-B event can fall behind batch A's global
-    // high-water mark and get dropped — parity, not lateness, is under test
-    val q = StreamIngest.pathMineStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("path_rnd_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    if (batchA.nonEmpty) { input.addData(batchA: _*); q.processAllAvailable() }
-    if (batchB.nonEmpty) { input.addData(batchB: _*); q.processAllAvailable() }
-    q.stop()
-    def rowSet2(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Timestamp]("ts"),
-        r.getAs[String]("event_type"), Option(r.getAs[java.lang.Long]("gap_s")),
-        Option(r.getAs[String]("step1")), Option(r.getAs[String]("step2")))).toSet
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val batch = rowSet2((batchA ++ batchB).toDF()
-      .withColumn("gap_s",
-        floor((unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(w)))
-          / lit(1000000L)).cast("long"))
-      .withColumn("step1", lag(col("event_type"), 2).over(w))
-      .withColumn("step2", lag(col("event_type"), 1).over(w))
-      .select(col("user_id"), col("ts"), col("event_type"), col("gap_s"),
-        col("step1"), col("step2")))
-    assert(rowSet2(spark.table("path_rnd_out")) == batch)
-  }
-
-  test("streaksStream: interval state survives batches and a late day bridges islands") {
-    val dir = Files.createTempDirectory("graft-stream-streaks").toString
-    val input = MemoryStream[StreamIngest.DayEvent](spark)
-    val q = StreamIngest.streaksStream(input.toDS())
-      .writeStream.format("memory").queryName("streaks_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    // batch A: user 5 active Jan 1 and Jan 3 — two 1-day islands
-    input.addData(
-      StreamIngest.DayEvent(5L, ts("2024-01-01 09:00:00")),
-      StreamIngest.DayEvent(5L, ts("2024-01-01 17:30:00")), // same-day dup collapses
-      StreamIngest.DayEvent(5L, ts("2024-01-03 12:00:00")),
-      StreamIngest.DayEvent(6L, ts("2024-01-01 00:00:00")))
-    q.processAllAvailable()
-    val afterA = spark.table("streaks_out").filter(col("user_id") === 5L).collect()
-      .map(r => (r.getAs[Long]("n_active_days"), r.getAs[Long]("n_streaks"),
-        r.getAs[Long]("longest_streak")))
-    assert(afterA.toSeq == Seq((2L, 2L, 1L)))
-    // batch B: Jan 2 arrives LATE — it must bridge the two islands into one
-    // 3-day streak (the scalar-counter formulation cannot represent this)
-    input.addData(StreamIngest.DayEvent(5L, ts("2024-01-02 23:59:59")))
-    q.processAllAvailable()
-    q.stop()
-    val rows5 = spark.table("streaks_out").filter(col("user_id") === 5L).collect()
-      .map(r => (r.getAs[Long]("n_active_days"), r.getAs[Long]("n_streaks"),
-        r.getAs[Long]("longest_streak"))).toSet
-    assert(rows5 == Set((2L, 2L, 1L), (3L, 1L, 3L)),
-      s"bridged stats must match the batch gaps-and-islands answer, got $rows5")
-    // untouched user 6 emitted once, in batch A only
-    assert(spark.table("streaks_out").filter(col("user_id") === 6L).count() == 1)
-  }
-
-  test("funnelStream: exact batch-funnel parity under fully shuffled batching") {
-    val rnd = new scala.util.Random(21)
-    val typeNames = Seq("view", "click", "purchase", "scroll")
-    val baseMs = ts("2024-04-01 00:00:00").getTime
-    val all = (1L to 15L).flatMap { u =>
-      (0 until (3 + rnd.nextInt(10))).map { _ =>
-        StreamIngest.FunnelEvent(u,
-          new Timestamp(baseMs + rnd.nextInt(72 * 3600) * 1000L),
-          typeNames(rnd.nextInt(typeNames.length)))
-      }
-    }
-    // batch reference: the events_funnel stage chain per user
-    def chain(evs: Seq[StreamIngest.FunnelEvent]): (Option[Long], Option[Long], Option[Long]) = {
-      def us(e: StreamIngest.FunnelEvent) = e.ts.getTime * 1000L
-      val t1 = evs.filter(_.event_type == "view").map(us).minOption
-      val t2 = t1.flatMap(t => evs.filter(e => e.event_type == "click" && us(e) >= t).map(us).minOption)
-      val t3 = t2.flatMap(t => evs.filter(e => e.event_type == "purchase" && us(e) >= t).map(us).minOption)
-      (t1, t2, t3)
-    }
-    val want = all.groupBy(_.user_id).map { case (u, evs) => u -> chain(evs) }
-    // stream the SAME events in a fully shuffled order over three arbitrary
-    // micro-batches — the exactness claim is stronger than the path-mining
-    // substrate's in-order contract, because pending candidates re-resolve
-    val shuffled = rnd.shuffle(all)
-    val chunks = Seq(shuffled.take(all.size / 3),
-      shuffled.slice(all.size / 3, 2 * all.size / 3),
-      shuffled.drop(2 * all.size / 3))
-    val dir = Files.createTempDirectory("graft-stream-funnel").toString
-    val input = MemoryStream[StreamIngest.FunnelEvent](spark)
-    val q = StreamIngest.funnelStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    chunks.filter(_.nonEmpty).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-    q.stop()
-    // latest state per user = field-wise min over its emitted rows (stage
-    // times are monotone non-increasing and fill-only; min skips nulls)
-    val got = spark.table("funnel_out")
-      .groupBy(col("user_id"))
-      .agg(min(col("t1_us")).as("t1"), min(col("t2_us")).as("t2"), min(col("t3_us")).as("t3"))
-      .collect().map(r => r.getAs[Long]("user_id") ->
-        ((Option(r.getAs[java.lang.Long]("t1")).map(_.longValue),
-          Option(r.getAs[java.lang.Long]("t2")).map(_.longValue),
-          Option(r.getAs[java.lang.Long]("t3")).map(_.longValue)))).toMap
-    assert(got == want, "streamed funnel stage times diverge from the batch chain")
-    // and the headline funnel counts — the events_funnel output shape
-    val (nV, nVC, nVCP) = (want.values.count(_._1.isDefined),
-      want.values.count(_._2.isDefined), want.values.count(_._3.isDefined))
-    assert(nV >= nVC && nVC >= nVCP && nV > 0, "non-vacuous funnel")
-  }
-
-  test("funnelStream: a late view re-opens stage 2 (pending candidates promote)") {
-    val dir = Files.createTempDirectory("graft-stream-funnel-late").toString
-    val input = MemoryStream[StreamIngest.FunnelEvent](spark)
-    val q = StreamIngest.funnelStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("funnel_late_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    // batch A: click at 09:00 precedes the only view (10:00) — not admissible
-    input.addData(
-      StreamIngest.FunnelEvent(1L, ts("2024-01-01 10:00:00"), "view"),
-      StreamIngest.FunnelEvent(1L, ts("2024-01-01 09:00:00"), "click"),
-      StreamIngest.FunnelEvent(1L, ts("2024-01-01 09:30:00"), "purchase"))
-    q.processAllAvailable()
-    val a = spark.table("funnel_late_out").collect()
-    assert(a.length == 1 && a.head.getAs[java.lang.Long]("t2_us") == null,
-      "pre-view click must stay pending")
-    // batch B: an EARLIER view arrives late — the pending click (and then
-    // the pending purchase) must promote, exactly as batch would compute
-    input.addData(StreamIngest.FunnelEvent(1L, ts("2024-01-01 08:00:00"), "view"))
-    q.processAllAvailable()
-    q.stop()
-    val last = spark.table("funnel_late_out")
-      .agg(min(col("t1_us")).as("t1"), min(col("t2_us")).as("t2"), min(col("t3_us")).as("t3"))
-      .collect().head
-    def usOf(s: String) = ts(s).getTime * 1000L
-    assert(last.getAs[Long]("t1") == usOf("2024-01-01 08:00:00"))
-    assert(last.getAs[Long]("t2") == usOf("2024-01-01 09:00:00"))
-    assert(last.getAs[Long]("t3") == usOf("2024-01-01 09:30:00"))
-  }
-
-  test("activeUsersStream: folded contributions equal batch DAU/WAU under shuffled batching") {
-    val rnd = new scala.util.Random(23)
-    val baseMs = ts("2024-05-01 00:00:00").getTime
-    // 12 users over ~20 days with repeats (same user+day across batches)
-    val all = (1L to 12L).flatMap { u =>
-      (0 until (4 + rnd.nextInt(12))).map { _ =>
-        StreamIngest.DayEvent(u,
-          new Timestamp(baseMs + rnd.nextInt(20 * 24) * 3600L * 1000L))
-      }
-    }
-    val shuffled = rnd.shuffle(all)
-    val dir = Files.createTempDirectory("graft-stream-active").toString
-    val input = MemoryStream[StreamIngest.DayEvent](spark)
-    val q = StreamIngest.activeUsersStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("active_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    // arbitrary batching of an arbitrary order — exactly-once emission must
-    // make the fold invariant to both
-    shuffled.grouped(1 + shuffled.size / 4).foreach { b =>
-      input.addData(b); q.processAllAvailable()
-    }
-    q.stop()
-    val contribs = spark.table("active_out").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("day"), r.getAs[String]("kind")))
-    // exactly-once: no (user, day, kind) appears twice
-    assert(contribs.distinct.length == contribs.length, "duplicate contribution emitted")
-    val dauS = contribs.filter(_._3 == "dau").groupBy(_._2).view.mapValues(_.length.toLong).toMap
-    val wauS = contribs.filter(_._3 == "wau").groupBy(_._2).view.mapValues(_.length.toLong).toMap
-    // batch reference on the same events
-    import spark.implicits._
-    val batch = graft.operators.Analytics.eventsActiveUsersOf(
-        all.toDF("user_id", "ts")).collect()
-      .map(r => r.getAs[Long]("day") -> (r.getAs[Long]("dau"), r.getAs[Long]("wau")))
-    assert(batch.nonEmpty)
-    batch.foreach { case (day, (dau, wau)) =>
-      assert(dauS.get(day).contains(dau), s"day $day dau: ${dauS.get(day)} vs $dau")
-      assert(wauS.get(day).contains(wau), s"day $day wau: ${wauS.get(day)} vs $wau")
-    }
-  }
-
-  test("retentionStream: a late earlier week reassigns the cohort with exact retraction") {
-    val dir = Files.createTempDirectory("graft-stream-rt1").toString
-    val input = MemoryStream[StreamIngest.DayEvent](spark)
-    val q = StreamIngest.retentionStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("rt_bridge")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    // weeks are Monday-anchored; 2024-05-06 is a Monday
-    val monMs = ts("2024-05-06 00:00:00").getTime
-    def ev(week: Long) = StreamIngest.DayEvent(3L,
-      new Timestamp(monMs + week * 7 * 86400000L + 3600000L))
-    // weeks 2 and 4 first (cohort 2), then the LATE week 0 event
-    Seq(Seq(ev(2)), Seq(ev(4)), Seq(ev(0))).foreach { b =>
-      input.addData(b); q.processAllAvailable()
-    }
-    q.stop()
-    val wk0 = Math.floorDiv(monMs / 86400000L + 3, 7)
-    val folded = spark.table("rt_bridge").collect()
-      .groupBy(r => (r.getAs[Long]("cohort_wk"), r.getAs[Long]("week_offset")))
-      .view.mapValues(_.map(_.getAs[Long]("delta")).sum)
-      .filter(_._2 != 0L).toMap
-    assert(folded == Map(
-      (wk0, 0L) -> 1L, (wk0, 2L) -> 1L, (wk0, 4L) -> 1L), s"got $folded")
-  }
-
-  test("retentionStream: folded deltas equal the batch retention triangle under shuffled batching") {
-    val rnd = new scala.util.Random(59)
-    val baseMs = ts("2024-04-01 00:00:00").getTime
-    val all = (1L to 12L).flatMap { u =>
-      (0 until (2 + rnd.nextInt(10))).map { _ =>
-        StreamIngest.DayEvent(u,
-          new Timestamp(baseMs + rnd.nextInt(9 * 7 * 24) * 3600L * 1000L))
-      }
-    }
-    val shuffled = rnd.shuffle(all)
-    val dir = Files.createTempDirectory("graft-stream-rt2").toString
-    val input = MemoryStream[StreamIngest.DayEvent](spark)
-    val q = StreamIngest.retentionStream(input.toDS(), watermark = "2160 hours")
-      .writeStream.format("memory").queryName("rt_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    shuffled.grouped(1 + shuffled.size / 5).foreach { b =>
-      input.addData(b); q.processAllAvailable()
-    }
-    q.stop()
-    val folded = spark.table("rt_out").collect()
-      .groupBy(r => (r.getAs[Long]("cohort_wk"), r.getAs[Long]("week_offset")))
-      .view.mapValues(_.map(_.getAs[Long]("delta")).sum)
-      .filter(_._2 != 0L).toMap
-    import spark.implicits._
-    val batch = graft.operators.Analytics.eventsRetentionOf(
-        all.toDF("user_id", "ts")).collect()
-      .map { r =>
-        val cw = r.getAs[Timestamp]("cohort_week")
-        val wkIdx = Math.floorDiv(cw.getTime / 86400000L + 3, 7)
-        (wkIdx, r.getAs[Long]("week_offset")) -> r.getAs[Long]("n_users")
-      }.toMap
-    assert(batch.nonEmpty)
-    assert(folded == batch,
-      s"stream fold diverges: extra=${folded.keySet -- batch.keySet} missing=${batch.keySet -- folded.keySet}")
-  }
-
-  test("lifecycleStream: late island-bridging day retracts class and churn exactly") {
-    val dir = Files.createTempDirectory("graft-stream-lc1").toString
-    val input = MemoryStream[StreamIngest.DayEvent](spark)
-    val q = StreamIngest.lifecycleStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("lc_bridge")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    val baseMs = ts("2024-05-01 00:00:00").getTime
-    def ev(day: Long) = StreamIngest.DayEvent(7L,
-      new Timestamp(baseMs + day * 86400000L + 1000L))
-    // day 0, then day 2 (a gap), then the LATE day 1 that bridges them
-    Seq(Seq(ev(0)), Seq(ev(2)), Seq(ev(1))).foreach { b =>
-      input.addData(b); q.processAllAvailable()
-    }
-    q.stop()
-    val folded = spark.table("lc_bridge").collect()
-      .groupBy(r => (r.getAs[Long]("day"), r.getAs[String]("cls")))
-      .view.mapValues(_.map(_.getAs[Long]("delta")).sum)
-      .filter(_._2 != 0L).toMap
-    val base = baseMs / 86400000L
-    assert(folded == Map(
-      (base + 0, "new") -> 1L,
-      (base + 1, "retained") -> 1L,   // late day lands as retained…
-      (base + 2, "retained") -> 1L,   // …and flips day 2 from resurrected
-      (base + 3, "churned") -> 1L),   // open churn past the last day
-      s"got $folded")
-  }
-
-  test("lifecycleStream: folded deltas equal the batch ledger under shuffled batching") {
-    val rnd = new scala.util.Random(41)
-    val baseMs = ts("2024-06-01 00:00:00").getTime
-    val all = (1L to 14L).flatMap { u =>
-      (0 until (3 + rnd.nextInt(14))).map { _ =>
-        StreamIngest.DayEvent(u,
-          new Timestamp(baseMs + rnd.nextInt(18 * 24) * 3600L * 1000L))
-      }
-    }
-    val shuffled = rnd.shuffle(all)
-    val dir = Files.createTempDirectory("graft-stream-lc2").toString
-    val input = MemoryStream[StreamIngest.DayEvent](spark)
-    val q = StreamIngest.lifecycleStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("lc_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    shuffled.grouped(1 + shuffled.size / 5).foreach { b =>
-      input.addData(b); q.processAllAvailable()
-    }
-    q.stop()
-    val folded = spark.table("lc_out").collect()
-      .groupBy(r => (r.getAs[Long]("day"), r.getAs[String]("cls")))
-      .view.mapValues(_.map(_.getAs[Long]("delta")).sum).toMap
-      .withDefaultValue(0L)
-    import spark.implicits._
-    val batch = graft.operators.Growth.eventsLifecycleOf(
-      all.toDF("user_id", "ts")).collect()
-    assert(batch.nonEmpty)
-    batch.foreach { r =>
-      val day = r.getAs[Long]("day")
-      assert(folded((day, "new")) == r.getAs[Long]("n_new"), s"day $day new")
-      assert(folded((day, "retained")) == r.getAs[Long]("n_retained"), s"day $day retained")
-      assert(folded((day, "resurrected")) == r.getAs[Long]("n_resurrected"), s"day $day resurrected")
-      // churn parity holds on every grid day; the stream's extra open-churn
-      // rows all sit past the grid max (the batch clip) — checked below
-      assert(folded((day, "churned")) == r.getAs[Long]("n_churned"), s"day $day churned")
-    }
-    val gridMax = batch.map(_.getAs[Long]("day")).max
-    val offGrid = spark.table("lc_out").collect()
-      .filter(r => r.getAs[Long]("day") > gridMax)
-    assert(offGrid.forall(_.getAs[String]("cls") == "churned"),
-      "only churn contributions may fall past the grid")
-  }
-
   test("errorBudgetStream: folded updates through the shared finisher equal batch") {
     val rnd = new scala.util.Random(31)
     val baseMs = ts("2024-06-01 00:00:00").getTime
@@ -933,48 +359,6 @@ class StreamIngestSpec extends SparkSpecBase {
       all.map(e => (e.ts, e.event_type)).toDF("ts", "event_type")).collect().map(_.toSeq)
     assert(want.exists(r => r(1) == 0L), "fixture must include a zero-day row")
     assert(got.toSeq == want.toSeq)
-  }
-
-  test("sessionConversionStream: folded deltas equal batch conversion under shuffled batching") {
-    val rnd = new scala.util.Random(47)
-    val baseMs = ts("2024-07-01 00:00:00").getTime
-    val all = (1L to 10L).flatMap { u =>
-      (0 until (3 + rnd.nextInt(10))).map { _ =>
-        StreamIngest.ConvEvent(u,
-          new Timestamp(baseMs + rnd.nextInt(5 * 86400) * 1000L),
-          if (rnd.nextInt(6) == 0) "purchase" else "view")
-      }
-    }
-    val shuffled = rnd.shuffle(all)
-    val dir = Files.createTempDirectory("graft-stream-sessconv").toString
-    val input = MemoryStream[StreamIngest.ConvEvent](spark)
-    val q = StreamIngest.sessionConversionStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("sconv_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    shuffled.grouped(1 + shuffled.size / 5).foreach { b =>
-      input.addData(b: _*); q.processAllAvailable()
-    }
-    q.stop()
-    import spark.implicits._
-    val folded = spark.table("sconv_out").collect()
-      .groupBy(_.getAs[Long]("day"))
-      .map { case (d, rs) =>
-        (d, rs.map(_.getAs[Long]("sess_delta")).sum, rs.map(_.getAs[Long]("conv_delta")).sum)
-      }
-      .filter(_._2 > 0)
-      .map { case (d, s, c) => (d, s, c, c * 10000 / s) }
-      .toSeq.sortBy(_._1)
-    val batch = graft.operators.Growth.eventsSessionConversionOf(
-        all.zipWithIndex.map { case (e, i) => (e.user_id, e.ts, i.toLong, e.event_type) }
-          .toDF("user_id", "ts", "event_id", "event_type"))
-      .collect()
-      .map(r => (r.getAs[Long]("day"), r.getAs[Long]("n_sessions"),
-        r.getAs[Long]("n_converted"), r.getAs[Long]("conv_bp")))
-      .toSeq
-    assert(batch.nonEmpty)
-    assert(folded == batch, s"\n got  $folded\n want $batch")
   }
 
   test("registerSketchStream: converged registers equal batch under shuffled re-delivery") {
@@ -1015,43 +399,6 @@ class StreamIngestSpec extends SparkSpecBase {
       .toMap
     assert(batch.nonEmpty && folded == batch,
       s"register mismatch: ${(batch.toSet -- folded.toSet).take(3)}")
-  }
-
-  test("registerTableStream serves a register-exact WAU curve under shuffled re-delivery") {
-    val rnd = new scala.util.Random(63)
-    val baseMs = ts("2024-08-01 00:00:00").getTime
-    val all = (0 until 700).map { _ =>
-      StreamIngest.DayEvent(rnd.nextInt(250).toLong,
-        new Timestamp(baseMs + rnd.nextInt(12 * 86400) * 1000L))
-    }
-    val feed = rnd.shuffle(all ++ all.take(all.size / 3)) // re-delivery
-    val dir = Files.createTempDirectory("graft-wau-table").toString
-    val input = MemoryStream[StreamIngest.DayEvent](spark)
-    val q = StreamIngest.registerTableStream(input.toDS(), s"$dir/regs",
-        watermark = "720 hours")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    feed.grouped(1 + feed.size / 6).foreach { b =>
-      input.addData(b); q.processAllAvailable()
-    }
-    q.stop()
-    // the streamed curve must equal the batch gate's sketch half as EXACT
-    // integers — same registers, same read-out code path
-    def curveOf(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getAs[Long]("day"),
-        (r.getAs[Long]("v_zero"), r.getAs[Long]("s_scaled"), r.getAs[Long]("est_raw"))))
-      .toMap
-    val streamed = curveOf(StreamIngest.wauCurveFromTable(spark, s"$dir/regs"))
-    val batch = curveOf(graft.operators.Sketches.eventsWauSketchOf(
-      all.map(e => (e.user_id, e.ts)).toDF("user_id", "ts"))
-      .select(col("day"), col("v_zero"), col("s_scaled"), col("est_raw")))
-    assert(batch.nonEmpty && streamed == batch,
-      s"curve mismatch: ${(batch.toSet -- streamed.toSet).take(3)}")
-    // replaying a suffix of batches against the existing table is a no-op
-    // (max-merge idempotence — the recovery contract)
-    StreamIngest.mergeRegisterTable(
-      spark.read.parquet(s"$dir/regs"), s"$dir/regs")
-    assert(curveOf(StreamIngest.wauCurveFromTable(spark, s"$dir/regs")) == batch)
   }
 
   test("pqCodesStream: streamed codes byte-equal batch encoding under shuffled batching") {
@@ -1324,59 +671,6 @@ class StreamIngestSpec extends SparkSpecBase {
     val weekFold = folded.groupBy(_._1._2).view.mapValues(_.values.sum).toMap
     val whole = batch.groupBy(_._1._2).view.mapValues(_.values.sum).toMap
     assert(weekFold == whole)
-  }
-
-  test("sessionConversionStream: bridge, conversion-flip and day-move all retract exactly") {
-    val dir = Files.createTempDirectory("graft-stream-sessconv2").toString
-    val input = MemoryStream[StreamIngest.ConvEvent](spark)
-    val q = StreamIngest.sessionConversionStream(input.toDS(), watermark = "720 hours")
-      .writeStream.format("memory").queryName("sconv2_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    def contribs() = spark.table("sconv2_out").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("day"),
-        r.getAs[Long]("sess_delta"), r.getAs[Long]("conv_delta"))).toSeq
-    val d0 = ts("2024-07-01 00:00:00").getTime // a Monday, day 19905
-    val day0 = d0 / 86400000L
-    // user 1: two separate sessions on day0 (view at 00:00, purchase at 01:00)
-    input.addData(
-      StreamIngest.ConvEvent(1L, new Timestamp(d0), "view"),
-      StreamIngest.ConvEvent(1L, new Timestamp(d0 + 3600000L), "purchase"))
-    q.processAllAvailable()
-    assert(contribs().sorted == Seq(
-      (1L, day0, 1L, 0L), (1L, day0, 1L, 1L)).sorted)
-    // late BRIDGE at 00:30: both sessions retract, one converted merge emits
-    input.addData(StreamIngest.ConvEvent(1L, new Timestamp(d0 + 1800000L), "view"))
-    q.processAllAvailable()
-    assert(contribs().sorted == Seq(
-      (1L, day0, 1L, 0L), (1L, day0, 1L, 1L),
-      (1L, day0, -1L, 0L), (1L, day0, -1L, -1L), (1L, day0, 1L, 1L)).sorted)
-    // user 2: session opens just after midnight day1; a late day0-23:59
-    // event PREPENDS and moves the session's day attribution back
-    val d1 = d0 + 86400000L
-    input.addData(StreamIngest.ConvEvent(2L, new Timestamp(d1 + 10000L), "view"))
-    q.processAllAvailable()
-    input.addData(StreamIngest.ConvEvent(2L, new Timestamp(d1 - 60000L), "view"))
-    q.processAllAvailable()
-    val u2 = contribs().filter(_._1 == 2L)
-    assert(u2.sorted == Seq(
-      (2L, day0 + 1, 1L, 0L), (2L, day0 + 1, -1L, 0L), (2L, day0, 1L, 0L)).sorted)
-    // user 3: a late purchase INSIDE an existing unconverted session flips
-    // its flag with a retraction pair on the same day
-    input.addData(StreamIngest.ConvEvent(3L, new Timestamp(d0), "view"))
-    q.processAllAvailable()
-    input.addData(StreamIngest.ConvEvent(3L, new Timestamp(d0 + 600000L), "purchase"))
-    q.processAllAvailable()
-    val u3 = contribs().filter(_._1 == 3L)
-    assert(u3.sorted == Seq(
-      (3L, day0, 1L, 0L), (3L, day0, -1L, 0L), (3L, day0, 1L, 1L)).sorted)
-    // a re-delivered duplicate of that purchase is contribution-neutral
-    input.addData(StreamIngest.ConvEvent(3L, new Timestamp(d0 + 600000L), "purchase"))
-    q.processAllAvailable()
-    assert(contribs().filter(_._1 == 3L).sorted == u3.sorted,
-      "duplicate event must not emit")
-    q.stop()
   }
 
   test("vectorIndexStream: dedup'd cell-partitioned index; pruned serving equals brute") {
@@ -2291,252 +1585,5 @@ class StreamIngestSpec extends SparkSpecBase {
     StreamIngest.vectorIndexStream(input.toDS(), cents, s"$dir/fresh")
     new java.io.File(s"$dir/idx2/batch=0/cell=0").mkdirs()
     StreamIngest.vectorIndexStream(input.toDS(), cents, s"$dir/idx2")
-  }
-
-  /** Shared harness for the pitJoinStream parity tests: returns the
-    * (streamed, batch) result sets for the same random corpus. */
-  private def pitParity(seed: Int, maxAgeSec: Option[Long], shuffle: Boolean)
-      : (Set[(Long, Long, Timestamp, Option[Timestamp], Option[Double])],
-         Set[(Long, Long, Timestamp, Option[Timestamp], Option[Double])],
-         Int) = {
-    val rnd = new scala.util.Random(seed)
-    val baseMs = ts("2024-09-01 00:00:00").getTime
-    val feats = (1L to 12L).flatMap { u =>
-      (0 until rnd.nextInt(8)).map { _ =>
-        StreamIngest.PitRow(u,
-          new Timestamp(baseMs + rnd.nextInt(5 * 86400) * 1000L), "feat",
-          0L, (rnd.nextInt(1000) + 1).toDouble)
-      }
-    }
-    val reqs = (1L to 12L).flatMap { u =>
-      (0 until 1 + rnd.nextInt(5)).map { i =>
-        StreamIngest.PitRow(u,
-          new Timestamp(baseMs + rnd.nextInt(5 * 86400) * 1000L), "req",
-          u * 100 + i, 0.0)
-      }
-    }
-    val all = feats ++ reqs
-    val feed = if (shuffle) rnd.shuffle(all) else all.sortBy(_.ts.getTime)
-    // sentinel far enough past max ts that the watermark finalizes all
-    // requests; filtered from both sides of the comparison
-    val sentinel = StreamIngest.PitRow(999L,
-      new Timestamp(baseMs + 4000L * 86400 * 1000L), "feat", 0L, 1.0)
-    val dir = Files.createTempDirectory("graft-stream-pit").toString
-    val input = MemoryStream[StreamIngest.PitRow](spark)
-    val wmark = if (shuffle) "720 hours" else "1 hour"
-    val q = StreamIngest.pitJoinStream(input.toDS(), maxAgeSec, wmark)
-      .writeStream.format("memory").queryName(s"pit_out_$seed")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    var preSentinel = 0
-    feed.grouped(1 + feed.size / 6).foreach { b =>
-      input.addData(b: _*); q.processAllAvailable()
-      preSentinel = spark.table(s"pit_out_$seed").count().toInt
-    }
-    input.addData(sentinel)
-    q.processAllAvailable(); q.processAllAvailable()
-    val streamed = spark.table(s"pit_out_$seed").collect()
-      .filter(_.getAs[Long]("user_id") != 999L)
-      .map(r => (r.getAs[Long]("row_id"), r.getAs[Long]("user_id"),
-        r.getAs[Timestamp]("entity_ts"),
-        Option(r.getAs[Timestamp]("feat_ts")),
-        Option(r.getAs[java.lang.Double]("feat_value")).map(_.doubleValue)))
-      .toSet
-    q.stop()
-    // batch truth: asof over the same rows, features at (key, ts,
-    // max(value)) grain — the grain the stream operator collapses to
-    val entityDf = reqs.map(r => (r.row_id, r.user_id, r.ts))
-      .toDF("row_id", "user_id", "entity_ts")
-    val featDf = feats.map(f => (f.user_id, f.ts, f.value))
-      .toDF("user_id", "ts", "value")
-      .groupBy("user_id", "ts").agg(max("value").as("value"))
-    val batch = graft.operators.PointInTimeJoin.asof(
-        entityDf, featDf, keys = Seq("user_id"), entityTs = "entity_ts",
-        featureTs = "ts", featureCols = Seq("value"), maxAgeSec = maxAgeSec,
-        outPrefix = "feat_")
-      .collect()
-      .map(r => (r.getAs[Long]("row_id"), r.getAs[Long]("user_id"),
-        r.getAs[Timestamp]("entity_ts"),
-        Option(r.getAs[Timestamp]("feat_ts")),
-        Option(r.getAs[java.lang.Double]("feat_value")).map(_.doubleValue)))
-      .toSet
-    (streamed, batch, preSentinel)
-  }
-
-  test("pitJoinStream: serve-once equals batch as-of under shuffled batching") {
-    val (streamed, batch, _) = pitParity(seed = 71, maxAgeSec = None, shuffle = true)
-    assert(batch.nonEmpty && batch.exists(_._4.isEmpty),
-      "fixture must exercise both matched and unmatched requests")
-    assert(streamed == batch,
-      s"\n only-stream ${streamed -- batch}\n only-batch ${batch -- streamed}")
-  }
-
-  test("pitJoinStream: max-age TTL equals batch as-of with maxAgeSec") {
-    val (streamed, batch, _) =
-      pitParity(seed = 73, maxAgeSec = Some(86400L), shuffle = true)
-    assert(batch.exists(_._4.isEmpty) && batch.exists(_._4.nonEmpty),
-      "fixture must exercise the TTL cutoff both ways")
-    assert(streamed == batch,
-      s"\n only-stream ${streamed -- batch}\n only-batch ${batch -- streamed}")
-  }
-
-  test("pitJoinStream: in-order feed with a tight watermark serves progressively") {
-    val (streamed, batch, preSentinel) =
-      pitParity(seed = 79, maxAgeSec = None, shuffle = false)
-    assert(streamed == batch,
-      s"\n only-stream ${streamed -- batch}\n only-batch ${batch -- streamed}")
-    // the shuffled tests above exercise the pending/timeout flush path
-    // (their 720 h watermark defers ALL emission to the sentinel); this
-    // one pins the inline path: a tight watermark over an in-order feed
-    // must serve requests as the stream advances, before any sentinel
-    assert(preSentinel > 0,
-      "watermark advance over the in-order feed must emit before the sentinel")
-  }
-
-  // ---- heavyHittersStream (SpaceSaving bounded state) ----
-
-  /** Final summary = max-ver rows per shard from the append-mode sink. */
-  private def hhFinal(table: String): Map[String, (Long, Long)] = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("shard"))
-    spark.table(table)
-      .withColumn("mver", max(col("ver")).over(w))
-      .filter(col("ver") === col("mver"))
-      .select(col("gram"), col("n_est"), col("err"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-  }
-
-  private def runHH(name: String, batches: Seq[Seq[String]], capacity: Int)
-      : Map[String, (Long, Long)] = {
-    val dir = Files.createTempDirectory(s"graft-hh-$name").toString
-    val input = MemoryStream[StreamIngest.TokRow](spark)
-    val q = StreamIngest.heavyHittersStream(input.toDS(), capacity, nShards = 1)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    batches.foreach { b =>
-      input.addData(b.map(StreamIngest.TokRow(_)): _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    hhFinal(name)
-  }
-
-  test("heavyHittersStream: SpaceSaving bounds hold under shuffled batching") {
-    // corpus: a×50 b×40 c×30 + 30 singletons → N=150; capacity 4 ⇒ every
-    // gram with true count > 150/4 = 37.5 (a, b) MUST be retained, and
-    // every retained estimate must satisfy true ≤ n_est ≤ true + err.
-    val corpus = Seq.fill(50)("a") ++ Seq.fill(40)("b") ++ Seq.fill(30)("c") ++
-      (1 to 30).map(i => s"s$i")
-    val truth = corpus.groupBy(identity).map { case (g, o) => g -> o.size.toLong }
-    for ((seed, idx) <- Seq(1, 42).zipWithIndex) {
-      val shuffled = new scala.util.Random(seed).shuffle(corpus)
-      val batches = shuffled.grouped(40).toSeq
-      val fin = runHH(s"hh_out_$idx", batches, capacity = 4)
-      assert(fin.size <= 4, "summary never exceeds capacity")
-      assert(fin.contains("a") && fin.contains("b"),
-        s"keys over N/capacity must survive any order (got ${fin.keySet})")
-      fin.foreach { case (g, (n, err)) =>
-        val t = truth.getOrElse(g, 0L)
-        assert(n >= t && n - err <= t,
-          s"$g: estimate $n (err $err) must bracket true $t")
-      }
-      // heavy keys saw every occurrence or inherited on entry — either
-      // way the lower bound pins them above every singleton's true count
-      assert(fin("a")._1 - fin("a")._2 >= 30L || fin("a")._1 >= 50L)
-    }
-  }
-
-  test("botFlagStream matches the batch op on in-order feeds") {
-    import graft.operators.Growth
-    val base = ts("2024-01-01 10:00:00").getTime
-    def ev(u: Long, offsetSec: Long, id: Long) = StreamIngest.BotEvent(
-      u, new Timestamp(base + offsetSec * 1000L), id)
-    // metronome bot 1: 30 events exactly 10 s apart (cadence rule);
-    // burst bot 2: 12 events in one minute, n < 20 (burst rule alone);
-    // organic 3: strictly growing distinct gaps (no rule fires)
-    val rows =
-      (0 until 30).map(i => ev(1L, i * 10L, 100 + i)) ++
-      (0 until 12).map(i => ev(2L, i * 2L, 200 + i)) ++
-      (0 until 8).map(i => ev(3L, i * (61L + 7L * i), 300 + i))
-    val ordered = rows.sortBy(e => (e.ts.getTime, e.event_id))
-    val dir = Files.createTempDirectory("graft-botstream").toString
-    val input = MemoryStream[StreamIngest.BotEvent](spark)
-    val q = StreamIngest.botFlagStream(input.toDS())
-      .writeStream.format("memory").queryName("bot_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    ordered.grouped(17).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-    val fin = spark.table("bot_out")
-      .withColumn("mver", max(col("ver")).over(w))
-      .filter(col("ver") === col("mver"))
-      .collect().map(r => r.getAs[Long]("user_id") ->
-        (r.getAs[Long]("n_events"), r.getAs[Long]("burst_max"),
-          r.getAs[Long]("modal_delta_s"), r.getAs[Long]("modal_share_bp"),
-          r.getAs[Long]("bot_flag"))).toMap
-    val batch = Growth.eventsBotFlagOf(
-        rows.map(e => (e.user_id, e.ts, e.event_id)).toDF("user_id", "ts", "event_id"))
-      .collect().map(r => r.getAs[Long]("user_id") ->
-        (r.getAs[Long]("n_events"), r.getAs[Long]("burst_max"),
-          r.getAs[Long]("modal_delta_s"), r.getAs[Long]("modal_share_bp"),
-          r.getAs[Long]("bot_flag"))).toMap
-    assert(fin == batch, s"stream $fin vs batch $batch")
-    assert(batch(1L)._5 == 1L && batch(2L)._5 == 1L && batch(3L)._5 == 0L)
-  }
-
-  test("botFlagStream: eviction keeps the dominant cadence over any alphabet") {
-    // 100 distinct warm-up gaps then 60 × 7 s: capacity 64 forces
-    // evictions, but SpaceSaving retains the dominant gap and its share
-    // (60/160 = 3750 bp ≥ 2500) still fires the cadence rule.
-    val base = ts("2024-02-01 00:00:00").getTime
-    var off = 0L
-    val rows = scala.collection.mutable.ArrayBuffer(
-      StreamIngest.BotEvent(7L, new Timestamp(base), 0L))
-    (1 to 100).foreach { i =>
-      off += 61L + i; rows += StreamIngest.BotEvent(7L, new Timestamp(base + off * 1000L), i.toLong)
-    }
-    (1 to 60).foreach { i =>
-      off += 7L; rows += StreamIngest.BotEvent(7L, new Timestamp(base + off * 1000L), 100L + i)
-    }
-    val dir = Files.createTempDirectory("graft-botstream2").toString
-    val input = MemoryStream[StreamIngest.BotEvent](spark)
-    val q = StreamIngest.botFlagStream(input.toDS())
-      .writeStream.format("memory").queryName("bot_out2")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    rows.grouped(40).foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
-    q.stop()
-    val fin = spark.table("bot_out2")
-      .orderBy(col("ver").desc).limit(1)
-      .collect().map(r => (r.getAs[Long]("modal_delta_s"),
-        r.getAs[Long]("modal_share_bp"), r.getAs[Long]("bot_flag"))).head
-    assert(fin._1 == 7L, "dominant cadence survives eviction")
-    assert(fin._2 >= 2500L && fin._3 == 1L)
-  }
-
-  test("heavyHittersStream: state and emission stay bounded by capacity") {
-    // 200 distinct grams through a capacity-8 shard: per-batch emission
-    // is the whole summary, which must never exceed 8 rows per version.
-    val corpus = (1 to 200).map(i => s"g$i")
-    val dir = Files.createTempDirectory("graft-hh-bound").toString
-    val input = MemoryStream[StreamIngest.TokRow](spark)
-    val q = StreamIngest.heavyHittersStream(input.toDS(), capacity = 8, nShards = 1)
-      .writeStream.format("memory").queryName("hh_bound")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp")
-      .start()
-    corpus.grouped(50).foreach { b =>
-      input.addData(b.map(StreamIngest.TokRow(_)): _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val perVer = spark.table("hh_bound")
-      .groupBy(col("ver")).agg(count(lit(1)).as("n")).collect()
-    assert(perVer.nonEmpty && perVer.forall(_.getAs[Long]("n") <= 8L))
   }
 }
