@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model.{FeatureRef, FeatureTable, OnDemandFeature, OnDemandView, Project, Registry}
 import graft.operators.{LatestValue, PointInTimeJoin}
@@ -522,7 +527,14 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * requested), and the derived feature's `__status` propagates from its
     * inputs — NOT_FOUND, then OUTSIDE_MAX_AGE, if any input carries it;
     * NULL_VALUE when the derived expression evaluates to null; PRESENT
-    * otherwise. */
+    * otherwise.
+    *
+    * A local request (one whose optimized plan is a local relation, such as
+    * `Seq(...).toDF`) is answered eagerly: the store is read at call time,
+    * in one key-filtered scan, and the result is a local relation that
+    * collects without a job. Any other request is answered lazily by a
+    * broadcast-semi plus broadcast-left-join plan that reads the store when
+    * the result runs. */
   def getOnlineFeatures(store: OnlineStore, requestDf: DataFrame,
                         refs: Seq[FeatureRef], requestTs: Column): DataFrame = {
     // reference: serving/util/RequestHelper.validateOnlineRequest
@@ -555,9 +567,11 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     derived.drop(helperCols: _*)
   }
 
-  /** The feature-table half of online retrieval, one table at a time:
-    * semi-filter the snapshot by the request keys, left-join the hits onto
-    * the request, then emit the table's statuses and values in one select. */
+  /** The feature-table half of online retrieval, one table at a time. A
+    * local request ([[localKeyTypes]]) is joined to the store's hits on the
+    * driver ([[joinLocal]]); any other request semi-filters the snapshot by
+    * the request keys and left-joins the hits onto the request. Both paths
+    * then emit the table's statuses and values through [[serve]]. */
   private def lookupOnline(store: OnlineStore, requestDf: DataFrame,
                            refs: Seq[FeatureRef], requestTs: Column): DataFrame = {
     refs.groupBy(_.table).toSeq.sortBy(_._1).foldLeft(requestDf) {
@@ -571,33 +585,114 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
         val stored = snap.select(
           (t.entities :+ t.eventTsCol).map(col) ++
             trefs.map(r => col(r.feature)): _*)
-        // Never broadcast the store snapshot: it is one row per entity key
-        // (10⁸+ at scale — broadcasting it OOMs). An outer join can only
-        // build its non-preserved side, so the scale shape is a two-step
-        // lookup: (1) left-semi filter the snapshot by the broadcast request
-        // keys — the snapshot streams once, never shuffles, and the output
-        // is at most |request keys| rows; (2) broadcast that tiny filtered
-        // snapshot into the left join that preserves every request row.
-        // The key side is the request itself, not `acc`: it carries none of
-        // the earlier tables' lookup joins, and a semi join ignores
-        // duplicate build keys, so a distinct would only add a shuffle.
-        val requestKeys = requestDf.select(t.entities.map(col): _*)
-        val hit = stored.join(broadcast(requestKeys), t.entities, "left_semi")
-        val joined = acc.join(broadcast(hit), t.entities, "left")
-        val fresh = t.maxAgeSec.fold(lit(true))(age =>
-          PointInTimeJoin.withinMaxAge(col(t.eventTsCol), requestTs, age))
-        val lookupCols = (t.eventTsCol +: trefs.map(_.feature)).toSet
-        val served = trefs.flatMap { r =>
-          val out = s"${tname}__${r.feature}"
-          Seq(when(col(t.eventTsCol).isNull, lit("NOT_FOUND"))
-                .when(!fresh, lit("OUTSIDE_MAX_AGE"))
-                .when(col(r.feature).isNull, lit("NULL_VALUE"))
-                .otherwise(lit("PRESENT")).as(out + "__status"),
-              when(fresh, col(r.feature)).as(out))
+        localKeyTypes(acc, stored, t.entities) match {
+          case Some(keyTypes) =>
+            serve(joinLocal(acc, stored, t.entities, keyTypes), t, trefs, requestTs)
+          case None =>
+            // Never broadcast the store snapshot: it is one row per entity
+            // key (10⁸+ at scale — broadcasting it OOMs). An outer join can
+            // only build its non-preserved side, so the scale shape is a
+            // two-step lookup: (1) left-semi filter the snapshot by the
+            // broadcast request keys — the snapshot streams once, never
+            // shuffles, and the output is at most |request keys| rows; (2)
+            // broadcast that tiny filtered snapshot into the left join that
+            // preserves every request row. The key side is the request
+            // itself, not `acc`: it carries none of the earlier tables'
+            // lookup joins, and a semi join ignores duplicate build keys, so
+            // a distinct would only add a shuffle.
+            val requestKeys = requestDf.select(t.entities.map(col): _*)
+            val hit = stored.join(broadcast(requestKeys), t.entities, "left_semi")
+            val joined = acc.join(broadcast(hit), t.entities, "left")
+            serve(joined, t, trefs, requestTs)
         }
-        joined.select(
-          (joined.columns.filterNot(lookupCols).map(c => col(s"`$c`")) ++ served)
-            .toIndexedSeq: _*)
     }
+  }
+
+  /** The store's key types when `request` is answered on the driver: its
+    * optimized plan is a local relation (`Seq(...).toDF`, or a projection
+    * over one), and each key column, named exactly, widens without loss to
+    * the store's key type (`stored` leads with the key columns). */
+  private def localKeyTypes(request: DataFrame, stored: DataFrame,
+                            keys: Seq[String]): Option[Seq[DataType]] = {
+    val keyTypes = stored.schema.fields.take(keys.size).map(_.dataType).toSeq
+    val castable = keys.zip(keyTypes).forall { case (k, dt) =>
+      request.schema.fields.exists(f => f.name == k && Cast.canUpCast(f.dataType, dt))
+    }
+    request.queryExecution.optimizedPlan match {
+      case r: LocalRelation if castable && !r.isStreaming => Some(keyTypes)
+      case _ => None
+    }
+  }
+
+  /** The lookup join of a local request, done on the driver. Collecting
+    * the request runs no job; one key-filtered scan (an `isin` per key
+    * column, pushed to the store's files) fetches the hits; they are
+    * matched to request rows by the join's equality on the keys cast to
+    * the store's types. The result is what the USING left join gives — key
+    * columns, the other request columns, then the stored columns, null
+    * where nothing matched — as a local relation, so a projection over it
+    * runs no job either. */
+  private def joinLocal(request: DataFrame, stored: DataFrame, keys: Seq[String],
+                        keyTypes: Seq[DataType]): DataFrame = {
+    val (fields, n) = (request.schema.fields, keys.size)
+    val casts = keys.zip(keyTypes).map { case (k, dt) => col(k).cast(dt) }
+    val rows = request.select(col("*") +: casts: _*).collect()
+    // a key with a null part never matches, as in the join
+    val requested = rows.toSeq.map(r => Some((fields.length until fields.length + n).map(r.get))
+      .filterNot(_.contains(null)))
+    val wanted = requested.flatten.distinctBy(_.map(joinValue))
+    val hits = if (wanted.nonEmpty) {
+      // the per-column filters reach the store's files; for a composite key
+      // the tuple filter then drops pairs the request never asked for
+      val perColumn = keys.indices
+        .map(i => col(keys(i)).isin(wanted.map(_(i)).distinctBy(joinValue): _*))
+      val tuples = if (n == 1) Nil else Seq(struct(keys.map(col): _*)
+        .isin(wanted.map(k => struct(k.zip(keys).map { case (v, c) => lit(v).as(c) }: _*)): _*))
+      val inRequest = perColumn ++ tuples
+      stored.filter(inRequest.reduce(_ && _)).collect().toSeq
+        .groupBy(h => (0 until n).map(i => joinValue(h.get(i))))
+    } else Map.empty[Seq[Any], Seq[Row]]
+    val order = keys.map(k => fields.indexWhere(_.name == k)) ++
+      fields.indices.filterNot(i => keys.contains(fields(i).name))
+    val missing: Seq[Seq[Any]] = Seq(Seq.fill(stored.schema.length - n)(null))
+    val out = rows.iterator.zip(requested).flatMap { case (r, k) =>
+      val front = order.map(r.get)
+      k.flatMap(v => hits.get(v.map(joinValue))).fold(missing)(_.map(_.toSeq.drop(n)))
+        .map(h => Row.fromSeq(front ++ h))
+    }.toSeq
+    val schema = StructType(order.map(fields(_)) ++
+      stored.schema.fields.drop(n).map(_.copy(nullable = true)))
+    spark.createDataFrame(out.asJava, schema)
+  }
+
+  /** A key value as the join compares it: binary by content, and -0.0
+    * equal to 0.0 (a boxed NaN already equals NaN). */
+  private def joinValue(v: Any): Any = v match {
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case d: Double if d == 0.0 => 0.0
+    case f: Float if f == 0.0f => 0.0f
+    case other => other
+  }
+
+  /** A table's response over its lookup join (the request columns, then
+    * the stored event time and features, null where no key matched): the
+    * request columns, then a status and a value per feature, in one
+    * select. */
+  private def serve(joined: DataFrame, t: FeatureTable, trefs: Seq[FeatureRef],
+                    requestTs: Column): DataFrame = {
+    val fresh = t.maxAgeSec.fold(lit(true))(age =>
+      PointInTimeJoin.withinMaxAge(col(t.eventTsCol), requestTs, age))
+    val lookupCols = (t.eventTsCol +: trefs.map(_.feature)).toSet
+    val served = trefs.flatMap { r =>
+      val out = s"${t.name}__${r.feature}"
+      Seq(when(col(t.eventTsCol).isNull, lit("NOT_FOUND"))
+            .when(!fresh, lit("OUTSIDE_MAX_AGE"))
+            .when(col(r.feature).isNull, lit("NULL_VALUE"))
+            .otherwise(lit("PRESENT")).as(out + "__status"),
+          when(fresh, col(r.feature)).as(out))
+    }
+    joined.select(
+      (joined.columns.filterNot(lookupCols).map(c => col(s"`$c`")) ++ served)
+        .toIndexedSeq: _*)
   }
 }

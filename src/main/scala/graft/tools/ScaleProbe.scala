@@ -1268,7 +1268,7 @@ object ScaleProbe {
     }
     if (args.headOption.contains("usersloop")) {
       val sizes = args.drop(1).filter(_.forall(_.isDigit)).map(_.toLong)
-      usersLoopProbe(spark, if (sizes.nonEmpty) sizes else Seq(300000L))
+      usersLoopProbe(spark, if (sizes.nonEmpty) sizes.toSeq else Seq(300000L))
       spark.stop()
       return
     }

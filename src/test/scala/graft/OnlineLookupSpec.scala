@@ -5,9 +5,13 @@ import java.sql.Timestamp
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model._
 import graft.serving.{OnlineStore, ParquetOnlineStore}
@@ -40,6 +44,35 @@ class OnlineLookupSpec extends SparkSpecBase {
   }
 
   private val value = Seq(FeatureRef("activity", "value"))
+
+  /** `activity` materialized in full: users 1, 2 and 3 at 11.0, 20.0, 30.0. */
+  private lazy val activityOnline: ParquetOnlineStore = {
+    val online = new ParquetOnlineStore(s"$workDir/online-activity")
+    fs.materialize("activity", online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
+    online
+  }
+
+  /** `spend_by_region` keyed by (user_id, region), materialized: (1, eu)
+    * → 4.0 (the later of two rows), (1, us) → 2.0, (2, eu) → 3.0. */
+  private lazy val regionFixture: (FeatureStore, ParquetOnlineStore) = {
+    val src = s"$workDir/by-region"
+    Seq((1L, "eu", ts("2024-01-01 10:00:00"), 1.0),
+        (1L, "us", ts("2024-01-02 10:00:00"), 2.0),
+        (2L, "eu", ts("2024-01-03 10:00:00"), 3.0),
+        (1L, "eu", ts("2024-01-04 10:00:00"), 4.0))
+      .toDF("user_id", "region", "ts", "spend")
+      .write.mode("overwrite").parquet(src)
+    val r = new Registry
+    r.applyEntity(Entity("user_id", ValueKind.Int64K))
+    r.applyEntity(Entity("region", ValueKind.StringK))
+    r.applyTable(FeatureTable("spend_by_region", Seq("user_id", "region"),
+      Seq(Feature("spend", ValueKind.DoubleK)), eventTsCol = "ts",
+      batchSourcePath = Some(src)))
+    val regional = new FeatureStore(r, spark)
+    val online = new ParquetOnlineStore(s"$workDir/online-region")
+    regional.materialize("spend_by_region", online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
+    (regional, online)
+  }
 
   /** Jobs of one materializeIncremental tick into an existing store and
     * log. */
@@ -86,22 +119,43 @@ class OnlineLookupSpec extends SparkSpecBase {
   }
 
   test("a 16-key read of a materialized store runs at most 3 jobs and no shuffle") {
-    val online = new ParquetOnlineStore(s"$workDir/online-budget")
-    fs.materialize("activity", online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
+    val online = activityOnline
     val keys = 1L to 16L
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    var rows = Seq.empty[(Option[Long], Option[Double], String)]
-    val (jobs, shuffleStages) = jobsAndShuffleStages {
-      rows = served(fs.getOnlineFeatures(online, keys.toDF("user_id"), value, now))
+    def read(req: DataFrame): (Int, Int, Seq[(Option[Long], Option[Double], String)]) = {
+      var rows = Seq.empty[(Option[Long], Option[Double], String)]
+      val (jobs, shuffleStages) = jobsAndShuffleStages {
+        rows = served(fs.getOnlineFeatures(online, req, value, now))
+      }
+      (jobs, shuffleStages, rows.sortBy(_._1))
     }
-    assert(jobs <= 3, s"one online read ran $jobs jobs")
-    assert(shuffleStages == 0, s"one online read ran $shuffleStages shuffle stages")
-    assert(rows.sortBy(_._1) == keys.map {
+    // a local request: one key-filtered store scan, joined on the driver
+    val (jobs, shuffleStages, rows) = read(keys.toDF("user_id"))
+    assert(jobs == 1, s"one local online read ran $jobs jobs")
+    assert(shuffleStages == 0, s"one local online read ran $shuffleStages shuffle stages")
+    assert(rows == keys.map {
       case 1L => (Some(1L), Some(11.0), "PRESENT")
       case 2L => (Some(2L), Some(20.0), "PRESENT")
       case 3L => (Some(3L), Some(30.0), "PRESENT")
       case k => (Some(k), None, "NOT_FOUND")
     })
+    // the same keys from an RDD take the broadcast-join path
+    val (rddJobs, rddShuffleStages, rddRows) =
+      read(spark.sparkContext.parallelize(keys, 2).toDF("user_id"))
+    assert(rddJobs <= 3, s"one distributed online read ran $rddJobs jobs")
+    assert(rddShuffleStages == 0, s"one distributed online read ran $rddShuffleStages shuffle stages")
+    assert(rddRows == rows)
+  }
+
+  test("a local read of null keys only runs no job") {
+    val online = activityOnline
+    var rows = Seq.empty[(Option[Long], Option[Double], String)]
+    val (jobs, _) = jobsAndShuffleStages {
+      rows = served(fs.getOnlineFeatures(online, Seq[Option[Long]](None, None).toDF("user_id"),
+        value, now))
+    }
+    assert(jobs == 0, s"a read of null keys ran $jobs jobs")
+    assert(rows == Seq.fill(2)((None, None, "NOT_FOUND")))
   }
 
   test("an upsert into an existing store runs one shuffle stage") {
@@ -139,22 +193,7 @@ class OnlineLookupSpec extends SparkSpecBase {
   }
 
   test("a composite entity key serves online") {
-    val src = s"$workDir/by-region"
-    Seq((1L, "eu", ts("2024-01-01 10:00:00"), 1.0),
-        (1L, "us", ts("2024-01-02 10:00:00"), 2.0),
-        (2L, "eu", ts("2024-01-03 10:00:00"), 3.0),
-        (1L, "eu", ts("2024-01-04 10:00:00"), 4.0))
-      .toDF("user_id", "region", "ts", "spend")
-      .write.mode("overwrite").parquet(src)
-    val r = new Registry
-    r.applyEntity(Entity("user_id", ValueKind.Int64K))
-    r.applyEntity(Entity("region", ValueKind.StringK))
-    r.applyTable(FeatureTable("spend_by_region", Seq("user_id", "region"),
-      Seq(Feature("spend", ValueKind.DoubleK)), eventTsCol = "ts",
-      batchSourcePath = Some(src)))
-    val regional = new FeatureStore(r, spark)
-    val online = new ParquetOnlineStore(s"$workDir/online-region")
-    regional.materialize("spend_by_region", online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
+    val (regional, online) = regionFixture
     val req = Seq((1L, "eu"), (1L, "us"), (2L, "eu"), (2L, "us")).toDF("user_id", "region")
     val out = regional.getOnlineFeatures(online, req,
         Seq(FeatureRef("spend_by_region", "spend")), now)
@@ -195,6 +234,85 @@ class OnlineLookupSpec extends SparkSpecBase {
       (1L, 200L) -> (Some(5L), "PRESENT", Some(3.0), "PRESENT"),
       (2L, 100L) -> (Some(7L), "PRESENT", Some(4.5), "PRESENT"),
       (3L, 300L) -> (None, "NOT_FOUND", None, "NOT_FOUND")))
+  }
+
+  /** Serves `rows` once as a local relation and once as an RDD-backed
+    * frame, requires the same schema and rows from both paths, and returns
+    * the rows sorted (binary values as byte sequences). */
+  private def sameOnBothPaths(store: FeatureStore, online: OnlineStore, ddl: String,
+                              rows: Seq[Row], refs: Seq[FeatureRef],
+                              at: Column = now): Seq[Seq[Any]] = {
+    val schema = StructType.fromDDL(ddl)
+    val local = store.getOnlineFeatures(online, spark.createDataFrame(rows.asJava, schema), refs, at)
+    val distributed = store.getOnlineFeatures(online,
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema), refs, at)
+    // the local answer is a local relation itself: it was looked up on the driver
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(local.schema == distributed.schema)
+    def sorted(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq
+      .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v })
+      .sortBy(_.mkString("|"))
+    val out = sorted(local)
+    assert(out == sorted(distributed))
+    out
+  }
+
+  test("local and distributed requests agree: nulls, duplicates, widened keys, max age, views") {
+    val online = activityOnline
+    // rows are (user_id, status, value)
+    val statusOf = (out: Seq[Seq[Any]]) => out.map(r => r.head -> r(1)).toMap
+    // duplicate, null and missing keys
+    assert(statusOf(sameOnBothPaths(fs, online, "user_id BIGINT",
+      Seq(1L, 1L, 2L, null, 9L, 9L, null).map(Row(_)), value)) ==
+      Map(1L -> "PRESENT", 2L -> "PRESENT", (null: Any) -> "NOT_FOUND", 9L -> "NOT_FOUND"))
+    // an INT request key against the INT64 store key
+    assert(statusOf(sameOnBothPaths(fs, online, "user_id INT",
+      Seq(1, 2, 9, null).map(Row(_)), value)) ==
+      Map(1 -> "PRESENT", 2 -> "PRESENT", 9 -> "NOT_FOUND", (null: Any) -> "NOT_FOUND"))
+    // extra request columns, the key not first
+    sameOnBothPaths(fs, online, "tag STRING, user_id BIGINT, n INT",
+      Seq(Row("a", 1L, 10), Row("b", null, 11), Row("c", 9L, null), Row(null, 3L, 12)), value)
+    // user 1's value is exactly max_age (10 days) old, then 1 µs older
+    val boundary = ts("2024-01-15 10:00:00")
+    assert(statusOf(sameOnBothPaths(fs, online, "user_id BIGINT", Seq(Row(1L)), value,
+      lit(boundary))) == Map(1L -> "PRESENT"))
+    assert(statusOf(sameOnBothPaths(fs, online, "user_id BIGINT", Seq(Row(1L)), value,
+      lit(ts("2024-01-15 10:00:00.000001")))) == Map(1L -> "OUTSIDE_MAX_AGE"))
+    // on-demand views, with the input requested and pulled in only for derivation
+    fs.registry.applyOnDemandView(OnDemandView("activity_x", value,
+      Seq(OnDemandFeature("doubled", "activity__value * 2"))))
+    val doubled = FeatureRef("activity_x", "doubled")
+    Seq(Seq(doubled), value :+ doubled).foreach { refs =>
+      sameOnBothPaths(fs, online, "user_id BIGINT", Seq(1L, 2L, 9L, null).map(Row(_)), refs)
+    }
+  }
+
+  test("local and distributed requests agree: composite, BYTES and two-entity keys, null values") {
+    val (regional, byRegion) = regionFixture
+    sameOnBothPaths(regional, byRegion, "user_id BIGINT, region STRING",
+      Seq(Row(1L, "eu"), Row(1L, "us"), Row(2L, "eu"), Row(2L, "us"), Row(null, "eu"),
+        Row(1L, null), Row(1L, "eu")),
+      Seq(FeatureRef("spend_by_region", "spend")))
+    val (twoTables, twoStore) = OnlineLookupSpec.twoEntityFixture(spark)
+    sameOnBothPaths(twoTables, twoStore, "user_id BIGINT, item_id BIGINT",
+      Seq(Row(1L, 100L), Row(1L, 200L), Row(2L, 100L), Row(3L, 300L), Row(null, 100L)),
+      Seq(FeatureRef("users", "level"), FeatureRef("items", "rating")))
+    // BYTES keys match by content; a stored null value is NULL_VALUE
+    val r = new Registry
+    r.applyEntity(Entity("doc", ValueKind.BytesK))
+    r.applyTable(FeatureTable("blobs", Seq("doc"), Seq(Feature("score", ValueKind.DoubleK)),
+      eventTsCol = "ts", batchSourcePath = Some("unread/blobs")))
+    val snap = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(Project.Default, Array[Byte](1, 2), ts("2024-01-01 10:00:00"), 1.5),
+        Row(Project.Default, Array[Byte](3), ts("2024-01-01 10:00:00"), null)), 1),
+      StructType.fromDDL("__project STRING, doc BINARY, ts TIMESTAMP, score DOUBLE"))
+    val out = sameOnBothPaths(new FeatureStore(r, spark), OnlineLookupSpec.readOnly(snap),
+      "doc BINARY", Seq(Array[Byte](1, 2), Array[Byte](3), Array[Byte](9), null,
+        Array[Byte](1, 2)).map(Row(_)), Seq(FeatureRef("blobs", "score")))
+    assert(out == Seq(
+      Seq(Seq[Byte](1, 2), "PRESENT", 1.5), Seq(Seq[Byte](1, 2), "PRESENT", 1.5),
+      Seq(Seq[Byte](3), "NULL_VALUE", null), Seq(Seq[Byte](9), "NOT_FOUND", null),
+      Seq(null, "NOT_FOUND", null)))
   }
 
   test("a handle's remembered schema never hides another handle's writes") {
@@ -253,12 +371,14 @@ object OnlineLookupSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "__project STRING, user_id BIGINT, item_id BIGINT, ts TIMESTAMP, level BIGINT, rating DOUBLE")
     val snap = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    val store = new OnlineStore {
-      override def upsert(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
-                          valueCols: Seq[String]): Unit =
-        throw new UnsupportedOperationException("read-only fixture store")
-      override def snapshot(s: SparkSession): DataFrame = snap
-    }
-    (new FeatureStore(r, spark), store)
+    (new FeatureStore(r, spark), readOnly(snap))
+  }
+
+  /** A read-only store whose snapshot is `snap`. */
+  def readOnly(snap: DataFrame): OnlineStore = new OnlineStore {
+    override def upsert(rows: DataFrame, keys: Seq[String], orderCols: Seq[String],
+                        valueCols: Seq[String]): Unit =
+      throw new UnsupportedOperationException("read-only fixture store")
+    override def snapshot(s: SparkSession): DataFrame = snap
   }
 }

@@ -2,12 +2,17 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.optimizer.{BuildRight, BuildSide}
 import org.apache.spark.sql.catalyst.plans.{LeftOuter, LeftSemi}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.model._
 import graft.operators.{Dedup, FeatureOps, Multimodal}
@@ -64,21 +69,30 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
+  /** `activity` (user 1 → 10.0) materialized into a parquet store. */
+  private lazy val activityOnline: (FeatureStore, ParquetOnlineStore) = {
+    val workDir = Files.createTempDirectory("graft-plan").toString
+    Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 10.0))
+      .toDF("user_id", "ts", "value")
+      .write.mode("overwrite").parquet(s"$workDir/activity")
+    val r = new Registry
+    r.applyEntity(Entity("user_id", ValueKind.Int64K))
+    r.applyTable(FeatureTable("activity", Seq("user_id"),
+      Seq(Feature("value", ValueKind.DoubleK)), eventTsCol = "ts",
+      batchSourcePath = Some(s"$workDir/activity")))
+    val fs = new FeatureStore(r, spark)
+    val online = new ParquetOnlineStore(s"$workDir/online")
+    fs.materialize("activity", online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
+    (fs, online)
+  }
+
   test("getOnlineFeatures never broadcasts the store snapshot side") {
     withoutAqe {
-      val workDir = Files.createTempDirectory("graft-plan").toString
-      Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 10.0))
-        .toDF("user_id", "ts", "value")
-        .write.mode("overwrite").parquet(s"$workDir/activity")
-      val r = new Registry
-      r.applyEntity(Entity("user_id", ValueKind.Int64K))
-      r.applyTable(FeatureTable("activity", Seq("user_id"),
-        Seq(Feature("value", ValueKind.DoubleK)), eventTsCol = "ts",
-        batchSourcePath = Some(s"$workDir/activity")))
-      val fs = new FeatureStore(r, spark)
-      val online = new ParquetOnlineStore(s"$workDir/online")
-      fs.materialize("activity", online, "2024-01-01 00:00:00", "2024-02-01 00:00:00")
-      val df = fs.getOnlineFeatures(online, Seq(1L, 9L).toDF("user_id"),
+      val (fs, online) = activityOnline
+      // an RDD-backed request takes the distributed lookup (a local one is
+      // joined on the driver, see the next test)
+      val df = fs.getOnlineFeatures(online,
+        spark.sparkContext.parallelize(Seq(1L, 9L), 1).toDF("user_id"),
         Seq(FeatureRef("activity", "value")),
         lit(Timestamp.valueOf("2024-01-02 00:00:00")))
       assertLookupShape(df.queryExecution.executedPlan)
@@ -90,11 +104,51 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
+  test("a local online read is one key-filtered store scan: no join, exchange or broadcast") {
+    withoutAqe {
+      val (fs, online) = activityOnline
+      // every query the read runs, up to a marker query: the listener bus
+      // delivers in order, so the marker comes after all of the read's
+      val plans = new ConcurrentLinkedQueue[SparkPlan]()
+      val marker = new CountDownLatch(1)
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == "__marker")) marker.countDown()
+          else plans.add(qe.executedPlan)
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val out = try {
+        val rows = fs.getOnlineFeatures(online, Seq(1L, 9L).toDF("user_id"),
+          Seq(FeatureRef("activity", "value")),
+          lit(Timestamp.valueOf("2024-01-02 00:00:00"))).collect()
+        Seq(1).toDF("__marker").collect()
+        assert(marker.await(30, TimeUnit.SECONDS), "listener bus never delivered the marker")
+        rows
+      } finally spark.listenerManager.unregister(listener)
+      val read = plans.asScala.toSeq
+      val scans = read.flatMap(_.collect { case s: FileSourceScanExec => s })
+      assert(scans.size == 1, s"expected one store scan, found ${scans.size}")
+      val pushed = scans.head.metadata.getOrElse("PushedFilters", "")
+      assert(pushed.contains("In(user_id"), s"key filter not pushed to the store scan: $pushed")
+      read.foreach { p =>
+        val moved = p.collect {
+          case n if n.isInstanceOf[BaseJoinExec] || n.isInstanceOf[Exchange] ||
+            n.nodeName.contains("Broadcast") => n.nodeName
+        }
+        assert(moved.isEmpty, s"a local online read ran ${moved.mkString(", ")}")
+      }
+      assert(out.map(rw => rw.getAs[Long]("user_id") ->
+        rw.getAs[String]("activity__value__status")).toMap ==
+        Map(1L -> "PRESENT", 9L -> "NOT_FOUND"))
+    }
+  }
+
   test("a two-table online read keys each table's semi filter on the request alone") {
     withoutAqe {
       val (fs, store) = OnlineLookupSpec.twoEntityFixture(spark)
       val df = fs.getOnlineFeatures(store,
-        Seq((1L, 100L), (3L, 300L)).toDF("user_id", "item_id"),
+        spark.sparkContext.parallelize(Seq((1L, 100L), (3L, 300L)), 1).toDF("user_id", "item_id"),
         Seq(FeatureRef("users", "level"), FeatureRef("items", "rating")),
         lit(Timestamp.valueOf("2024-01-02 00:00:00")))
       val plan = df.queryExecution.executedPlan
