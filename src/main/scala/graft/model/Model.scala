@@ -87,8 +87,10 @@ object StreamFormat {
   * DataSourceProto KafkaOptions / KinesisOptions / FileOptions). The
   * sandbox has no Kafka/Kinesis broker, so these carry the full spec —
   * model + validation + field mapping — while only the file source is
-  * executable here (StreamIngest); a cluster deployment swaps the
-  * `readStream` format without touching the registry surface. */
+  * executable here ([[graft.streaming.StreamIngest.readStreamSource]]
+  * opens Kafka/Kinesis specs only through its rate demo transport); a
+  * cluster deployment swaps the `readStream` format without touching the
+  * registry surface. */
 sealed trait StreamSourceSpec {
   def eventTsCol: String
   def fieldMapping: Map[String, String]

@@ -448,8 +448,7 @@ object Analytics {
   /** Last-touch attribution: every purchase is credited to the SAME USER's
     * most recent click at or before the purchase, as long as that click is
     * within a 1-hour window (older → unattributed) — the standard
-    * marketing/product attribution query, and the batch twin of the
-    * streaming interval join (StreamIngest.intervalJoin).
+    * marketing/product attribution query.
     *
     * Scale shape: this is exactly an as-of join with TTL, so it reuses
     * [[graft.operators.PointInTimeJoin.asof]] — ONE hash shuffle of

@@ -97,11 +97,8 @@ object Dedup {
     * benchmark split) is the oracle-gated twin, and the superset spec
     * ties this operator to it on every gate corpus. */
   /** The frozen Bloom artifact (m/64 OR-folded bit words + geometry) —
-    * plain data, so the INGESTION-TIME streaming decontaminator
-    * ([[graft.streaming.StreamIngest.decontaminateStream]]) probes the
-    * same artifact the batch gate builds: build once offline from the
-    * benchmark, broadcast as a literal everywhere, batch and stream
-    * flagging can never diverge (shared [[bloomHit]] probe). */
+    * plain data, built once from the benchmark and broadcast as a
+    * literal into the [[bloomHit]] probe. */
   final case class BenchBloom(bits: Seq[Long], m: Long, k: Int)
 
   /** Fold a shingle column's values into the Bloom artifact: k bit
@@ -122,7 +119,7 @@ object Dedup {
 
   /** All-k-bits-set membership probe of `s` against the broadcast-literal
     * artifact — a pure projection, no join, no shuffle. */
-  private[graft] def bloomHit(b: BenchBloom, s: Column): Column = {
+  private def bloomHit(b: BenchBloom, s: Column): Column = {
     val bloomLit = typedLit(b.bits)
     (0 until b.k).map { i =>
       val pos = pmod(xxhash64(s, lit(i)), lit(b.m))
@@ -131,20 +128,8 @@ object Dedup {
     }.reduce(_ && _)
   }
 
-  /** Per-doc flagged-shingle count as ONE projection column over `text`
-    * — the stateless form the ingestion-time streaming decontaminator
-    * selects per arriving row (no explode, no state, no shuffle): the
-    * per-row array fold probes each distinct shingle against the
-    * broadcast-literal artifact, the "once per row" higher-order-fn
-    * class. Counts distinct flagged shingles, identical to the batch
-    * gate's post-explode count. */
-  private[graft] def bloomFlagCol(b: BenchBloom): Column =
-    size(filter(array_distinct(hashedNgrams(col("text"), 5)),
-      s => bloomHit(b, s))).cast("long")
-
   /** The frozen benchmark Bloom for a corpus dir's mod-97 benchmark
-    * split — built once, probed by BOTH the batch gate and the
-    * ingestion-time stream. */
+    * split. */
   def benchBloomFor(spark: SparkSession, dir: String): BenchBloom = {
     val bench = Tables.documents(spark, dir)
       .filter(pmod(col("doc_id"), lit(97)) === 0)

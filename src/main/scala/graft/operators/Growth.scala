@@ -328,14 +328,11 @@ object Growth {
       .agg(count(lit(1)).as("n_events"), sum(col("is_err")).as("n_errors")))
 
   /** The dense-grid + trailing-frame finisher over day-grain counts
-    * (day, n_events, n_errors) — shared verbatim by the batch gate above
-    * and the streaming twin's fold ([[graft.streaming.StreamIngest
-    * .errorBudgetStream]]), so the two paths CANNOT diverge on the
-    * zero-day/window arithmetic: a silent day emits nothing anywhere;
-    * the grid here restores it. Input is calendar-bounded (one row per
+    * (day, n_events, n_errors): a silent day emits no count row, and the
+    * grid here restores it. Input is calendar-bounded (one row per
     * active day), so the unpartitioned frame is safe at any corpus
     * scale. */
-  def errorBudgetFrame(daily: DataFrame): DataFrame = {
+  private def errorBudgetFrame(daily: DataFrame): DataFrame = {
     val span = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val dense = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
       .join(daily, Seq("day"), "left")

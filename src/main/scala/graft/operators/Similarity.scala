@@ -518,34 +518,15 @@ object Similarity {
     * then exact-cosine top-k over the one candidate join. */
   private[graft] def knnIvfRank(emb: DataFrame, cands: DataFrame,
       centroids: Seq[Seq[Double]], nprobe: Int,
-      queryLo: Long, queryHi: Long, pruneCells: Boolean): DataFrame =
-    knnIvfRankQueries(
-      emb.filter(col("vec_id") >= queryLo && col("vec_id") < queryHi)
-        .select(col("vec_id").as("query_id"), col("embedding")),
-      cands, centroids, nprobe, K, pruneCells)
-
-  /** The fully general form: explicit query frame (query_id, embedding)
-    * and result depth — [[knnOverVectorIndex]] serves a STREAM-MAINTAINED
-    * index through the identical plan, so batch gate, filtered search,
-    * and streamed-index serving can never drift. */
-  /** When `dedupByPriority` is set, `cands` carries a numeric `priority`
-    * column and duplicate neighbor_ids are resolved to the LOWEST
-    * priority before ranking — the serve-time enforcement of the
-    * streamed-delta add-only contract ([[knnIvfWithStreamedDelta]]).
-    * The dedup window runs on the CELL-PRUNED candidate join output
-    * (sub-linear at index scale), never on the full index — an anti-join
-    * of delta ids against the batch lists would shuffle the whole index
-    * per serve. */
-  private[graft] def knnIvfRankQueries(queriesDf: DataFrame, cands: DataFrame,
-      centroids: Seq[Seq[Double]], nprobe: Int, k: Int,
-      pruneCells: Boolean, dedupByPriority: Boolean = false): DataFrame = {
-    val spark = queriesDf.sparkSession
+      queryLo: Long, queryHi: Long, pruneCells: Boolean): DataFrame = {
+    val spark = emb.sparkSession
     val cents = broadcast(
       spark.createDataFrame(centroids.zipWithIndex.map { case (v, i) => (i, v) })
         .toDF("cent_id", "cvec"))
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("csim").desc, col("cent_id"))
-    val queries = queriesDf
+    val queries = emb.filter(col("vec_id") >= queryLo && col("vec_id") < queryHi)
+      .select(col("vec_id").as("query_id"), col("embedding"))
       .crossJoin(cents)
       .withColumn("csim", cosine(asDouble(col("embedding")), col("cvec")))
       .withColumn("crn", row_number().over(wq))
@@ -570,21 +551,11 @@ object Similarity {
       } else (queries, cands)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    val scored = scanned.join(broadcast(probeSide), Seq("cell"))
+    scanned.join(broadcast(probeSide), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos", round(cosine(col("embedding"), col("qvec")), 6))
-    val deduped = if (!dedupByPriority) scored else {
-      // lowest priority wins per (query, neighbor); cos tiebreak keeps
-      // the result deterministic if priorities ever tie
-      val wd = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"), col("neighbor_id"))
-        .orderBy(col("priority"), col("cos").desc)
-      scored.withColumn("dn", row_number().over(wd))
-        .filter(col("dn") === 1).drop("dn", "priority")
-    }
-    deduped
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= K)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -630,78 +601,6 @@ object Similarity {
       corpusFingerprint(spark, dir) + "_v" + IvfFlatVersion +
         "g" + centroidContentHash(cents),
       partitionCols = Seq("cell"))(lists)
-  }
-
-  /** Serve IVFFlat over the persisted batch index PLUS a stream-maintained
-    * delta directory ([[graft.streaming.StreamIngest.ivfDeltaStream]]) —
-    * the live half of the inverted lists, which previously only rebuilt
-    * per corpus fingerprint. The delta layout carries the quantizer
-    * content hash as its top partition level (`geom=g<hash>`), so:
-    *  - matching-geometry rows join the batch lists as-is and the probed
-    *    cells still prune BOTH scans (cell stays a partition column);
-    *  - STALE-geometry rows (written before a quantizer retrain) are
-    *    detected by the layout itself and re-assigned in-flight under the
-    *    current centroids — one narrow map over the (small) delta, never
-    *    a wrong-bucket probe. The batch artifact already rebuilds via its
-    *    content-hash key; this closes the same staleness class for the
-    *    streamed half.
-    * Contract: delta vec_ids are NEW vectors (the faiss add-only
-    * discipline; [[graft.streaming.StreamIngest.dedupStreamJittered]]
-    * dedups within the stream). The contract is ENFORCED at serve time:
-    * candidates dedup on vec_id before ranking (batch wins over any
-    * delta row; among delta rows the freshest micro-batch wins, fresh
-    * geometry over stale) — a violating re-ingest perturbs nothing, and
-    * the dedup window runs on the cell-pruned candidate set, so the
-    * enforcement costs nothing index-sized. */
-  def knnIvfWithStreamedDelta(spark: SparkSession, dir: String,
-      deltaPath: String, nprobe: Int = 0, k: Int = K): DataFrame = {
-    val n = corpusCount(spark, dir)
-    val np = if (nprobe > 0) nprobe else nprobeFor(n)
-    val cents = loadOrTrainCentroids(spark, dir)
-    val g = "g" + centroidContentHash(cents)
-    val batch = ivfIndex(spark, dir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("embedding"),
-        lit(0L).as("priority"))
-    val p = new org.apache.hadoop.fs.Path(deltaPath)
-    val hasDelta = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    val cands = if (!hasDelta) batch else {
-      val delta = spark.read.parquet(deltaPath)
-      // priority bands: batch index (0) < fresh-geom delta < stale-geom
-      // delta; within a band a LATER micro-batch has LOWER priority, so
-      // replays/overlaps resolve to the freshest write deterministically
-      val fresh = delta.filter(col("geom") === g)
-        .select(col("cell"), col("vec_id").as("neighbor_id"), col("embedding"),
-          (lit(2000000000L) - col("batch").cast("long")).as("priority"))
-      val stale = delta.filter(col("geom") =!= g)
-        .select(nearestCellExpr(col("embedding"), cents).as("cell"),
-          col("vec_id").as("neighbor_id"), col("embedding"),
-          (lit(4000000000L) - col("batch").cast("long")).as("priority"))
-      batch.unionByName(fresh).unionByName(stale)
-    }
-    val queries = Tables.embeddings(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    knnIvfRankQueries(queries, cands, cents, np, k, pruneCells = true,
-      dedupByPriority = true)
-  }
-
-  /** Short content hash of a FULL frozen PQ model (coarse centroids +
-    * OPQ rotation + codebooks + geometry, order-sensitive) — the
-    * layout-level pin for STREAM-MAINTAINED code directories: codes only
-    * mean anything relative to the model that encoded them, and unlike
-    * full vectors they cannot be re-assigned at read (the embeddings are
-    * gone), so a geometry mismatch must fail LOUDLY at serving, never
-    * decode against the wrong tables. */
-  private[graft] def pqModelContentHash(model: PqModel): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    def upd(v: Double): Unit = { buf.clear(); buf.putDouble(v); md.update(buf.array()) }
-    model.ivfCents.foreach(_.foreach(upd))
-    model.rot.foreach(_.foreach(upd))
-    model.cents.sortBy(t => (t._1, t._2)).foreach { case (s, c, v) =>
-      upd(s.toDouble); upd(c.toDouble); v.foreach(upd)
-    }
-    upd(model.nSub.toDouble)
-    md.digest().take(6).map("%02x".format(_)).mkString
   }
 
   /** Short content hash of a trained centroid set (order-sensitive —
@@ -821,14 +720,7 @@ object Similarity {
     * lists themselves). `quantized` radii measure the ×1000-integer copies
     * of the members against the ×1000-integer centroid (the twin's
     * geometry — the triangle inequality needs the radius of the EXACT
-    * vectors being searched, and any fixed pivot works).
-    *
-    * Contract: radii describe the BATCH inverted lists only. A streamed
-    * delta row ([[graft.streaming.StreamIngest.ivfDeltaStream]]) can land
-    * outside its cell's recorded radius, so extending range search over a
-    * delta-merged index must either re-derive radii per delta fold or
-    * treat delta rows as always-admissible (scan them unpruned — the safe
-    * default; `knn_range` deliberately serves the batch artifact alone). */
+    * vectors being searched, and any fixed pivot works). */
   private[graft] def cellRadii(spark: SparkSession, dir: String,
       quantized: Boolean): DataFrame = {
     val cents = loadOrTrainCentroids(spark, dir)
@@ -860,7 +752,7 @@ object Similarity {
     * brute-force oracle hash-gates the PRUNING): admissible (query, cell)
     * pairs from the radius bound, one collect of the bounded probe frame
     * (≤ queries × cells rows) to feed the partition-pruning isin AND the
-    * broadcast join side — the [[knnIvfRankQueries]] probe shape. */
+    * broadcast join side — the [[knnIvfRank]] probe shape. */
   private[graft] def rangeSearch(spark: SparkSession, dir: String,
       quantized: Boolean): DataFrame = {
     val cents = loadOrTrainCentroids(spark, dir)
@@ -880,7 +772,7 @@ object Similarity {
     * search, MATERIALIZED: ≤ queries × cells rows (bounded — Q is the
     * serving batch, cells ≤ training config). One collect feeds both the
     * literal partition-pruning IN list and the broadcast join side
-    * ([[knnIvfRankQueries]]'s discipline), and materializing here keeps
+    * ([[knnIvfRank]]'s discipline), and materializing here keeps
     * the probe lineage (embeddings scan × cells × radii) out of the
     * candidate join's re-executions (the presentation sort's range
     * partitioner samples its child — an un-pinned probe frame would run
@@ -924,66 +816,6 @@ object Similarity {
         org.apache.spark.sql.types.ArrayType(
           if (quantized) org.apache.spark.sql.types.LongType
           else org.apache.spark.sql.types.DoubleType))))
-
-  /** Range search over the batch lists PLUS a stream-maintained delta
-    * directory ([[graft.streaming.StreamIngest.ivfDeltaStream]]): batch
-    * cells prune by [[cellRadii]]'s proof; delta rows are ALWAYS
-    * ADMISSIBLE — the radii describe the batch lists only (the cellRadii
-    * contract: a streamed row may land outside its cell's recorded
-    * radius), so the only exact choice is to scan the small-by-design
-    * delta unpruned. A welcome corollary: range serving needs NO geometry
-    * handling on the delta at all — no cell is ever consulted, so
-    * stale-geom rows are just rows, where the top-k path
-    * ([[knnIvfWithStreamedDelta]]) must re-assign them in flight.
-    *
-    * Same add-only contract as the top-k path: an id present in the batch
-    * index resolves to the batch row (priority 0 beats every delta band),
-    * and within the delta a LATER micro-batch wins, so replays/overlaps
-    * dedup deterministically. The dedup runs BEFORE the threshold: a
-    * superseded delta copy must not keep serving from inside the band on
-    * the strength of a stale embedding. Exactness spec: delta vector
-    * planted OUTSIDE its nearest cell's batch radius is still found. */
-  def rangeSearchWithStreamedDelta(spark: SparkSession, dir: String,
-      deltaPath: String): DataFrame = {
-    val cents = loadOrTrainCentroids(spark, dir)
-    val queries = Tables.embeddings(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qvec"))
-    if (cents.isEmpty)
-      return queries.select(col("query_id"),
-          col("query_id").as("neighbor_id"), lit(0.0).as("cos"))
-        .filter(lit(false))
-    val probeRows = rangeProbeFrame(spark, dir, quantized = false)
-    val probed = probeRows.map(_.getInt(0)).distinct.toIndexedSeq
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), rangeProbeSchema(quantized = false))
-    val batch = ivfIndex(spark, dir)
-      .filter(col("cell").isin(probed: _*))
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        asDouble(col("embedding")).as("cv"))
-      .join(broadcast(local), Seq("cell"))
-      .select(col("query_id"), col("neighbor_id"), col("cv"), col("qvec"),
-        lit(0L).as("priority"))
-    val p = new org.apache.hadoop.fs.Path(deltaPath)
-    val hasDelta = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    val cands = if (!hasDelta) batch else {
-      val delta = spark.read.parquet(deltaPath)
-        .select(col("vec_id").as("neighbor_id"),
-          asDouble(col("embedding")).as("cv"),
-          (lit(2000000000L) - col("batch").cast("long")).as("priority"))
-        .crossJoin(broadcast(queries))
-        .select(col("query_id"), col("neighbor_id"), col("cv"), col("qvec"),
-          col("priority"))
-      batch.unionByName(delta)
-    }
-    val wd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"), col("neighbor_id")).orderBy(col("priority"))
-    cands.filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("rn", row_number().over(wd)).filter(col("rn") === 1)
-      .withColumn("cos", round(cosine(col("cv"), col("qvec")), 6))
-      .filter(col("cos") >= lit(RangeTau))
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-      .orderBy(col("query_id"), col("neighbor_id"))
-  }
 
   /** The candidate half of the range search: scan ONLY the probe frame's
     * cells (partition-pruned isin), exact-cosine every candidate against
@@ -1422,28 +1254,14 @@ object Similarity {
   }
 
   /** The frozen PQ model as plain data — coarse centroids, OPQ rotation,
-    * per-subspace codebooks, geometry. What a streaming encoder (or any
-    * out-of-process consumer) needs to produce codes BYTE-EQUAL to the
-    * batch index: encoding is a pure function of (model, vector), so
-    * codes appended by a stream can never diverge from a batch re-encode
-    * of the same rows (spec-pinned). Retraining stays batch — the faiss
-    * discipline: train once offline, add forever. */
+    * per-subspace codebooks, geometry. Encoding is a pure function of
+    * (model, vector), so any consumer holding the model produces codes
+    * BYTE-EQUAL to the batch index (spec-pinned). */
   final case class PqModel(ivfCents: Seq[Seq[Double]],
                            rot: Array[Array[Double]],
                            cents: Seq[(Int, Int, Seq[Double])],
                            nSub: Int) {
     def subDim: Int = PqDim / nSub
-  }
-
-  /** Load the persisted PQ artifacts as a frozen [[PqModel]] (training on
-    * first use — the [[ensurePq]] path the query side already rides). */
-  def loadPqModel(spark: SparkSession, dir: String): PqModel = {
-    val path = ensurePq(spark, dir)
-    val cents = spark.read.parquet(path + "/centroids").collect()
-      .map(r => (r.getAs[Int]("s"), r.getAs[Int]("c"),
-        r.getSeq[Double](r.fieldIndex("cvec")).toIndexedSeq)).toIndexedSeq
-    PqModel(loadOrTrainCentroids(spark, dir), loadRotation(spark, path),
-      cents, pqSubFor(corpusCount(spark, dir)))
   }
 
   /** Residual-encode vectors under a frozen model: normalize, subtract
@@ -1575,60 +1393,7 @@ object Similarity {
   def knnIvfPqWith(spark: SparkSession, dir: String, nprobe: Int, rerank: Int,
                    queryLo: Long = 0L, queryHi: Long = 10L): DataFrame = {
     val path = ensurePq(spark, dir)
-    knnIvfPqOverCodes(spark, dir, path, spark.read.parquet(path + "/codes"),
-      nprobe, rerank, queryLo, queryHi)
-  }
-
-  /** The IVF+PQ query over an EXPLICIT codes table — the serving half
-    * factored from [[knnIvfPqWith]] so a STREAM-MAINTAINED codes index
-    * ([[graft.streaming.StreamIngest.pqCodesStream]]'s appended parquet)
-    * is queryable with the exact batch plan: same ADC tables, same
-    * shortlist, same rerank. Because encoding is a pure function of the
-    * frozen model, a stream-built index serves answers IDENTICAL to the
-    * batch-built one over the same rows (spec-pinned) — the full
-    * ingest-to-serve loop of a live compressed vector store. */
-  def knnOverPqCodes(spark: SparkSession, dir: String, codesPath: String,
-                     nprobe: Int, rerank: Int): DataFrame = {
-    val path = ensurePq(spark, dir)
-    val codes = spark.read.parquet(codesPath)
-    // geometry gate for stream-maintained code directories: the layout
-    // carries the WRITER model's content hash (pqCodesStream's geom=
-    // level); codes under a retrained model cannot be re-assigned at
-    // read (no embeddings in the codes table), so a mismatch fails
-    // loudly instead of decoding through the wrong ADC tables — the
-    // same staleness class the batch artifact's meta `geom` check and
-    // the IVF delta's in-flight re-assignment close for their halves.
-    if (codes.columns.contains("geom")) {
-      val current = "g" + pqModelContentHash(loadPqModel(spark, dir))
-      // geom is the TOP partition level of the streamed layout: list the
-      // geom=* directories (one filesystem metadata call) instead of a
-      // distinct over the data — the old full codes-table scan sat in
-      // the same hot path whose fixed cost ensurePq-threading halved
-      val root = new org.apache.hadoop.fs.Path(codesPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val geomDirs = fs.listStatus(root).toIndexedSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("geom="))
-        .map(_.getPath.getName.stripPrefix("geom="))
-      val stale =
-        if (geomDirs.nonEmpty) geomDirs.filterNot(_ == current)
-        else // defensive: geom as a data column in a non-partitioned dump
-          codes.select(col("geom")).distinct()
-            .collect().toIndexedSeq.map(_.getString(0)).filterNot(_ == current)
-      require(stale.isEmpty,
-        s"streamed PQ codes at $codesPath were encoded under a different " +
-          s"quantizer geometry (${stale.mkString(",")} vs $current) — " +
-          "re-encode the stream's vectors under the current model")
-    }
-    knnIvfPqOverCodes(spark, dir, path, codes, nprobe, rerank, 0L, 10L)
-  }
-
-  /** `path` is the caller's already-resolved [[ensurePq]] artifact root —
-    * resolving it twice per query (filesystem probes + meta read +
-    * corpusCount + loadOrTrainCentroids) doubled the fixed cost of the
-    * hottest serving path. */
-  private def knnIvfPqOverCodes(spark: SparkSession, dir: String,
-      path: String, codes: DataFrame, nprobe: Int, rerank: Int,
-      queryLo: Long, queryHi: Long): DataFrame = {
+    val codes = spark.read.parquet(path + "/codes")
     val nSub = pqSubFor(corpusCount(spark, dir))
     val subDim = PqDim / nSub
     val centroids = loadOrTrainCentroids(spark, dir)
@@ -3166,27 +2931,6 @@ object Similarity {
         col("m.neg_label").as("neg_label"), col("m.cos").as("cos"))
       .orderBy(col("vec_id"))
   }
-
-  /** Top-k cosine search over a CELL-PARTITIONED parquet vector index
-    * (built by [[graft.streaming.StreamIngest.vectorIndexStream]] or any
-    * batch writer using the same frozen quantizer): queries pick their
-    * nprobe nearest cells, the probed cell set (≤ queries × nprobe
-    * values, driver-bounded by the serving batch) pushes into the scan
-    * as an `isin` PARTITION filter, and pruning skips every unprobed
-    * directory — the directory layout IS the inverted index, so the scan
-    * cost is the probed posting lists, not the corpus. (Dynamic
-    * partition pruning could derive the same filter from the join at
-    * the cost of a subquery broadcast; the explicit collect keeps the
-    * plan deterministic and pinnable.) Same ranking/tie rule as
-    * [[knnBrute]]: cos desc, neighbor_id asc. */
-  def knnOverVectorIndex(spark: SparkSession, indexPath: String,
-      queriesDf: DataFrame, centroids: Seq[Seq[Double]], nprobe: Int,
-      k: Int): DataFrame =
-    knnIvfRankQueries(queriesDf,
-      spark.read.parquet(indexPath)
-        .select(col("cell").cast("int").as("cell"),
-          col("vec_id").as("neighbor_id"), col("embedding")),
-      centroids, nprobe, k, pruneCells = true)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "embed_hard_negatives" -> (embedHardNegatives _),

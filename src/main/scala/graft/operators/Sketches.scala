@@ -51,10 +51,8 @@ object Sketches {
   private def mixSql(h: String): String =
     s"((($h) * ($h)) % $P * 31 + ($h)) % $P"
 
-  /** Scrambled portable id hash / rank, shared with the streaming twin
-    * ([[graft.streaming.StreamIngest.registerSketchStream]]). */
+  /** Scrambled portable id hash (WideIdSpec pins it at Long.MaxValue). */
   private[graft] def mixedIdHash(id: Column): Column = mix(TextAnalysis.idHash(id))
-  private[graft] def rhoCol(v: Column): Column = rho(v)
 
   /** The raw-estimate arithmetic as ONE shared pair of constants — every
     * consumer (three oracles, both engine sides) composes THESE, so an
@@ -206,18 +204,12 @@ object Sketches {
   }
 
   /** Trailing-7-day WAU curve read out of a per-day REGISTER TABLE
-    * (day, bucket, m_reg) — the serving half of [[eventsWauSketchOf]],
-    * factored so STREAMED registers serve the same curve the batch gate
-    * hash-proves: [[graft.streaming.StreamIngest.registerSketchStream]]
-    * maintains exactly this table (element-wise max converges under any
-    * batching/re-delivery), and this read-out is the only other step.
+    * (day, bucket, m_reg) — the read-out half of [[eventsWauSketchOf]].
     * Densify the day grid first (a silent day is REAL zero registers in
     * every window covering it), window-max per bucket over the trailing
     * 7 days — calendar × 64 rows, the bounded-grain window class — then
-    * the summary/estimate algebra. Register-EXACT: batch and streamed
-    * curves are equal integers, not approximately equal estimates
-    * (spec-pinned under shuffled re-delivery). */
-  def wauCurveFromRegisters(perDay: DataFrame): DataFrame = {
+    * the summary/estimate algebra. */
+  private def wauCurveFromRegisters(perDay: DataFrame): DataFrame = {
     val span = perDay.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val grid = span.select(explode(sequence(col("d0"), col("d1"))).as("day"))
       .select(col("day"), explode(sequence(lit(0L), lit(M - 1L))).as("bucket"))
@@ -441,10 +433,8 @@ object Sketches {
   def qQuantileSketch(spark: SparkSession, dir: String): DataFrame =
     qQuantileSketchOf(Tables.lineitem(spark, dir))
 
-  /** Adds `msb` and `bucket` to any frame with a `cents` column ≥ 1 —
-    * the one bucketization shared by the batch gate and the streaming
-    * twin ([[graft.streaming.StreamIngest.quantileSketchStream]]). */
-  private[graft] def withHdrBucket(df: DataFrame): DataFrame =
+  /** Adds `msb` and `bucket` to any frame with a `cents` column ≥ 1. */
+  private def withHdrBucket(df: DataFrame): DataFrame =
     df.withColumn("msb", msbOf(col("cents")))
       .withColumn("bucket", bucketCol)
 

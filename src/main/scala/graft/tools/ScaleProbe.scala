@@ -686,7 +686,7 @@ object ScaleProbe {
     * to exact brute force (knnIvfOver's documented contract), which
     * doubles as the recall truth here. Reports the corpus-side cell
     * assignment separately — in production it persists with the index
-    * (pqCodesStream / the codes artifact), so the query-side delta is
+    * (the IVFFlat lists / the codes artifact), so the query-side delta is
     * the number that matters per query. */
   def ivfQueryProbe(spark: SparkSession): Unit =
     Seq(200000L, 400000L).foreach(ivfQueryProbeAt(spark, _))
@@ -1004,133 +1004,6 @@ object ScaleProbe {
     }
   }
 
-  /** Small-files decay measurement for the stream index sinks (r12): a
-    * fabricated geom-keyed delta with `batches` micro-batch directories
-    * (the layout ivfDeltaStream writes), a serving-shaped pruned read
-    * timed before/after [[graft.streaming.StreamIngest.compactStreamIndex]],
-    * with a content checksum proving the fold changed nothing. */
-  def compactionProbe(spark: SparkSession, batches: Int = 60,
-                      rowsPer: Int = 2000): Unit = {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_probe").toString
-    val root = s"$dir/delta"
-    val parent = s"$root/geom=gprobe"
-    for (b <- 0 until batches) {
-      spark.range(b.toLong * rowsPer, (b + 1).toLong * rowsPer).select(
-          (col("id") % 16).cast("int").as("cell"), col("id").as("vec_id"),
-          array((0 until 8).map(i =>
-            sin(col("id") * (i * 37 + 1)).cast("float")): _*).as("embedding"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$parent/batch=$b")
-    }
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Int = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    def checksum(): (Long, Long) = {
-      val r = spark.read.parquet(root)
-        .agg(count(lit(1)), sum(col("vec_id"))).collect().head
-      (r.getLong(0), r.getLong(1))
-    }
-    // serving-shaped read: partition-pruned scan of 2 of 16 cells,
-    // repeated — the per-query cost a hot index pays for directory
-    // listing + footer reads across every batch dir
-    def readCost(): Double = probeTimed {
-      (0 until 10).foreach { _ =>
-        spark.read.parquet(root)
-          .filter(col("cell").isin(3, 7))
-          .agg(sum(col("vec_id"))).collect()
-      }
-    }._2
-    val sumBefore = checksum()
-    val (fB, tB) = (files(), readCost())
-    val (_, tC) = probeTimed(
-      graft.streaming.StreamIngest.compactStreamIndex(spark, root))
-    val (fA, tA) = (files(), readCost())
-    val sumAfter = checksum()
-    require(sumBefore == sumAfter, s"compaction changed content: $sumBefore -> $sumAfter")
-    println(f"[scale] compaction batches=$batches files $fB -> $fA  " +
-      f"10x pruned-read $tB%.1f s -> $tA%.1f s  (fold cost $tC%.1f s; " +
-      f"checksum ${sumBefore._1} rows preserved)")
-  }
-
-  /** Write-amplification ladder for the two compaction disciplines (r13
-    * verdict item 3): simulate `batches` micro-batches arriving one at a
-    * time and fire the maintenance hook at its natural cadence — the FLAT
-    * fold every `every` batches (the in-stream `compactEvery` discipline:
-    * each fold rewrites the sink's FULL committed row set, O(B²/K) bytes
-    * over B batches) vs the TIERED fold after every batch (no-op listing
-    * until a level fills; each row rewritten once per level promotion,
-    * O(B·log B) bytes). Reports maintenance bytes written per quarter of
-    * the run — the flat line must GROW per quarter (each fold is bigger
-    * than the last), the tiered line must stay flat-ish — plus final dir
-    * counts and a content checksum proving both disciplines preserved
-    * every row. */
-  def compactionAmpProbe(spark: SparkSession, batches: Int = 64,
-                         cadence: Int = 4, rowsPer: Int = 5000): Unit = {
-    import org.apache.spark.sql.functions._
-    for (mode <- Seq("flat", "tiered")) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_compact_amp_$mode").toString
-      val root = s"$dir/delta"
-      val parent = s"$root/geom=gprobe"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def snapshot(): Map[String, Long] = {
-        val p = new org.apache.hadoop.fs.Path(root)
-        if (!fs.exists(p)) Map.empty
-        else {
-          val it = fs.listFiles(p, true)
-          val m = scala.collection.mutable.Map[String, Long]()
-          while (it.hasNext) {
-            val s = it.next()
-            if (s.getPath.getName.endsWith(".parquet"))
-              m(s.getPath.toString) = s.getLen
-          }
-          m.toMap
-        }
-      }
-      val quarter = math.max(1, batches / 4)
-      val ampPerQuarter = Array.fill(4)(0L)
-      var ingest = 0L
-      for (b <- 0 until batches) {
-        val pre = snapshot()
-        spark.range(b.toLong * rowsPer, (b + 1).toLong * rowsPer).select(
-            (col("id") % 16).cast("int").as("cell"), col("id").as("vec_id"),
-            array((0 until 8).map(i =>
-              sin(col("id") * (i * 37 + 1)).cast("float")): _*).as("embedding"))
-          .coalesce(1)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$parent/batch=$b")
-        val postIngest = snapshot()
-        ingest += (postIngest -- pre.keySet).values.sum
-        if (mode == "flat") {
-          if (b > 0 && b % cadence == 0)
-            graft.streaming.StreamIngest.compactStreamIndex(spark, root)
-        } else {
-          graft.streaming.StreamIngest
-            .compactStreamIndexTiered(spark, root, fanout = cadence)
-        }
-        val postMaint = snapshot()
-        ampPerQuarter(math.min(3, b / quarter)) +=
-          (postMaint -- postIngest.keySet).values.sum
-      }
-      val rows = spark.read.parquet(root)
-        .agg(count(lit(1)), sum(col("vec_id"))).collect().head
-      val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(parent))
-        .count(_.getPath.getName.startsWith("batch="))
-      val amp = ampPerQuarter.sum
-      println(f"[scale] compaction-amp $mode%-6s batches=$batches cadence=$cadence | " +
-        f"maint ${amp / 1048576.0}%7.1f MB (${amp.toDouble / math.max(1L, ingest)}%4.1fx ingest) " +
-        f"per-quarter MB=${ampPerQuarter.map(q => f"${q / 1048576.0}%.1f").mkString("/")} | " +
-        f"dirs=$dirs rows=${rows.getLong(0)} sum=${rows.getLong(1)}")
-      rmrf(dir)
-    }
-  }
-
   /** Round-12 probe: the two new growing-domain flow ops (truncated
     * k-core peel + rank-oriented triangle census) over the ×1/×10/×30
     * replicated co-activity graph — the r9 cosession harness extended to
@@ -1301,20 +1174,6 @@ object ScaleProbe {
     }
     if (args.headOption.contains("graphusers")) {
       graphUsersProbe(spark, Seq(1, 10, 30))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("compaction")) {
-      val n = args.drop(1).headOption.filter(_.forall(_.isDigit))
-        .map(_.toInt).getOrElse(60)
-      compactionProbe(spark, n)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("compactamp")) {
-      val n = args.drop(1).headOption.filter(_.forall(_.isDigit))
-        .map(_.toInt).getOrElse(64)
-      compactionAmpProbe(spark, n)
       spark.stop()
       return
     }

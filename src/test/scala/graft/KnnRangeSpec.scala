@@ -124,47 +124,4 @@ class KnnRangeSpec extends SparkSpecBase {
     assert(pruned == ref,
       "pruning dropped or admitted rows on the corpus where it fires")
   }
-
-  test("delta rows are always admissible: a vector homed in a PRUNED cell is still found") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamIngest
-    import spark.implicits._
-    val dir = clusteredDir
-    val tmp = java.nio.file.Files.createTempDirectory("graft-range-delta").toString
-    // no delta directory → identical to the batch-only search
-    val base = rows(Similarity.knnRange(spark, dir))
-    assert(rows(Similarity.rangeSearchWithStreamedDelta(spark, dir,
-      s"$tmp/nodelta")) == base, "no-delta serving must equal knnRange")
-    // plant a delta vector IN query 0's band (cos = 0.5 ≥ tau) whose
-    // nearest cell belongs to cluster 1 — pruned for query 0, so a
-    // (wrong) radius-pruned delta would silently miss it; the
-    // always-admissible contract must find it
-    val cents = Similarity.loadOrTrainCentroids(spark, dir)
-    val v: Seq[Float] = (0 until 64).map { d =>
-      if (d == 0) 0.5f else if (d == 20) 0.866f else 0.0f
-    }
-    val frame = Similarity.rangeProbeFrame(spark, dir, quantized = false)
-    def cos(a: Seq[Double], b: Seq[Double]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      dot / math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
-    }
-    val vd = v.map(_.toDouble)
-    val home = cents.indices.maxBy(i => cos(vd, cents(i)))
-    assert(!frame.filter(_.getLong(1) == 0L).map(_.getInt(0)).contains(home),
-      "plant drifted into an admitted cell — the pin no longer exercises pruning")
-    val input = MemoryStream[StreamIngest.VecRow](spark)
-    val q = StreamIngest.ivfDeltaStream(input.toDS(), cents, s"$tmp/delta",
-        watermark = "720 hours")
-      .option("checkpointLocation", s"$tmp/cp").start()
-    input.addData(StreamIngest.VecRow(900001L,
-      new Timestamp(1722470400000L), v))
-    q.processAllAvailable(); q.stop()
-    val served = rows(Similarity.rangeSearchWithStreamedDelta(spark, dir,
-      s"$tmp/delta"))
-    assert(served.exists(t => t._1 == 0L && t._2 == 900001L),
-      s"delta vector homed in pruned cell $home was not served to query 0")
-    assert(base.toSet.subsetOf(served.toSet),
-      "delta serving lost batch band rows")
-  }
 }

@@ -11,7 +11,7 @@ class OperatorSuiteSpec extends SparkSpecBase {
   test("dedup_exact keeps every distinct text exactly once") {
     val out = Dedup.dedupExact(spark, sfDir)
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    assert(out.agg(sum("n_copies")).head.getLong(0) == docs.count())
+    assert(out.agg(sum("n_copies")).head().getLong(0) == docs.count())
   }
 
   test("minhash signature has one value per permutation and responds to similarity") {

@@ -41,7 +41,7 @@ class Round15OpsSpec extends SparkSpecBase {
     // budget-6 entry's minimum possible total (6 + 1).
     val rnd = new scala.util.Random(15)
     val ids = rnd.shuffle((1L to 4000L).toVector).take(120)
-    val pairs = ids.sliding(2).map { case Seq(x, y) => (x, y) }.toSeq
+    val pairs = ids.sliding(2).map(w => (w(0), w(1))).toSeq
     val (labels, rounds) = Components.minLabelWithRounds(edgeDf(pairs))
     assert(labelsOf(labels) == unionFind(pairs), "deep-chain labels diverge")
     // entry at round 3 + log-round star tail; the chain contracts 4:1, so

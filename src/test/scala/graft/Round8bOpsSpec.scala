@@ -68,7 +68,7 @@ class Round8bOpsSpec extends SparkSpecBase {
     // user 1 active days {0, 1, 3}; user 2 active day {1} only
     val ev = evDf(Seq(at(0, 1, 1), at(1, 1, 2), at(3, 1, 3), at(1, 2, 4),
       at(1, 1, 5))) // a second event on an active day must not double-count
-    val base = ev.select(min(floor(unix_micros(col("ts")) / 86400000000L)).cast("long")).head.getLong(0)
+    val base = ev.select(min(floor(unix_micros(col("ts")) / 86400000000L)).cast("long")).head().getLong(0)
     val got = Growth.eventsLifecycleOf(ev).collect().map(r =>
       (r.getAs[Long]("day") - base) ->
         ((r.getAs[Long]("n_active"), r.getAs[Long]("n_new"), r.getAs[Long]("n_retained"),

@@ -29,7 +29,7 @@ class Round9eOpsSpec extends SparkSpecBase {
       size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
         .cast("long").as("n_toks"),
       TextAnalysis.idHash(col("doc_id")).as("h"))
-    val total = t.agg(sum(col("n_toks"))).head.getLong(0)
+    val total = t.agg(sum(col("n_toks"))).head().getLong(0)
     val ssize = math.max(total / 16, 1L)
     val naive = t
       .withColumn("run", sum(col("n_toks")).over(Window.orderBy(col("h"), col("doc_id"))
@@ -47,7 +47,7 @@ class Round9eOpsSpec extends SparkSpecBase {
     val docs = randomCorpus(11, 600)
     val rows = TextAnalysis.corpusShardManifestOf(docs, targetShards = 16).collect()
     val total = docs.select(size(regexp_extract_all(col("text"),
-      lit("\\S+"), lit(0))).cast("long").as("n")).agg(sum("n")).head.getLong(0)
+      lit("\\S+"), lit(0))).cast("long").as("n")).agg(sum("n")).head().getLong(0)
     assert(rows.map(_.getAs[Long]("n_docs")).sum == 600L)
     assert(rows.map(_.getAs[Long]("tok_sum")).sum == total)
     // shards are contiguous hash ranges: ranges may touch only at an
@@ -63,7 +63,7 @@ class Round9eOpsSpec extends SparkSpecBase {
     // its token sum is < ssize + the largest doc (the straddle bound)
     val ssize = math.max(total / 16, 1L)
     val maxDoc = docs.select(size(regexp_extract_all(col("text"),
-      lit("\\S+"), lit(0))).cast("long").as("n")).agg(max("n")).head.getLong(0)
+      lit("\\S+"), lit(0))).cast("long").as("n")).agg(max("n")).head().getLong(0)
     sorted.foreach { r =>
       assert(r.getAs[Long]("tok_sum") < ssize + maxDoc,
         s"shard ${r.getAs[Long]("shard_id")} exceeds the straddle bound")
