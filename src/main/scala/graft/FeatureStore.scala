@@ -58,6 +58,40 @@ object FeatureStore {
     val helperRefs: Seq[FeatureRef] = inputRefs.filterNot(tableRefs.contains)
     val fetchRefs: Seq[FeatureRef] = (tableRefs ++ helperRefs).distinct
   }
+
+  /** A feature source's hash-partitioned rows ([[FeatureStore.layout]]),
+    * with the source listing and table definition they were built from. */
+  private final case class Layout(listing: String, table: FeatureTable, rows: DataFrame,
+                                  partitions: Int) {
+    /** Entities + event-ts + the requested typed features: the as-of side. */
+    def features(names: Seq[String]): DataFrame = {
+      requireDeclared(table, names)
+      rows.select((table.entities ++ (table.eventTsCol +: names)).map(col): _*)
+    }
+
+    /** `entity` hash-partitioned like these rows when its key columns have
+      * their types, so an as-of pass against them shuffles only the entity
+      * rows. Keys of another type are left as they are: the union coerces
+      * them, and the pass shuffles both sides. */
+    def align(entity: DataFrame): DataFrame = {
+      val keys = table.entities
+      val sameTypes = keys.forall(k =>
+        entity.schema.fields.find(_.name == k).exists(_.dataType == rows.schema(k).dataType))
+      if (sameTypes) entity.repartition(partitions, keys.map(col): _*) else entity
+    }
+  }
+
+  /** Unknown feature names fail fast with the reference's error shape
+    * instead of a Spark analysis error. */
+  private def requireDeclared(t: FeatureTable, featureNames: Seq[String]): Unit = {
+    val unknown = featureNames.filterNot(t.features.map(_.name).contains)
+    require(unknown.isEmpty,
+      s"Feature(s) ${unknown.mkString(", ")} not found in table ${t.name}")
+  }
+
+  /** The live layouts: at most one per source path, because the sessions of
+    * one Spark context share one cache manager. */
+  private val layouts = scala.collection.mutable.Map.empty[String, Layout]
 }
 
 final class FeatureStore(val registry: Registry, spark: SparkSession,
@@ -91,22 +125,52 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
   /** Load a table's source, projecting `leadCols` + the requested
     * features, CAST to their registry-declared value types (reference:
     * feature values are typed by the Value proto, not by whatever the
-    * source file happens to contain). Unknown feature names fail fast with
-    * the reference's error shape instead of a Spark analysis error. */
+    * source file happens to contain). */
   private def readTyped(t: FeatureTable, leadCols: Seq[String],
                         featureNames: Seq[String]): DataFrame = {
-    val declared = t.features.map(f => f.name -> f).toMap
-    val unknown = featureNames.filterNot(declared.contains)
-    require(unknown.isEmpty,
-      s"Feature(s) ${unknown.mkString(", ")} not found in table ${t.name}")
-    BatchSource.read(spark, sourceOf(t))
-      .select(leadCols.map(col) ++
-        featureNames.map(n => col(n).cast(declared(n).valueType.sparkType).as(n)): _*)
+    FeatureStore.requireDeclared(t, featureNames)
+    typed(t, BatchSource.read(spark, sourceOf(t)), leadCols, featureNames)
   }
 
-  /** Entities + event-ts + the requested typed features: the as-of side. */
-  private def loadFeatures(t: FeatureTable, featureNames: Seq[String]): DataFrame =
-    readTyped(t, t.entities :+ t.eventTsCol, featureNames)
+  private def typed(t: FeatureTable, raw: DataFrame, leadCols: Seq[String],
+                    featureNames: Seq[String]): DataFrame = {
+    val declared = t.features.map(f => f.name -> f).toMap
+    raw.select(leadCols.map(col) ++
+      featureNames.map(n => col(n).cast(declared(n).valueType.sparkType).as(n)): _*)
+  }
+
+  /** The as-of side of `t`: its source's entities, event time and every
+    * declared feature the source holds, typed, hash-partitioned by the
+    * entities into `spark.sql.shuffle.partitions` parts and persisted
+    * (memory, then disk). One layout is built per source version — the
+    * source listing (part names, sizes, mtimes) plus the table definition —
+    * and reused by every retrieval (of this session) until that version
+    * changes. The old layout is unpersisted before its successor is built:
+    * the cache manager matches plans by result, and a rewritten source
+    * reads as the same plan, so the successor would serve the old rows. A
+    * retrieval that partitions its entity rows the same way
+    * ([[FeatureStore.Layout.align]]) shuffles only those. */
+  private def layout(t: FeatureTable): FeatureStore.Layout = {
+    val path = sourceOf(t).path
+    val listing = graft.serving.StorePaths.tableFingerprint(spark, Seq(path))
+    FeatureStore.layouts.synchronized {
+      FeatureStore.layouts.get(path)
+        .filter(l => l.listing == listing && l.table == t && (l.rows.sparkSession eq spark))
+        .getOrElse {
+          FeatureStore.layouts.remove(path).foreach(_.rows.unpersist())
+          val raw = BatchSource.read(spark, sourceOf(t))
+          val held = t.features.map(_.name)
+            .filter(n => raw.columns.exists(_.equalsIgnoreCase(n)))
+          val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+          val rows = typed(t, raw, t.entities :+ t.eventTsCol, held)
+            .repartition(n, t.entities.map(col): _*)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val built = FeatureStore.Layout(listing, t, rows, n)
+          FeatureStore.layouts(path) = built
+          built
+        }
+    }
+  }
 
   /** Latest-wins order of a table's rows: event time, then created time. */
   private def latestOrder(t: FeatureTable): Seq[String] = t.eventTsCol +: t.createdTsCol.toSeq
@@ -133,8 +197,11 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
   }
 
   /** Point-in-time join every requested feature onto the entity dataframe.
-    * One as-of pass per distinct feature table (each a single shuffle;
-    * nearest = two chained passes).
+    * One as-of pass per distinct feature table (nearest = two chained
+    * passes), each against the table's persisted [[layout]]: the entity
+    * rows are hash-partitioned like it, so the first pass shuffles only
+    * them and a later pass on the same keys shuffles nothing. The layout is
+    * built by the first call that reads a source version.
     *
     * `asofMode` picks the join direction per call: Backward (default — the
     * reference's training-retrieval semantics), Forward (earliest feature
@@ -172,18 +239,20 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * carry the `__label_` prefix so a table may serve as BOTH feature and
     * label source (past purchases as feature, future purchase as label)
     * without colliding with the `table__<feature>`/`table__ts` names
-    * [[getHistoricalFeatures]] already emitted. Plan: one additional
-    * entity-keyed union-sort exchange on top of the feature joins — the
-    * label side never range-joins. */
+    * [[getHistoricalFeatures]] already emitted. Plan: one more union-sort
+    * pass on top of the feature joins, against the label table's
+    * [[layout]] — when its entities are the feature tables' it adds no
+    * exchange, and the label side never range-joins. */
   def getTrainingSet(entityDf: DataFrame, entityTsCol: String,
                      refs: Seq[FeatureRef], labelRef: FeatureRef,
                      labelWindowSec: Long): DataFrame = {
     val withFeats = getHistoricalFeatures(entityDf, entityTsCol, refs)
     val t = table(labelRef.table)
-    val labelSrc = loadFeatures(t, Seq(labelRef.feature))
+    val label = layout(t)
     val pfx = s"${labelRef.table}__label_"
     PointInTimeJoin.asofForward(
-        withFeats, labelSrc, keys = t.entities, entityTs = entityTsCol,
+        label.align(withFeats), label.features(Seq(labelRef.feature)),
+        keys = t.entities, entityTs = entityTsCol,
         featureTs = t.eventTsCol, featureCols = Seq(labelRef.feature),
         maxAgeSec = Some(labelWindowSec), outPrefix = pfx)
       .withColumn("label", when(col(s"${pfx}ts").isNotNull, 1L).otherwise(0L))
@@ -201,7 +270,8 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
           case FeatureStore.Forward => PointInTimeJoin.asofForward _
           case FeatureStore.Nearest => PointInTimeJoin.asofNearest _
         }
-        join(acc, loadFeatures(t, featureNames), t.entities, entityTsCol,
+        val l = layout(t)
+        join(l.align(acc), l.features(featureNames), t.entities, entityTsCol,
           t.eventTsCol, featureNames, t.maxAgeSec, s"${tname}__")
     }
 
@@ -326,12 +396,13 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
     * materialization over a range of windows at once): per (entities,
     * day), the registry-TYPED latest values as of day end, with their
     * source timestamp and age in days; days before a key's first event
-    * emit nothing, values carry forward. One as-of union-sort exchange
-    * regardless of the day-range width. */
+    * emit nothing, values carry forward. One as-of union-sort pass
+    * regardless of the day-range width, over the table's [[layout]], so
+    * the source rows are not shuffled again. */
   def getDailySnapshots(tableName: String, featureNames: Seq[String]): DataFrame = {
     val t = table(tableName)
     graft.operators.FeatureOps.ftDailySnapshotGeneric(
-      loadFeatures(t, featureNames), keys = t.entities, tsCol = t.eventTsCol,
+      layout(t).features(featureNames), keys = t.entities, tsCol = t.eventTsCol,
       valueCols = featureNames)
   }
 
@@ -455,13 +526,9 @@ final class FeatureStore(val registry: Registry, spark: SparkSession,
 
   /** A window bound as Spark's string → TIMESTAMP cast reads it (the cast
     * [[BatchSource.readRange]] applies), evaluated on the driver: no job. */
-  private def boundMicros(bound: String): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    Option(Cast(Literal(bound), org.apache.spark.sql.types.TimestampType,
-        Some(spark.conf.get("spark.sql.session.timeZone"))).eval())
-      .map(_.asInstanceOf[Long])
+  private def boundMicros(bound: String): Long =
+    graft.serving.MaterializationLog.boundMicros(spark, bound)
       .getOrElse(throw new IllegalArgumentException(s"not a timestamp: $bound"))
-  }
 
   /** Stream half of materialization (reference: ingestion into the online
     * store is decoupled from reading; stream DataSource in

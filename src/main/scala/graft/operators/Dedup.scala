@@ -458,7 +458,7 @@ object Dedup {
     graft.serving.StorePaths.cachedArtifact(spark,
       "graft.dedup.dir", "graft_dedup_clusters",
       graft.serving.StorePaths.corpusKey(dir) + "-",
-      graft.serving.StorePaths.tableFingerprint(spark, dir, Seq("documents")))(
+      graft.serving.StorePaths.tableFingerprint(spark, Seq(s"$dir/documents.parquet")))(
       dedupClustersOf(Tables.documents(spark, dir)))
 
   /** Warm the persisted label artifact (bench/offline hook). */
@@ -802,7 +802,7 @@ object Dedup {
     graft.serving.StorePaths.cachedArtifact(spark,
       "graft.truth.dir", "graft_truth",
       tag + "-" + graft.serving.StorePaths.corpusKey(dir) + "-",
-      graft.serving.StorePaths.tableFingerprint(spark, dir, Seq("documents")))(
+      graft.serving.StorePaths.tableFingerprint(spark, Seq(s"$dir/documents.parquet")))(
       derive)
 
   private[graft] def ngramTruth(spark: SparkSession, dir: String): DataFrame =

@@ -63,8 +63,8 @@ object GraphOps {
     val edges = graft.serving.StorePaths.cachedArtifact(spark,
       "graft.graph.dir", "graft_graph",
       graft.serving.StorePaths.corpusKey(dir) + "-",
-      graft.serving.StorePaths.tableFingerprint(spark, dir,
-        Seq("lineitem", "orders", "customer", "nation", "supplier")))(
+      graft.serving.StorePaths.tableFingerprint(spark,
+        Seq("lineitem", "orders", "customer", "nation", "supplier").map(t => s"$dir/$t.parquet")))(
       tradeGraphDerive(spark, dir)._2)
     (nodes, edges)
   }
@@ -963,7 +963,7 @@ object GraphOps {
     graft.serving.StorePaths.cachedArtifact(spark,
       "graft.graph.dir", "graft_graph",
       "cc-" + graft.serving.StorePaths.corpusKey(dir) + "-",
-      graft.serving.StorePaths.tableFingerprint(spark, dir, Seq("events")))(
+      graft.serving.StorePaths.tableFingerprint(spark, Seq(s"$dir/events.parquet")))(
       graphComponentsOf(Tables.events(spark, dir)))
 
   /** Warm the persisted co-activity label artifact (bench/offline hook). */
@@ -981,7 +981,7 @@ object GraphOps {
     graft.serving.StorePaths.cachedArtifact(spark,
       "graft.graph.dir", "graft_graph",
       "ccedges-" + graft.serving.StorePaths.corpusKey(dir) + "-",
-      graft.serving.StorePaths.tableFingerprint(spark, dir, Seq("events")))(
+      graft.serving.StorePaths.tableFingerprint(spark, Seq(s"$dir/events.parquet")))(
       userCoSessionGraphOf(Tables.events(spark, dir)))
 
   def graphComponentsOf(ev: DataFrame): DataFrame = {

@@ -1,29 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Join-shape utilities for cluster scale: bucketed co-located joins (no
-  * shuffle at read time) and manual key salting for skew that AQE cannot
-  * split (AQE's skew-join only rebalances sort-merge joins; a salted join
-  * also covers aggregation-feeding joins and deliberate pre-partitioning).
+/** Join-shape utilities for cluster scale: manual key salting for skew
+  * that AQE cannot split (AQE's skew-join only rebalances sort-merge joins;
+  * a salted join also covers aggregation-feeding joins and deliberate
+  * pre-partitioning).
   */
 object JoinUtils {
-
-  /** Write `df` as a bucketed+sorted table: co-bucketed tables with equal
-    * bucket counts join WITHOUT any exchange — the shuffle is paid once at
-    * write time and amortized over every subsequent join, the standard
-    * layout for fact tables that are joined repeatedly on the same key. */
-  def writeBucketed(df: DataFrame, warehousePath: String, table: String,
-                    key: String, buckets: Int): Unit = {
-    df.sparkSession.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .option("path", s"$warehousePath/$table")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-  }
 
   /** Inner equi-join with the left side salted over `saltFactor` sub-keys:
     * left rows scatter across salts, right rows replicate `saltFactor`×,

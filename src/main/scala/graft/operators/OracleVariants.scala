@@ -1393,7 +1393,7 @@ object OracleVariants {
     graft.serving.StorePaths.cachedArtifact(spark,
       "graft.knngraph.dir", "graft_knngraph",
       graft.serving.StorePaths.corpusKey(dir) + ".twin1-",
-      graft.serving.StorePaths.tableFingerprint(spark, dir, Seq("embeddings")))(
+      graft.serving.StorePaths.tableFingerprint(spark, Seq(s"$dir/embeddings.parquet")))(
       knnGraphOracleBuild(spark, dir))
       .orderBy(col("src_id"), col("rank"))
 

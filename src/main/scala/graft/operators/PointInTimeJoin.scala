@@ -16,10 +16,15 @@ import org.apache.spark.sql.functions._
   * job-killing shuffle. This implementation uses the union-sort algorithm
   * instead: tag feature and entity rows, union them, and run ONE window pass
   * partitioned by key ordered by time, carrying the last seen feature
-  * forward. Cost: a single hash shuffle of |E| + |F| rows and a per-key
+  * forward. Cost: at most one hash shuffle of |E| + |F| rows and a per-key
   * sort — linear, no explosion, and AQE can split skewed keys because the
   * window frame is running (each split is still correct within its key after
-  * AQE skew handling falls back to a single partition per key).
+  * AQE skew handling falls back to a single partition per key). When both
+  * sides already arrive hash-partitioned by the keys into the same number
+  * of partitions, the union keeps that partitioning and the window adds no
+  * exchange: FeatureStore keeps each feature source in such a persisted
+  * layout and repartitions only the entity rows, so a pass shuffles |E|
+  * rows, and a later pass on the same keys none.
   */
 object PointInTimeJoin {
 

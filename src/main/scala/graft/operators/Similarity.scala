@@ -240,7 +240,7 @@ object Similarity {
     graft.serving.StorePaths.corpusKey(dir)
 
   private def corpusFingerprint(spark: SparkSession, dir: String): String =
-    graft.serving.StorePaths.tableFingerprint(spark, dir, Seq("embeddings"))
+    graft.serving.StorePaths.tableFingerprint(spark, Seq(s"$dir/embeddings.parquet"))
 
   /** Train the coarse quantizer ONCE and persist it (cent_id, cvec) as
     * parquet — the 100 TB operating mode: centroids are a model artifact

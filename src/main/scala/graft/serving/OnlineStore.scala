@@ -167,19 +167,20 @@ private[graft] object StorePaths {
     "g" + dir.replaceAll("[^A-Za-z0-9._]", "_") + "." + h
   }
 
-  /** Content fingerprint of the named tables under `dir`: parquet part
-    * names/sizes/mtimes — one FS metadata listing per table, no data scan.
-    * 128-bit digest: a fingerprint exists to rule out silent staleness, so
-    * a 32-bit hash's collision budget would defeat its own purpose. */
-  def tableFingerprint(spark: SparkSession, dir: String, tables: Seq[String]): String = {
+  /** Content fingerprint of the table sources at `paths` (a directory or a
+    * single file each): part names/sizes/mtimes — one FS metadata listing
+    * per source, no data scan. 128-bit digest: a fingerprint exists to rule
+    * out silent staleness, so a 32-bit hash's collision budget would defeat
+    * its own purpose. */
+  def tableFingerprint(spark: SparkSession, paths: Seq[String]): String = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val sig = tables.map { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
+    val sig = paths.map { path =>
+      val p = new org.apache.hadoop.fs.Path(path)
       val f = p.getFileSystem(conf)
       try f.listStatus(p).sortBy(_.getPath.getName)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .mkString("|")
-      catch { case _: java.io.FileNotFoundException => s"$t:absent" }
+      catch { case _: java.io.FileNotFoundException => s"${p.getName.stripSuffix(".parquet")}:absent" }
     }.mkString("||")
     java.security.MessageDigest.getInstance("MD5")
       .digest(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -191,8 +192,17 @@ private[graft] object StorePaths {
   * ingestion jobs per table/source/store — here a tiny append-only parquet
   * log of completed windows). Enables incremental materialization: the
   * next run starts where the last finished instead of rescanning history —
-  * at 100 TB the difference between a daily delta and a full re-read. */
+  * at 100 TB the difference between a daily delta and a full re-read.
+  *
+  * The handle keeps the latest end per (project, table, store) together
+  * with the log files it holds for, as [[ParquetOnlineStore]] keeps its
+  * schema: while the log lists exactly those files, a lookup reads nothing;
+  * another handle's append adds a file, so the whole log is re-read. */
 final class MaterializationLog(path: String) {
+
+  /** (log part files, latest end per (project, table, store)) from this
+    * handle's last read of the log, extended by its own appends. */
+  @volatile private var known: Option[(Set[String], Map[(String, String, String), String])] = None
 
   def record(spark: SparkSession, project: String, table: String, storeName: String,
              startInclusive: String, endExclusive: String, rows: Long): Unit = {
@@ -202,6 +212,17 @@ final class MaterializationLog(path: String) {
       .toDF("project", "table_name", "store_name", "start_ts", "end_ts",
         "n_rows", "recorded_at")
       .write.mode("append").parquet(path)
+    // the one-row append adds one part file: the memo extends over it while
+    // it held for every other file, else the next lookup re-reads the log
+    val files = logFiles(spark)
+    def micros(bound: String) = MaterializationLog.boundMicros(spark, bound)
+    val key = (project, table, storeName)
+    known = known.collect {
+      case (held, ends) if held.subsetOf(files) && files.size == held.size + 1 =>
+        val later = micros(endExclusive).exists(end =>
+          ends.get(key).flatMap(micros).forall(_ <= end))
+        (files, if (later) ends.updated(key, endExclusive) else ends)
+    }
   }
 
   /** Exclusive end of the latest completed window for (project, table,
@@ -210,17 +231,48 @@ final class MaterializationLog(path: String) {
     * ' ' separator, and 'T' > ' ' would rank an earlier end last. */
   def lastEndExclusive(spark: SparkSession, project: String, table: String,
                        storeName: String): Option[String] = {
-    if (!StorePaths.exists(spark, path)) return None
+    val files = logFiles(spark)
+    val ends = known.collect { case (f, ends) if f == files => ends }.getOrElse {
+      val ends = if (files.isEmpty) Map.empty[(String, String, String), String] else latestEnds(spark)
+      known = Some((files, ends))
+      ends
+    }
+    ends.get((project, table, storeName))
+  }
+
+  /** The latest end per (project, table, store) over the whole log. */
+  private def latestEnds(spark: SparkSession): Map[(String, String, String), String] = {
     import org.apache.spark.sql.functions._
     spark.read.parquet(path)
-      .filter(col("project") === project && col("table_name") === table &&
-        col("store_name") === storeName)
+      .groupBy("project", "table_name", "store_name")
       .agg(max_by(col("end_ts"), col("end_ts").cast("timestamp")))
-      .collect().headOption.flatMap(r => Option(r.getString(0)))
+      .collect().collect { case r if !r.isNullAt(3) =>
+        (r.getString(0), r.getString(1), r.getString(2)) -> r.getString(3)
+      }.toMap
+  }
+
+  /** Names of the log's data files (file metadata, no data scan). */
+  private def logFiles(spark: SparkSession): Set[String] = {
+    val (f, p) = StorePaths.fs(spark, path)
+    try f.listStatus(p).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
   }
 
   def entries(spark: SparkSession): org.apache.spark.sql.DataFrame =
     spark.read.parquet(path)
+}
+
+private[graft] object MaterializationLog {
+  /** A window bound as Spark's string → TIMESTAMP cast reads it, in the
+    * session time zone and evaluated on the driver (no job); None when it
+    * does not parse. */
+  def boundMicros(spark: SparkSession, bound: String): Option[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    Option(Cast(Literal(bound), org.apache.spark.sql.types.TimestampType,
+        Some(spark.conf.get("spark.sql.session.timeZone"))).eval())
+      .map(_.asInstanceOf[Long])
+  }
 }
 
 /** Parquet-directory store: durable, idempotent upserts via read-merge-write.

@@ -3,9 +3,13 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.model._
+import graft.operators.PointInTimeJoin
 import graft.serving.ParquetOnlineStore
 
 class FeatureStoreSpec extends SparkSpecBase {
@@ -859,5 +863,129 @@ class FeatureStoreSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       dqStore.validateTable("dq", Seq.empty)
     }
+  }
+
+  /** Rows of `n` hourly-spread feature events over keys 1..4 from `t0`
+    * (epoch seconds); `shift` varies timestamps and values per version. */
+  private def events(n: Int, shift: Int): DataFrame =
+    spark.range(n).select((col("id") % 4 + 1).as("user_id"),
+      timestamp_seconds(lit(1704067200L) + (col("id") * 7919 + shift * 31) % 97 * 3600).as("ts"),
+      (col("id") * 1.5 + shift).as("value"))
+
+  /** Entity rows over keys 1..5 (5 has no features), 5 h apart. */
+  private lazy val layoutEntities: DataFrame =
+    spark.range(20).select((col("id") % 5 + 1).as("user_id"), (col("id") % 3).as("device_id"),
+      when(col("id") % 2 === 0, "eu").otherwise("us").as("region"),
+      timestamp_seconds(lit(1704067200L + 1800L) + col("id") * 5 * 3600).as("ets"),
+      col("id").as("row_id"))
+
+  /** The label window of the layout specs' training sets (two days). */
+  private val LayoutLabelWindow = 2L * 86400
+
+  /** getHistoricalFeatures (Backward / Forward / Nearest) and getTrainingSet
+    * through the layouts equal PointInTimeJoin over the raw typed sources,
+    * and each result reads a layout. Returns the layouts' cached plans. */
+  private def assertLayoutRetrieval(fs: FeatureStore, entity: DataFrame, refs: Seq[FeatureRef],
+                                    label: FeatureRef): Seq[LogicalPlan] = {
+    def raw(t: FeatureTable, names: Seq[String]) = spark.read.parquet(t.batchSourcePath.get)
+      .select(t.entities.map(col) ++ (col(t.eventTsCol) +: names.map(n =>
+        col(n).cast(t.features.find(_.name == n).get.valueType.sparkType))): _*)
+    def reference(mode: FeatureStore.AsofMode) =
+      refs.groupBy(_.table).toSeq.sortBy(_._1).foldLeft(entity) { case (acc, (name, rs)) =>
+        val t = fs.registry.getTable(name).get
+        val join = mode match {
+          case FeatureStore.Backward => PointInTimeJoin.asof _
+          case FeatureStore.Forward => PointInTimeJoin.asofForward _
+          case FeatureStore.Nearest => PointInTimeJoin.asofNearest _
+        }
+        join(acc, raw(t, rs.map(_.feature)), t.entities, "ets", t.eventTsCol,
+          rs.map(_.feature), t.maxAgeSec, s"${name}__")
+      }
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def layouts(df: DataFrame) = {
+      val cached = df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.cacheBuilder.logicalPlan
+      }
+      assert(cached.nonEmpty, "retrieval must read the feature layouts")
+      cached
+    }
+    val modes = Seq(FeatureStore.Backward, FeatureStore.Forward, FeatureStore.Nearest)
+    val plans = modes.flatMap { mode =>
+      val got = fs.getHistoricalFeatures(entity, "ets", refs, mode)
+      assert(rows(got) == rows(reference(mode)), s"$mode retrieval")
+      layouts(got)
+    }
+    val lt = fs.registry.getTable(label.table).get
+    val pfx = s"${label.table}__label_"
+    val wanted = PointInTimeJoin.asofForward(reference(FeatureStore.Backward),
+        raw(lt, Seq(label.feature)), lt.entities, "ets", lt.eventTsCol, Seq(label.feature),
+        Some(LayoutLabelWindow), pfx)
+      .withColumn("label", when(col(s"${pfx}ts").isNotNull, 1L).otherwise(0L))
+    val training = fs.getTrainingSet(entity, "ets", refs, label, LayoutLabelWindow)
+    assert(rows(training) == rows(wanted), "training set")
+    plans ++ layouts(training)
+  }
+
+  /** Whether the cache manager still holds the layout cached from `plan`
+    * (its lookup matches by result, and every version of a source reads as
+    * the same plan, so the match is checked by identity). */
+  private def cached(plan: LogicalPlan): Boolean = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    session.sharedState.cacheManager.lookupCachedData(session, plan)
+      .exists(_.cachedRepresentation.cacheBuilder.logicalPlan eq plan)
+  }
+
+  test("feature layouts follow their source across an appended part and an in-place rewrite") {
+    val dir = s"$workDir/layout-clicks"
+    events(24, 0).write.mode("overwrite").parquet(dir)
+    val r = new Registry
+    r.applyEntity(Entity("user_id", ValueKind.Int64K))
+    r.applyTable(FeatureTable("lclicks", Seq("user_id"), Seq(Feature("value", ValueKind.DoubleK)),
+      maxAgeSec = Some(2L * 86400), eventTsCol = "ts", batchSourcePath = Some(dir)))
+    val fs = new FeatureStore(r, spark)
+    val refs = Seq(FeatureRef("lclicks", "value"))
+    def backward = fs.getHistoricalFeatures(layoutEntities, "ets", refs).collect().toSet
+    val v1 = assertLayoutRetrieval(fs, layoutEntities, refs, refs.head).distinct
+    val before = backward
+    events(12, 1).write.mode("append").parquet(dir)
+    val v2 = assertLayoutRetrieval(fs, layoutEntities, refs, refs.head).distinct
+    val appended = backward
+    events(24, 2).write.mode("overwrite").parquet(dir)
+    val v3 = assertLayoutRetrieval(fs, layoutEntities, refs, refs.head).distinct
+    assert(Set(before, appended, backward).size == 3, "each version must move the answer")
+    // one live layout per source: each superseded one left the cache manager
+    assert(Seq(v1, v2, v3).map(_.size) == Seq(1, 1, 1))
+    assert(!cached(v1.head) && !cached(v2.head) && cached(v3.head))
+  }
+
+  test("feature layouts keep retrieval exact: composite and INT keys, two entities, TIMESTAMP_NTZ") {
+    val base = s"$workDir/layout-keys"
+    events(30, 3).withColumn("region", when(col("value") % 3 < 1.5, "eu").otherwise("us"))
+      .withColumnRenamed("value", "spend").write.mode("overwrite").parquet(s"$base/spend")
+    events(30, 4).withColumnRenamed("user_id", "device_id").withColumn("device_id",
+      col("device_id") % 3).withColumnRenamed("value", "battery")
+      .write.mode("overwrite").parquet(s"$base/device")
+    events(30, 5).withColumn("ts", col("ts").cast("timestamp_ntz"))
+      .withColumnRenamed("value", "dwell").write.mode("overwrite").parquet(s"$base/ntz")
+    val r = new Registry
+    r.applyEntity(Entity("user_id", ValueKind.Int64K))
+    r.applyEntity(Entity("region", ValueKind.StringK))
+    r.applyEntity(Entity("device_id", ValueKind.Int64K))
+    r.applyTable(FeatureTable("lspend", Seq("user_id", "region"),
+      Seq(Feature("spend", ValueKind.DoubleK)), eventTsCol = "ts",
+      batchSourcePath = Some(s"$base/spend")))
+    r.applyTable(FeatureTable("ldevice", Seq("device_id"),
+      Seq(Feature("battery", ValueKind.DoubleK)), maxAgeSec = Some(86400L), eventTsCol = "ts",
+      batchSourcePath = Some(s"$base/device")))
+    r.applyTable(FeatureTable("lntz", Seq("user_id"),
+      Seq(Feature("dwell", ValueKind.DoubleK)), maxAgeSec = Some(3L * 86400), eventTsCol = "ts",
+      batchSourcePath = Some(s"$base/ntz")))
+    val fs = new FeatureStore(r, spark)
+    val dwell = FeatureRef("lntz", "dwell")
+    assertLayoutRetrieval(fs, layoutEntities,
+      Seq(FeatureRef("lspend", "spend"), FeatureRef("ldevice", "battery"), dwell), dwell)
+    // an INT entity key against the INT64 source key
+    assertLayoutRetrieval(fs, layoutEntities.withColumn("user_id", col("user_id").cast("int")),
+      Seq(dwell, FeatureRef("lspend", "spend")), FeatureRef("lspend", "spend"))
   }
 }

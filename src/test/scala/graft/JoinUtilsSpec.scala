@@ -1,44 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.JoinUtils
 
 class JoinUtilsSpec extends SparkSpecBase {
   import spark.implicits._
-
-  test("co-bucketed tables join with no shuffle exchange") {
-    val wh = Files.createTempDirectory("graft-bucketed").toString
-    val orders = graft.sources.Tables.orders(spark, sfDir)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val lineitem = graft.sources.Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_quantity")
-    JoinUtils.writeBucketed(orders, wh, "orders_b", "o_orderkey", 8)
-    JoinUtils.writeBucketed(lineitem, wh, "lineitem_b", "l_orderkey", 8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val joined = spark.table("lineitem_b")
-        .join(spark.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
-      val plan = joined.queryExecution.executedPlan
-      assert(plan.collect { case j: SortMergeJoinExec => j }.nonEmpty)
-      val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
-      assert(shuffles.isEmpty,
-        s"bucketed join must not shuffle, found: ${shuffles.map(_.nodeName)}")
-      // and it computes the right thing
-      val plain = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
-      assert(joined.count() == plain.count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sql("DROP TABLE IF EXISTS orders_b")
-      spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    }
-  }
 
   test("salted join is result-identical to the plain join on skewed keys") {
     // 90% of left rows share one hot key

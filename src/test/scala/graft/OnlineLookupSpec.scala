@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.model._
-import graft.serving.{OnlineStore, ParquetOnlineStore}
+import graft.serving.{MaterializationLog, OnlineStore, ParquetOnlineStore}
 
 /** Online lookup edge cases and the per-read job budget of
   * getOnlineFeatures against a materialized ParquetOnlineStore. */
@@ -75,8 +75,8 @@ class OnlineLookupSpec extends SparkSpecBase {
   }
 
   /** Jobs of one materializeIncremental tick into an existing store and
-    * log. */
-  private val JobsPerTick = 7
+    * log, on the handle that recorded the log's last window. */
+  private val JobsPerTick = 4
 
   private def served(df: DataFrame): Seq[(Option[Long], Option[Double], String)] =
     df.collect().toSeq.map(rw => (Option(rw.getAs[java.lang.Long]("user_id")).map(_.toLong),
@@ -176,7 +176,7 @@ class OnlineLookupSpec extends SparkSpecBase {
 
   test("an incremental tick logs its window's row count from the upsert's own scan") {
     val online = new ParquetOnlineStore(s"$workDir/online-incremental")
-    val log = new graft.serving.MaterializationLog(s"$workDir/incremental-log")
+    val log = new MaterializationLog(s"$workDir/incremental-log")
     def tick(upTo: String): Unit =
       assert(fs.materializeIncremental("activity", online, log, upTo,
         origin = "2024-01-01 00:00:00").isDefined)
@@ -184,12 +184,31 @@ class OnlineLookupSpec extends SparkSpecBase {
     val (jobs, _) = jobsAndShuffleStages(tick("2024-02-01 00:00:00"))
     tick("2024-03-01 00:00:00") // an empty window
     // no count of its own: a separate count() of the window ran 2 more
-    // jobs (its aggregate's map stage and result under AQE)
+    // jobs (its aggregate's map stage and result under AQE); no log read:
+    // the handle remembers the end it recorded, where a re-read of the
+    // log ran 3 more
     assert(jobs <= JobsPerTick, s"one incremental tick ran $jobs jobs")
     val logged = log.entries(spark).collect()
       .map(rw => rw.getAs[String]("end_ts") -> rw.getAs[Long]("n_rows")).toMap
     assert(logged == Map("2024-01-03 00:00:00" -> 2L, "2024-02-01 00:00:00" -> 2L,
       "2024-03-01 00:00:00" -> 0L))
+  }
+
+  test("a log handle sees the window another handle appended") {
+    val online = new ParquetOnlineStore(s"$workDir/online-two-logs")
+    val path = s"$workDir/two-handle-log"
+    val (a, b) = (new MaterializationLog(path), new MaterializationLog(path))
+    def tick(log: MaterializationLog, upTo: String) =
+      fs.materializeIncremental("activity", online, log, upTo, origin = "2024-01-01 00:00:00")
+    assert(tick(a, "2024-01-03 00:00:00").isDefined)
+    assert(tick(b, "2024-01-04 00:00:00") == Some(("2024-01-03 00:00:00", "2024-01-04 00:00:00")))
+    // a remembers its own window, but the log now lists b's file too
+    assert(a.lastEndExclusive(spark, fs.project, "activity", "default") ==
+      Some("2024-01-04 00:00:00"))
+    assert(tick(a, "2024-01-04 00:00:00").isEmpty)
+    assert(tick(a, "2024-01-05 00:00:00") == Some(("2024-01-04 00:00:00", "2024-01-05 00:00:00")))
+    assert(b.lastEndExclusive(spark, fs.project, "activity", "default") ==
+      Some("2024-01-05 00:00:00"))
   }
 
   test("a composite entity key serves online") {

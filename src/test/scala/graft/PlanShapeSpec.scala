@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.optimizer.{BuildRight, BuildSide}
 import org.apache.spark.sql.catalyst.plans.{LeftOuter, LeftSemi}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
@@ -424,7 +425,9 @@ class PlanShapeSpec extends SparkSpecBase {
         ent, fts, Seq("user_id"), "entity_ts", "ts", Seq("value"))
       assert(dataShuffles(back) == 1,
         s"backward as-of must shuffle once, got ${dataShuffles(back)}")
-      // the facade: one pass per feature table, one more for the label
+      // the facade: one pass per feature table, one more for the label,
+      // each against the table's persisted layout (hash-partitioned by
+      // user_id), so only the entity frame is shuffled, once
       val workDir = Files.createTempDirectory("graft-plan-pit").toString
       val r = new Registry
       r.applyEntity(Entity("user_id", ValueKind.Int64K))
@@ -436,13 +439,24 @@ class PlanShapeSpec extends SparkSpecBase {
       }
       val fs = new FeatureStore(r, spark)
       val refs = Seq(FeatureRef("clicks", "value"), FeatureRef("spend", "value"))
+      def assertEntityShuffledOnly(df: org.apache.spark.sql.DataFrame, layouts: Int): Unit = {
+        val plan = df.queryExecution.executedPlan
+        val shuffles = plan.collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+        }
+        assert(shuffles.size == 1, s"only the entity frame shuffles, got ${shuffles.size}")
+        assert(shuffles.head.child.collect { case s: LocalTableScanExec => s }.nonEmpty &&
+          shuffles.head.child.collect { case s: InMemoryTableScanExec => s }.isEmpty,
+          s"the one exchange must sit over the entity frame:\n$plan")
+        assert(plan.collect { case s: InMemoryTableScanExec => s }.size == layouts,
+          s"each pass reads its table's layout:\n$plan")
+      }
       val hist = fs.getHistoricalFeatures(ent, "entity_ts", refs)
-      assert(dataShuffles(hist) == 2,
-        s"two-table retrieval is two as-of passes, got ${dataShuffles(hist)}")
+      hist.collect() // a warm call: the layouts are built
+      assertEntityShuffledOnly(fs.getHistoricalFeatures(ent, "entity_ts", refs), 2)
       val train = fs.getTrainingSet(ent, "entity_ts", refs,
         FeatureRef("spend", "value"), labelWindowSec = 86400L)
-      assert(dataShuffles(train) == 3,
-        s"training set adds one forward label pass, got ${dataShuffles(train)}")
+      assertEntityShuffledOnly(train, 3)
     }
   }
 
